@@ -2,9 +2,13 @@
 
 Run a Spark DataFrame and a DuckDB oracle SQL over the same parquet and
 compare row count, column names, and values order-insensitively (columns
-sorted by name, rows sorted after cell normalization). Used by the pytest
-gate (tests/conftest.py) and the full-inventory artifact tool
-(tools/local_correctness.py).
+sorted by name, rows sorted after cell normalization). This module is the
+one place that opens an oracle (:func:`oracle_connection`) and decides
+pass or fail (:func:`compare_query` builds the record, :func:`failures`
+reads the verdict off it). Callers: the pytest gate
+(``tests/conftest.py``), the full-inventory artifact tool
+(``tools/local_correctness.py``) and the benchmark's cold-pass output
+check (``perfbench/run.py``).
 
 Round-3 lesson baked in: the oracle side is fetched via Arrow, not
 ``fetchall()``. DuckDB returns HUGEINT (arrow decimal128(38,0)) for
@@ -19,7 +23,12 @@ divergences go red here before they go red on the driver.
 from __future__ import annotations
 
 import math
+import os
+from contextlib import contextmanager
 from decimal import Decimal
+from itertools import zip_longest
+
+from datafusion_ballista_spark.sources.registry import TABLES
 
 
 def _canon_decimal(v: Decimal) -> str:
@@ -95,10 +104,8 @@ def hugeint_columns(arrow_table) -> list[str]:
     """Names of columns carrying DuckDB's HUGEINT signature
     (decimal128(38,0)) — almost always an un-cast SUM(int)/factorial()
     in the oracle SQL that must be wrapped in CAST(... AS BIGINT)."""
-    try:
-        import pyarrow as pa
-    except ImportError:  # pragma: no cover
-        return []
+    import pyarrow as pa
+
     out = []
     for field in arrow_table.schema:
         t = field.type
@@ -174,6 +181,31 @@ def driver_canon_check(cols, rows) -> None:
     pdf.sort_values(by=list(cols))
 
 
+@contextmanager
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with a view over each fixture table present
+    under ``sf_dir``, closed on exit.
+
+    Memory guard (round-8 VERDICT Next #3): a runaway oracle plan (the
+    pre-fix ppjoin candidate explosion built a 93 GB single-thread hash
+    table and left both engines 30-45% slow for hours) must fail fast or
+    spill bounded instead of evicting the machine's page cache mid-gate.
+    ``SPARK_GRAFT_ORACLE_MEM`` sets the ceiling (default 16GB)."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM", "16GB")
+        con.execute(f"SET memory_limit = '{mem}'")
+        for t in TABLES:
+            p = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(p):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        yield con
+    finally:
+        con.close()
+
+
 def fetch_oracle(rel):
     """(columns, row-tuples, hugeint column names) from a DuckDB relation,
     fetched via Arrow so type-level divergence survives into the compare."""
@@ -185,8 +217,21 @@ def fetch_oracle(rel):
     return cols, rows, hugeint_columns(tbl)
 
 
+def _first_mismatch(mode: str, sn: list, on: list) -> dict | None:
+    """The first differing row of two normalized row lists, or None."""
+    for i, (a, b) in enumerate(zip_longest(sn, on)):
+        if a != b:
+            return {"mode": mode, "row": i,
+                    "spark": repr(a)[:300], "oracle": repr(b)[:300]}
+    return None
+
+
 def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
-    """Run both sides; return a driver-shaped CORRECTNESS record."""
+    """Run both sides; return a CORRECTNESS record.
+
+    Calls ``spark_df.collect()`` exactly once and triggers no other
+    Spark action. Never raises: an error is recorded in ``err``. Read
+    the verdict with :func:`failures`."""
     rec = {
         "rows_match": None,
         "schema_match": None,
@@ -197,16 +242,13 @@ def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
     }
     try:
         s_cols = list(spark_df.columns)
+        # output-type hazards the CORRECTNESS hash and canonicalizer
+        # trip on even when values match (reasons spelled out in failures())
         dec_cols = decimal_output_columns(spark_df)
         if dec_cols:
-            # Treated as a failure, not a warning: the driver's hash is
-            # known to diverge on decimal representation even when values
-            # match (round-6 q12/q20/q37).
             rec["decimal_output"] = dec_cols
         cplx_cols = complex_output_columns(spark_df)
         if cplx_cols:
-            # Same treatment: the driver's pandas canonicalizer cannot
-            # sort complex cells (round-10 emb_random_projection).
             rec["complex_output"] = cplx_cols
         s_rows = [tuple(r) for r in spark_df.collect()]
         rec["spark_rows"] = len(s_rows)
@@ -219,10 +261,12 @@ def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
             return rec
         o_cols, o_rows, hugeints = fetch_oracle(oracle_con.sql(oracle_sql))
         if hugeints:
-            rec["warn_hugeint"] = hugeints
+            rec["hugeint"] = hugeints
         rec["oracle_rows"] = len(o_rows)
         rec["rows_match"] = len(s_rows) == len(o_rows)
         rec["schema_match"] = sorted(s_cols) == sorted(o_cols)
+        if not rec["schema_match"]:
+            rec["columns"] = {"spark": sorted(s_cols), "oracle": sorted(o_cols)}
         _, sn = normalize(s_cols, s_rows)
         _, on = normalize(o_cols, o_rows)
         rec["hash_match"] = (
@@ -240,14 +284,75 @@ def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
         _, sn_o = normalize(s_cols, s_rows, sort_rows=False)
         _, on_o = normalize(o_cols, o_rows, sort_rows=False)
         rec["ordered_match"] = bool(rec["hash_match"]) and sn_o == on_o
-        # Third recorded mode (never gates here; the pytest gate enforces
-        # it with a documented whitelist): float cells compared BIT-EXACT.
-        # False while hash_match is True means the 9dp/12sg normalization
-        # is load-bearing — the cross-engine float divergence class the
-        # driver's own hash might not absorb.
+        # Third mode, gated by failures() outside a named whitelist:
+        # float cells compared BIT-EXACT. False while hash_match is True
+        # means the 9dp/12sg normalization is load-bearing — the
+        # cross-engine float divergence class the CORRECTNESS hash
+        # might not absorb.
         _, sn_s = normalize(s_cols, s_rows, strict_floats=True)
         _, on_s = normalize(o_cols, o_rows, strict_floats=True)
         rec["float_strict_match"] = bool(rec["hash_match"]) and sn_s == on_s
+        if rec["schema_match"]:
+            rec["first_mismatch"] = _first_mismatch(
+                "normalized", sn, on
+            ) or _first_mismatch("float_strict", sn_s, on_s)
     except Exception as ex:  # recorded, not raised: the artifact shows it
         rec["err"] = f"{type(ex).__name__}: {ex}"[:500]
     return rec
+
+
+def failures(rec: dict, float_ulp_whitelisted: bool = False) -> list[str]:
+    """Every reason a :func:`compare_query` record fails the gate; empty
+    means pass. ``float_ulp_whitelisted`` lets a query whose floats match
+    only after the 9dp/12sg normalization pass (a named-whitelist entry
+    of the calling gate)."""
+    out = []
+    if rec.get("err"):
+        out.append(f"error: {rec['err']}")
+    if rec.get("decimal_output"):
+        out.append(
+            f"bare DecimalType output column(s) {rec['decimal_output']}: the "
+            "CORRECTNESS hash diverges on decimal representation even when "
+            "values match (round-6 q12/q20/q37) — pin to DOUBLE/BIGINT"
+        )
+    if rec.get("complex_output"):
+        out.append(
+            f"complex-typed output column(s) {rec['complex_output']}: the "
+            "CORRECTNESS pandas canonicalizer cannot sort array/map/struct "
+            "cells (round-10 emb_random_projection) — flatten to scalars"
+        )
+    if rec.get("hugeint"):
+        out.append(
+            f"oracle emits HUGEINT (decimal128(38,0)) column(s) "
+            f"{rec['hugeint']}: wrap the SUM(int)/factorial() in "
+            "CAST(... AS BIGINT)"
+        )
+    if rec.get("oracle_rows") is None:
+        # failed before the oracle ran, or a rows-only record
+        if not out and not rec.get("rows_match"):
+            out.append("query did not run")
+        return out
+    if rec.get("columns"):
+        out.append(
+            f"column mismatch: spark={rec['columns']['spark']} "
+            f"oracle={rec['columns']['oracle']}"
+        )
+    if not rec.get("rows_match"):
+        out.append(
+            f"row count mismatch: spark={rec['spark_rows']} "
+            f"oracle={rec['oracle_rows']}"
+        )
+    m = rec.get("first_mismatch")
+    if m and (m["mode"] == "normalized" or not float_ulp_whitelisted):
+        what = (
+            "value mismatch" if m["mode"] == "normalized"
+            else "FLOAT-STRICT mismatch (values agree only after 9dp/12sg "
+            "normalization — round on both sides in the query itself)"
+        )
+        out.append(
+            f"{what} at sorted row {m['row']}:\n spark ={m['spark']}\n "
+            f"oracle={m['oracle']}"
+        )
+    if not out and not rec.get("hash_match"):
+        out.append("hash mismatch")
+    return out

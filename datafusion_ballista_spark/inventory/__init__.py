@@ -29,6 +29,70 @@ class QuerySpec:
     oracle: str | None  # DuckDB-runnable ANSI SQL, or None for rows-only
 
 
+# The CORRECTNESS gate checks only the first 50 registry entries:
+# WINDOW, then the pool order below. Rotation rule: ops whose code or
+# oracle changed lead (new code is where hash blind spots live), then
+# the families with the oldest CORRECTNESS evidence; past windows
+# live in CORRECTNESS_r*.json. This is the round-14 window: its touched
+# ops, the two queries the local AQE parallelismFirst flip moved most,
+# then the sketches, events, multimodal and streaming families and the
+# headline h2o grouper. Next sweep: the pool head (the r12/r13-checked
+# text and vector greens), then h2o g3 onward, functions_cov,
+# udf_surface and sql_surface.
+WINDOW = [
+    "text_winnow_fingerprint",
+    "train_bpe_encode",
+    "dedup_minhash_lsh",
+    "dedup_incremental",
+    "ann_pq_adc",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_refine",
+    "emb_pq_encode",
+    "emb_kmeans_lloyd",
+    "train_contamination_ngram",
+    "ev_range_join_bucketed",
+    "sketch_quantile_bottomk",
+    "sketch_range_partition_cuts",
+    "sketch_kll_quantiles",
+    "sketch_theta_set_ops",
+    "sketch_ams_f2",
+    "sketch_moments_power_sums",
+    "sketch_hll_distinct",
+    "sketch_hll_merge_hourly",
+    "sketch_hll_distinct_p12",
+    "sketch_countmin_topk",
+    "ev_hourly_rollup",
+    "ev_funnel_steps",
+    "ev_gap_fill",
+    "ev_window_bucketing",
+    "ev_sessionize",
+    "ev_type_transitions",
+    "ev_daily_retention",
+    "ev_decayed_topk",
+    "sketch_hll_sliding_3h",
+    "ev_anomaly_mad",
+    "multimodal_audio_vad",
+    "multimodal_phash_neardup",
+    "multimodal_featurize",
+    "multimodal_wav_roundtrip",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "multimodal_audio_stats",
+    "multimodal_video_keyframes",
+    "stream_windowed_counts",
+    "stream_sliding_counts",
+    "stream_session_windows",
+    "stream_stream_join",
+    "stream_dedup_exact",
+    "stream_dedup_watermarked",
+    "stream_stateful_counter",
+    "stream_foreach_batch_sink",
+    "stream_static_enrich",
+    "stream_checkpoint_resume",
+    "h2o_g2_sum_by_id1_id2",
+]
+
+
 def all_queries() -> dict[str, QuerySpec]:
     from datafusion_ballista_spark.inventory import (
         events,
@@ -68,340 +132,6 @@ def all_queries() -> dict[str, QuerySpec]:
         udf_surface,
         windows,
     )
-
-    # Registration order drives the driver's CORRECTNESS window (first 50
-    # entries). Rounds 1-2 proved tpch+relational+windows; round 3 proved
-    # functions_cov/h2o/udf/sql_surface; round 4 proved the 11 HUGEINT
-    # re-fixes + pipeline_text/vector + io_ops + events; round 5 proved
-    # the first 43 TPC-DS shape analogues + all 7 streaming rows (50/50
-    # green each round).
-    # Round-10 window (VERDICT r9 Next #1, exactly as committed in
-    # round 9): the 11 round-9-NEW operators first (the
-    # newest-code-first principle — new code is where driver blind
-    # spots live, round 6 proved it), then the last 21 shape analogues
-    # (q79-q99), then the first 18 regression sentinels (the OLDEST
-    # driver greens: the verbatim TPC-H tier, r2 evidence now 8 rounds
-    # stale). After this window every registry entry has >=1 driver
-    # CORRECTNESS row.
-    _r10_sentinels = [
-        "tpch_q1",
-        "tpch_q2_min_cost_part",
-        "tpch_q3",
-        "tpch_q4_exists",
-        "tpch_q5",
-        "tpch_q6",
-        "tpch_q7_volume_shipping",
-        "tpch_q8_market_share",
-        "tpch_q9_profit",
-        "tpch_q10_returned",
-        "tpch_q11_important_parts",
-        "tpch_q12_priority_shipping",
-        "tpch_q13_custdist",
-        "tpch_q14_promo",
-        "tpch_q15_top_supplier",
-        "tpch_q16_part_supplier",
-        "tpch_q17_small_qty",
-        "tpch_q18_large_volume",
-        "tpch_q19_disjunctive",
-        "tpch_q20_semi_chain",
-        "tpch_q22_global_sales",
-        "rel_theta_join",
-        "rel_full_outer",
-        "rel_distinct_on",
-        "rel_null_ordering",
-        "rel_offset",
-        "rel_not_in_nulls",
-        "rel_values_inmem",
-        "rel_generate_series",
-        "win_ignore_nulls",
-        "win_first_last_nth",
-        "rel_empty_relation",
-        "rel_grouping_sets",
-        "rel_except_all",
-    ]
-    # newest first within the batch: the late-round-9 additions lead
-    _r9_new_ops = [
-        "sketch_hll_distinct",
-        "sketch_countmin_topk",
-        "text_bm25_topk",
-        "train_contamination_bloom",
-        "ann_range_search",
-        "emb_kmeanspp_init",
-        "dedup_lines_keep_first",
-        "quality_kneser_ney_bigram",
-        "quality_ccnet_bucket",
-        "emb_random_projection",
-        "ann_mmr_rerank",
-    ]
-    # (r10 window, kept for the rotation history: _r9_new_ops +
-    # tpcds_q79..q99 shapes + _r10_sentinels[:18].)
-    del _r9_new_ops
-    # Round-11 queue committed now so the next rotation is again a
-    # one-line window swap: the round-10-NEW operators first (same
-    # newest-code-first rule), then the regression-sentinel
-    # continuation — the 16 remaining r10 sentinels (late TPC-H +
-    # earliest relational/window rows, r2 evidence), then the
-    # round-3-era greens in registration order (the scalar-function
-    # surface, the UDF/UDTF surface, the SQL-surface trio, the first
-    # h2o groupby/join rows), all 7+ rounds stale by r11.
-    _r10_new_ops = [
-        # final round-10 batch: ANN recall harness, sliding streaming
-        # windows, no-split BFD packing, Hampel anomaly flags,
-        # vocabulary coverage curve
-        "ann_recall_eval",
-        "stream_sliding_counts",
-        "train_pack_bestfit",
-        "ev_anomaly_mad",
-        "text_vocab_coverage",
-        # late-round-10 batch (newest first): sliding sketch windows,
-        # corpus-health fit, fuzzy-dedup verify tier, multiprobe ANN,
-        # MRL truncation, decayed trends, shuffle/sample/moments/F2
-        "sketch_hll_sliding_3h",
-        "text_zipf_fit",
-        "dedup_edit_distance_verify",
-        "ann_lsh_multiprobe",
-        "emb_matryoshka_trunc",
-        "ev_decayed_topk",
-        "train_epoch_shuffle_shards",
-        "train_priority_sample_sum",
-        "sketch_moments_power_sums",
-        "sketch_ams_f2",
-        "sketch_theta_set_ops",
-        "sketch_hll_merge_hourly",
-        "quality_token_entropy",
-        "train_pack_concat_chunks",
-        "sketch_kll_quantiles",
-        "sketch_range_partition_cuts",
-        "sketch_quantile_bottomk",
-        "sketch_hll_distinct_p12",
-    ]
-    _r11_sentinels = _r10_sentinels[18:] + [
-        "fn_string",
-        "fn_regex",
-        "fn_math",
-        "fn_datetime",
-        "fn_conditional",
-        "fn_array",
-        "fn_lambda",
-        "fn_map_struct",
-        "fn_hash_encoding",
-        "fn_cast_try",
-        "fn_json",
-        "fn_agg_stats",
-        "fn_agg_collect",
-        "fn_agg_minmax_by",
-        "fn_agg_filter",
-        "fn_agg_regr",
-        "fn_agg_approx",
-        "udf_sql_register",
-        "pandas_udf_scalar",
-        "pandas_udf_grouped_agg",
-        "apply_in_pandas_zscore",
-        "udtf_lateral_tokens",
-        "map_in_arrow_stats",
-        "cogroup_asof_join",
-        "sql_parameterized",
-        "sql_pivot",
-        "sql_unpivot",
-        "h2o_g1_sum_by_id1",
-        "h2o_g2_sum_by_id1_id2",
-        "h2o_g3_sum_avg_by_id3",
-        "h2o_j1_small_inner",
-        "h2o_j2_medium_inner",
-        "h2o_w_partition_sums",
-    ]
-    # (r11 window, kept for the rotation history: _r10_new_ops +
-    # emb_random_projection + _r11_sentinels[:26] — all 50 driver-green
-    # or documented-no_oracle in CORRECTNESS_r11.json.)
-    del _r10_new_ops
-    # Round-12 window (VERDICT r11 Next #1+#6, exactly as queued in
-    # round 11 plus the round-12-touched head): the 3 ops whose code or
-    # oracle changed THIS round lead (newest-code-first —
-    # train_pack_bestfit's new WITH RECURSIVE oracle must earn a driver
-    # hash-green, and the two quality-filter perf rewrites must re-prove
-    # bit-identical output), then the 2 round-11-new SQL-surface ops
-    # (the only rows never driver-checked), then the 23 remaining
-    # round-3-era sentinels (UDF/SQL surface + h2o, r3 evidence 9 rounds
-    # stale), then 22 round-4-era pipeline_text greens in registration
-    # order (r4 evidence, the oldest in the registry).
-    _r12_head = [
-        "train_pack_bestfit",
-        "quality_repetition_gopher",
-        "quality_unigram_logprob",
-        "sql_show_functions",
-        "sql_describe_table",
-    ]
-    _r4_era_text = [
-        "text_winnow_fingerprint",
-        "quality_lexical_ttr",
-        "dedup_prefix_filter_join",
-        "dedup_cdc_chunks",
-        "quality_fasttext_hash",
-        "text_collocation_pmi",
-        "quality_bigram_logprob",
-        "dedup_exact",
-        "quality_c4_filters",
-        "dedup_substring_exact",
-        "dedup_containment",
-        "dedup_keep_best",
-        "text_ngram_topk",
-        "pii_scrub",
-        "dedup_incremental",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "dedup_clusters",
-        "dedup_simhash",
-        "text_stats",
-        "tfidf_topk_terms",
-        "lang_id",
-    ]
-    # (r12 window, kept for the rotation history: _r12_head +
-    # _r11_sentinels[26:] + _r4_era_text — all 50 driver-green in
-    # CORRECTNESS_r12.json.)
-    del _r12_head, _r11_sentinels, _r4_era_text
-    # Round-13 window: the ops whose code or oracle changed this round
-    # lead (newest-code-first — sketch_kll_quantiles' restructured
-    # deterministic output + new DuckDB oracle must earn the driver
-    # hash-green that closes the registry's last rows-only row;
-    # ev_range_join_bucketed is the round's one perf-touched op and
-    # must re-prove bit-identical output), then the natural pool order
-    # continues the round-4-era sweep exactly as queued in round 12
-    # (pipeline_text tail from quality_token_entropy, then
-    # pipeline_vector) — no explicit queue needed beyond the head.
-    _r13_head = ["sketch_kll_quantiles", "ev_range_join_bucketed"]
-    _r13_continuation = [
-        # pipeline_text tail (r4-era evidence) in registration order
-        "quality_token_entropy",
-        "dedup_lines_keep_first",
-        "quality_kneser_ney_bigram",
-        "quality_ccnet_bucket",
-        "text_bm25_topk",
-        "quality_score",
-        "doc_fingerprint",
-        "curation_pipeline",
-        "dedup_edit_distance_verify",
-        "text_zipf_fit",
-        "text_vocab_coverage",
-        # pipeline_vector family (r4/r5 evidence) in registration order
-        "emb_covariance",
-        "emb_pca_project",
-        "ann_ivfpq_topk",
-        "ann_ivfpq_refine",
-        "ann_bruteforce_topk",
-        "emb_kmeans_lloyd",
-        "emb_pq_encode",
-        "ann_pq_adc",
-        "dedup_semdedup",
-        "ann_lsh_bucketed",
-        "ann_ivf_topk",
-        "emb_knn_classify",
-        "emb_neardup_cosine",
-        "emb_neardup_lsh",
-        "emb_label_centroids",
-        "emb_quantize_int8",
-        "emb_random_projection",
-        "ann_mmr_rerank",
-        "ann_range_search",
-        "emb_kmeanspp_init",
-        "emb_matryoshka_trunc",
-        "ann_lsh_multiprobe",
-        "ann_recall_eval",
-        # io_ops family (r5-era evidence) closes the window
-        "write_parquet_roundtrip",
-        "write_csv_roundtrip",
-        "write_json_roundtrip",
-        "ctas_insert_sql",
-        "copy_to_roundtrip",
-        "scan_csv",
-        "scan_ndjson",
-        "scan_avro",
-        "scan_arrow_ipc",
-        "url_table_sql",
-        "scan_partitioned_listing",
-        "inmem_table_join",
-        "bucketed_colocated_join",
-        "write_arrow_ipc_dist_roundtrip",
-    ]
-    # (r13 window, kept for the rotation history: _r13_head +
-    # _r13_continuation — all 50 driver-green in CORRECTNESS_r13.json.)
-    del _r13_head, _r13_continuation
-    # Round-14 window: the ops whose CODE changed this round lead
-    # (newest-code-first — text_winnow_fingerprint's selection rewrite,
-    # train_bpe_encode's Arrow encode kernel and the packed minhash
-    # band keys must re-prove bit-identity on the driver; the
-    # ivfpq/pq/kmeans family executes the new in-path
-    # overflow/distinctness asserts), then the two queries the
-    # local-mode AQE parallelismFirst flip moved most at sf1, then the
-    # family sweep the r13 rotation note queued: sketches + events
-    # (ev_range already in the head), multimodal, streaming, and the
-    # headline h2o grouper closes the 50.
-    _r14_head = [
-        "text_winnow_fingerprint",
-        "train_bpe_encode",
-        "dedup_minhash_lsh",
-        "dedup_incremental",
-        "ann_pq_adc",
-        "ann_ivfpq_topk",
-        "ann_ivfpq_refine",
-        "emb_pq_encode",
-        "emb_kmeans_lloyd",
-        "train_contamination_ngram",
-        "ev_range_join_bucketed",
-    ]
-    _r14_continuation = [
-        # sketches family in registration order
-        "sketch_quantile_bottomk",
-        "sketch_range_partition_cuts",
-        "sketch_kll_quantiles",
-        "sketch_theta_set_ops",
-        "sketch_ams_f2",
-        "sketch_moments_power_sums",
-        # events family in registration order (ev_range in the head)
-        "sketch_hll_distinct",
-        "sketch_hll_merge_hourly",
-        "sketch_hll_distinct_p12",
-        "sketch_countmin_topk",
-        "ev_hourly_rollup",
-        "ev_funnel_steps",
-        "ev_gap_fill",
-        "ev_window_bucketing",
-        "ev_sessionize",
-        "ev_type_transitions",
-        "ev_daily_retention",
-        "ev_decayed_topk",
-        "sketch_hll_sliding_3h",
-        "ev_anomaly_mad",
-        # multimodal family in registration order
-        "multimodal_audio_vad",
-        "multimodal_phash_neardup",
-        "multimodal_featurize",
-        "multimodal_wav_roundtrip",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "multimodal_audio_stats",
-        "multimodal_video_keyframes",
-        # streaming family in registration order
-        "stream_windowed_counts",
-        "stream_sliding_counts",
-        "stream_session_windows",
-        "stream_stream_join",
-        "stream_dedup_exact",
-        "stream_dedup_watermarked",
-        "stream_stateful_counter",
-        "stream_foreach_batch_sink",
-        "stream_static_enrich",
-        "stream_checkpoint_resume",
-        # the headline h2o grouper closes the window (g1 yields its
-        # slot to text_winnow_fingerprint's round-14 selection rewrite)
-        "h2o_g2_sum_by_id1_id2",
-    ]
-    window = _r14_head + _r14_continuation
-    # Round-15 queue: any new/changed ops land at the head
-    # (newest-code-first); the natural pool order then resumes at the
-    # r12/r13-checked text+vector greens and should sweep the families
-    # with the oldest evidence left: h2o (g3 onward), functions_cov,
-    # udf_surface, sql_surface.
-    queue: list[str] = []
 
     pool: dict[str, QuerySpec] = {}
     for mod in (
@@ -443,14 +173,10 @@ def all_queries() -> dict[str, QuerySpec]:
         windows,
     ):
         for name, spec in mod.QUERIES.items():
-            assert name not in pool, f"duplicate query name: {name}"
+            if name in pool:
+                raise ValueError(f"duplicate query name: {name}")
             pool[name] = spec
 
-    out: dict[str, QuerySpec] = {name: pool.pop(name) for name in window}
-    # queue entries may name ops committed later in the current round
-    # (the r11 queue is locked before all its new ops land); the lock
-    # test in tests/test_inventory.py asserts the exact final
-    # composition, so a typo here cannot silently drop an entry.
-    out.update({name: pool.pop(name) for name in queue if name in pool})
+    out: dict[str, QuerySpec] = {name: pool.pop(name) for name in WINDOW}
     out.update(pool)
     return out

@@ -131,7 +131,8 @@ def copy_to_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         "FROM io_copy_src WHERE o_orderpriority = '1-URGENT') "
         f"TO '{path}' STORED AS PARQUET"
     )
-    assert n.collect()[0]["count"] > 0
+    if n.collect()[0]["count"] <= 0:
+        raise RuntimeError("COPY TO wrote no rows")
     return _agg(spark.read.parquet(path))
 
 
@@ -237,7 +238,8 @@ def scan_avro(spark: SparkSession, sf: str) -> DataFrame:
             out_dir,
             codec_by_pid=lambda pid: "deflate" if pid % 2 == 0 else "null",
         )
-    assert len(paths) == 2, f"avro fixture degenerated to {paths}"
+    if len(paths) != 2:
+        raise RuntimeError(f"avro fixture degenerated to {paths}")
     back = BallistaSession(spark).read_avro(out_dir)
     return (
         back.groupBy("s_nationkey")

@@ -362,7 +362,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     band_frames = []
     for bnd in range(_BANDS):
         cols = [F.col(f"h{bnd * _ROWS + r}") for r in range(_ROWS)]
-        assert _ROWS == 4, "k1/k2 packing assumes 4 rows per band"
+        if _ROWS != 4:
+            raise ValueError("k1/k2 packing assumes 4 rows per band")
         band_frames.append(
             sig.select(
                 "doc_id",
@@ -978,7 +979,8 @@ def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     bands = []
     for bnd in range(_BANDS):
         cols = [F.col(f"h{bnd * _ROWS + r}") for r in range(_ROWS)]
-        assert _ROWS == 4, "k1/k2 packing assumes 4 rows per band"
+        if _ROWS != 4:
+            raise ValueError("k1/k2 packing assumes 4 rows per band")
         bands.append(
             sig.select(
                 "doc_id",

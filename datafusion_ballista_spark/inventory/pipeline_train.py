@@ -995,18 +995,13 @@ def train_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     # tests/test_curation_ops.py; the 8 tiny driver-side learning jobs
     # above are unchanged. The kernel still runs ONCE per word TYPE,
     # never per occurrence (the Heaps'-law memoization).
-    merge_pairs = [(f",{a},,{b},", f",{a + b},") for _, a, b, _m, _w in merges]
+    merge_pairs = [(a, b) for _, a, b, _m, _w in merges]
 
     @pandas_udf("int")
     def _tok_len(ws):
-        import pandas as pd
-
         # word matched ^[a-z]+$ upstream, so its char list IS the
         # initial symbol sequence (the fold's regexp_extract_all).
-        s = pd.Series(["," + ",,".join(w) + "," for w in ws], dtype="object")
-        for pat, rep in merge_pairs:
-            s = s.str.replace(pat, rep, regex=False)
-        return (s.str.count(",,") + 1).astype("int32")
+        return bpe_token_lengths(ws, merge_pairs)
 
     enc = (
         occ.select("word")
@@ -1038,6 +1033,27 @@ def train_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("source")
     )
+
+
+def bpe_apply_merges(seqs, merges):
+    """Apply BPE ``merges`` [(a, b), ...] in order to every symbol
+    sequence in ``seqs`` (a string is its own char sequence) and return
+    the merged sequences rendered as ",s1,,s2,,...,sN," strings.
+
+    One merge is one C-speed ``str.replace`` of ",a,,b," with ",ab,":
+    exactly the greedy left-to-right non-overlapping fold, by the
+    equivalence argued at train_bpe_encode."""
+    import pandas as pd
+
+    s = pd.Series(["," + ",,".join(q) + "," for q in seqs], dtype="object")
+    for a, b in merges:
+        s = s.str.replace(f",{a},,{b},", f",{a + b},", regex=False)
+    return s
+
+
+def bpe_token_lengths(seqs, merges):
+    """Token count of each sequence after ``bpe_apply_merges``."""
+    return (bpe_apply_merges(seqs, merges).str.count(",,") + 1).astype("int32")
 
 
 def _bpe_apply_sql(r: int) -> str:

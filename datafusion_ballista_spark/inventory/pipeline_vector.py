@@ -738,11 +738,10 @@ def _train_rounds(
                     # bound: per-batch |sum| <= batch_rows * max|q|.
                     # Micro-unit components are |q| <= ~1e6 and Arrow
                     # batches are <= ~1e4 rows => ~1e10 << 2^63; the
-                    # assert trips loudly if a future quantization
+                    # guard trips loudly if a future quantization
                     # scale or batch-size change breaks the headroom.
-                    assert len(sub) * max(
-                        1, int(np.abs(sub).max())
-                    ) < (1 << 62), "partial-sum overflow headroom lost"
+                    if len(sub) * max(1, int(np.abs(sub).max())) >= 1 << 62:
+                        raise RuntimeError("partial-sum overflow headroom lost")
                     np.add.at(sums, cid, sub)
                     cnts = np.bincount(cid, minlength=k)
                     for ci in np.nonzero(cnts)[0]:
@@ -1245,7 +1244,8 @@ def ann_pq_adc(spark: SparkSession, sf: str) -> DataFrame:
         pts.orderBy("vec_id").limit(_PQ_K).collect(),
         key=lambda r: r.vec_id,
     )
-    assert _ADC_NQ <= _PQ_K
+    if _ADC_NQ > _PQ_K:
+        raise ValueError("ann_pq_adc query set exceeds the init collect")
     books = _pq_codebooks(
         pts, init=[[int(x) for x in r.q] for r in init_rows]
     )
@@ -1263,9 +1263,10 @@ def ann_pq_adc(spark: SparkSession, sf: str) -> DataFrame:
     # could drop a vec_id < NQ row the old where(vec_id < NQ) scan
     # would have returned. Assert the full query set materialized so a
     # fixture change fails loudly instead of silently shrinking it.
-    assert len(qrows) == _ADC_NQ and len(
+    if len(qrows) != _ADC_NQ or len(
         {r.vec_id for r in init_rows}
-    ) == len(init_rows), "init collect did not yield the full query set"
+    ) != len(init_rows):
+        raise RuntimeError("init collect did not yield the full query set")
     qids = [int(r.vec_id) for r in qrows]
     # tabs[m]: flat qid-major table, tabs[m][qi*k + code] = exact sqdist
     # from query qi's m-th subvector to centroid `code`.
@@ -1361,7 +1362,8 @@ _IVFPQ_TOPK = 3
 
 # qrows derivation below relies on every vec_id < _IVFPQ_NQ row being
 # among the _KM_K lowest-vec_id rows of the single init collect
-assert _IVFPQ_NQ <= _KM_K and _PQ_K == _KM_K
+if _IVFPQ_NQ > _KM_K or _PQ_K != _KM_K:
+    raise ValueError("ivfpq query set must fit the single init collect")
 
 
 def _cell_code_udf(cents: list[list[int]], books: list[list[list[int]]]):
@@ -1407,7 +1409,7 @@ def _ivfpq_sims(spark: SparkSession, sf: str) -> tuple:
     and a 2-ArrowEvalPython encode):
     - ONE init job (k lowest vec_ids) seeds the coarse quantizer, all
       four PQ codebooks, AND the bounded query set (every vec_id <
-      _IVFPQ_NQ row is among the _KM_K lowest — asserted above);
+      _IVFPQ_NQ row is among the _KM_K lowest — checked above);
     - ONE _train_rounds partial-sum pass per Lloyd round trains coarse
       + subspaces together: one corpus scan per round, not G;
     - ONE combined cell+codes kernel encodes the corpus with a single
@@ -1443,9 +1445,10 @@ def _ivfpq_sims(spark: SparkSession, sf: str) -> tuple:
     qrows = [r for r in init_rows if r.vec_id < _IVFPQ_NQ]
     # Same distinct-vec_id assumption as ann_pq_adc's derivation: fail
     # loudly if a fixture change makes the init collect miss a query.
-    assert len(qrows) == _IVFPQ_NQ and len(
+    if len(qrows) != _IVFPQ_NQ or len(
         {r.vec_id for r in init_rows}
-    ) == len(init_rows), "init collect did not yield the full query set"
+    ) != len(init_rows):
+        raise RuntimeError("init collect did not yield the full query set")
     # probe list: nprobe nearest coarse centroids per query (exact int
     # sqdist, ties to the lower cid) — Q x k tiny driver computation
     probes = []

@@ -421,8 +421,10 @@ def sketch_kll_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     retained = int(est_rows[0].retained) if est_rows else 0
     # driver-side integrity on the bounded merge result (9 rows):
     # compactor-capacity bound and a non-degenerate corpus
-    assert n > 0, "KLL over an empty corpus"
-    assert retained <= 3 * _KLL_K + 10 * MIN_LEVEL_WIDTH, retained
+    if n <= 0:
+        raise RuntimeError("KLL over an empty corpus")
+    if retained > 3 * _KLL_K + 10 * MIN_LEVEL_WIDTH:
+        raise RuntimeError(f"KLL retained {retained} items past capacity")
 
     # deterministic witness values: the module's md5-bottom-k sample
     # quantiles (replayed bit-identically by the oracle's ORDER BY

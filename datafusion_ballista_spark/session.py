@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from datafusion_ballista_spark.config import SPARK_DEFAULTS, translate
 from datafusion_ballista_spark.sql import parse_copy, rewrite_sql
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SET_RE = re.compile(r"^\s*SET\s+(\S+)\s*(?:=|\s+TO\s+)\s*(.+?)\s*;?\s*$", re.IGNORECASE)
 
 # SHOW FUNCTIONS [LIKE 'pattern'] — reference CLI ListFunctions
@@ -96,6 +98,11 @@ def get_session(
         )
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # Python UDF workers unpickle functions that reference this package
+    # by module name; put its root on their path so they import it
+    # whatever the working directory is (Spark merges this with the
+    # driver's own PYTHONPATH).
+    conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

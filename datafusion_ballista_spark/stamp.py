@@ -1,8 +1,8 @@
 """Artifact stamping shared by every bench/gate entry point.
 
 One implementation so the dirty-detection rules cannot drift between
-``bench.py``, ``tools/bench_star.py`` and ``tools/local_correctness.py``
-(round-9 ADVICE: the three verbatim copies could diverge silently).
+``tools/bench_star.py`` and ``tools/local_correctness.py`` (round-9
+ADVICE: verbatim copies could diverge silently).
 """
 
 from __future__ import annotations

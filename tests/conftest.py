@@ -2,18 +2,22 @@
 
 The compare helper mirrors the driver's contract: run the Spark query and
 the oracle SQL on the same parquet, compare row count, column names, and
-(order-insensitively) values.
+(order-insensitively) values — through ``compare.compare_query`` and its
+one verdict, ``compare.failures``.
 """
 
 from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
+from datafusion_ballista_spark.compare import (
+    compare_query,
+    failures,
+    oracle_connection,
+)
 from datafusion_ballista_spark.session import get_session
-from datafusion_ballista_spark.sources.registry import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
@@ -31,95 +35,21 @@ def spark():
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    # Oracle memory guard (round-8 VERDICT Next #3): a runaway oracle
-    # plan (the pre-fix ppjoin pair explosion, 93 GB hash build) must
-    # fail fast, not evict the VM's page cache mid-gate.
-    con.execute(
-        "SET memory_limit = "
-        f"'{os.environ.get('SPARK_GRAFT_ORACLE_MEM', '16GB')}'"
-    )
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    yield con
-    con.close()
-
-
-from datafusion_ballista_spark.compare import (
-    decimal_output_columns as _decimal_output_columns,
-)
-from datafusion_ballista_spark.compare import (
-    complex_output_columns as _complex_output_columns,
-)
-from datafusion_ballista_spark.compare import (
-    driver_canon_check as _driver_canon_check,
-)
-from datafusion_ballista_spark.compare import fetch_oracle as _fetch_oracle
-from datafusion_ballista_spark.compare import normalize as _normalize
+    with oracle_connection(SF_DIR) as con:
+        yield con
 
 
 def assert_query_matches(spark_df, oracle_con, oracle_sql: str, name: str = "?"):
-    s_cols = list(spark_df.columns)
-    dec_cols = _decimal_output_columns(spark_df)
-    assert not dec_cols, (
-        f"[{name}] bare DecimalType output column(s) {dec_cols}: the driver's "
-        f"hash diverges on decimal representation even when values match "
-        f"(round-6 q12/q20/q37) — pin to DOUBLE/BIGINT before output"
-    )
-    cplx_cols = _complex_output_columns(spark_df)
-    assert not cplx_cols, (
-        f"[{name}] complex-typed output column(s) {cplx_cols}: the driver's "
-        f"pandas canonicalizer cannot sort array/map/struct cells (round-10 "
-        f"emb_random_projection) — flatten to scalar columns before output"
-    )
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    # driver-canon pre-flight (round-10 VERDICT Next #5): the exact
-    # pandas sort_values the driver runs must succeed on these rows
-    _driver_canon_check(s_cols, s_rows)
-    o_cols, o_rows, hugeints = _fetch_oracle(oracle_con.sql(oracle_sql))
-    assert not hugeints, (
-        f"[{name}] oracle emits HUGEINT (decimal128(38,0)) column(s) "
-        f"{hugeints}: wrap the SUM(int)/factorial() in CAST(... AS BIGINT)"
-    )
-    assert sorted(s_cols) == sorted(o_cols), (
-        f"[{name}] column mismatch: spark={sorted(s_cols)} oracle={sorted(o_cols)}"
-    )
-    assert len(s_rows) == len(o_rows), (
-        f"[{name}] row count mismatch: spark={len(s_rows)} oracle={len(o_rows)}"
-    )
-    _, sn = _normalize(s_cols, s_rows)
-    _, on = _normalize(o_cols, o_rows)
-    for i, (a, b) in enumerate(zip(sn, on)):
-        assert a == b, (
-            f"[{name}] value mismatch at sorted row {i}:\n spark ={a}\n oracle={b}"
-        )
-    # Float audit (round-8, mirrors the decimal-output audit): float
-    # cells must also match BIT-EXACTLY at this gate's sf0.01 scale —
-    # if they only match after the 9dp/12sg normalization, the
-    # normalization is load-bearing and the driver's own hash (which
-    # may not normalize) could diverge where this gate stays green,
-    # the same blind-spot class as the round-6 decimal reds. Whitelist
-    # EMPTY on purpose; the sf1 STRESS gate asserts the same contract
-    # through its own NAMED whitelist (FLOAT_ULP_SF1_WHITELIST in
-    # tools/local_correctness.py: exactly tpch_q1 + sql_unpivot, the
-    # two documented 1-ULP decimal->double edges) — a third appearance
-    # fails that gate loudly instead of blending into the recorded
-    # float_strict_match field.
-    if name not in FLOAT_ULP_WHITELIST:
-        _, sn_s = _normalize(s_cols, s_rows, strict_floats=True)
-        _, on_s = _normalize(o_cols, o_rows, strict_floats=True)
-        for i, (a, b) in enumerate(zip(sn_s, on_s)):
-            assert a == b, (
-                f"[{name}] FLOAT-STRICT mismatch at sorted row {i} (values "
-                f"agree only after 9dp/12sg normalization — round on both "
-                f"sides in the query itself):\n spark ={a}\n oracle={b}"
-            )
+    rec = compare_query(spark_df, oracle_con, oracle_sql)
+    fails = failures(rec, name in FLOAT_ULP_WHITELIST)
+    assert not fails, f"[{name}] " + "\n".join(fails)
 
 
 # Queries allowed to rely on the 9dp/12sg float normalization at the
 # sf0.01 gate. Empty on purpose — round() in the query on BOTH sides is
-# the contract; a new entry here needs the same justification bar as the
-# decimal whitelist.
+# the contract: if floats match only after the normalization, it is
+# load-bearing and the CORRECTNESS hash (which may not normalize) could
+# diverge where this gate stays green, the same blind-spot class as the
+# round-6 decimal reds. A new entry here needs the same justification bar
+# as FLOAT_ULP_SF1_WHITELIST in tools/local_correctness.py.
 FLOAT_ULP_WHITELIST: frozenset[str] = frozenset()

@@ -65,27 +65,18 @@ def test_container_cells():
     assert norm_cell(datetime.date(2024, 1, 5)) == "2024-01-05"
 
 
-def test_every_registered_oracle_is_hugeint_free():
+def test_every_registered_oracle_is_hugeint_free(oracle):
     """Static lint (runs every oracle with LIMIT 0 — schema only): no
     oracle may emit a decimal128(38,0) column, DuckDB's HUGEINT signature
     for an un-cast SUM(int)/factorial()."""
     from datafusion_ballista_spark.inventory import all_queries
-    from datafusion_ballista_spark.sources.registry import TABLES
 
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     offenders = {}
     for name, spec in all_queries().items():
         if spec.oracle is None:
             continue
         try:
-            tbl = con.sql(
+            tbl = oracle.sql(
                 f"SELECT * FROM ({spec.oracle}\n) __lint LIMIT 0"
             ).arrow()
         except duckdb.Error as ex:  # pragma: no cover — oracle must parse
@@ -131,3 +122,86 @@ def test_compare_query_goes_red_on_decimal_output(spark):
     df2 = spark.sql("SELECT CAST(CAST(62.49 AS DECIMAL(7,2)) AS DOUBLE) AS p")
     rec2 = compare_query(df2, con, "SELECT CAST(62.49 AS DOUBLE) AS p")
     assert rec2["hash_match"] is True and "decimal_output" not in rec2
+
+
+# --- failures(): one hazard per check the gate makes ----------------------
+# Each pair below trips the check its test is named for, and the test
+# asserts that check's own message: deleting the check from failures()
+# turns the test red even when another check still fails the pair.
+
+
+def _fails(spark, spark_sql, oracle_sql, whitelisted=False):
+    from datafusion_ballista_spark.compare import compare_query, failures
+
+    rec = compare_query(spark.sql(spark_sql), duckdb.connect(), oracle_sql)
+    return rec, failures(rec, whitelisted)
+
+
+def test_failures_passes_a_matching_pair(spark):
+    rec, fails = _fails(
+        spark, "SELECT CAST(3 AS BIGINT) AS s", "SELECT CAST(3 AS BIGINT) AS s"
+    )
+    assert fails == [] and rec["hash_match"] is True
+    assert rec["first_mismatch"] is None
+
+
+@pytest.mark.parametrize(
+    "spark_sql, oracle_sql, message",
+    [
+        pytest.param(
+            "SELECT CAST(3 AS BIGINT) AS s",
+            "SELECT SUM(x) AS s FROM (VALUES (1), (2)) t(x)",
+            "HUGEINT",
+            id="hugeint",
+        ),
+        pytest.param(  # values identical: only the output type is at fault
+            "SELECT CAST(62.49 AS DECIMAL(7,2)) AS p",
+            "SELECT CAST(62.49 AS DECIMAL(7,2)) AS p",
+            "bare DecimalType",
+            id="decimal_output",
+        ),
+        pytest.param(
+            "SELECT NAMED_STRUCT('x', 1) AS st",
+            "SELECT {'x': 1} AS st",
+            "complex-typed",
+            id="complex_output",
+        ),
+        pytest.param("SELECT 1 AS a", "SELECT 1 AS b", "column mismatch",
+                     id="columns"),
+        pytest.param(
+            "SELECT id FROM range(3)",
+            "SELECT CAST(range AS BIGINT) AS id FROM range(2)",
+            "row count mismatch: spark=3 oracle=2",
+            id="row_count",
+        ),
+    ],
+)
+def test_failures_hazard(spark, spark_sql, oracle_sql, message):
+    _, fails = _fails(spark, spark_sql, oracle_sql)
+    assert any(message in f for f in fails), fails
+
+
+def test_failures_value_mismatch_shows_first_row(spark):
+    rec, fails = _fails(
+        spark,
+        "SELECT id, id * 10 AS v FROM range(3)",
+        "SELECT CAST(range AS BIGINT) AS id, "
+        "CAST(CASE WHEN range = 2 THEN 21 ELSE range * 10 END AS BIGINT) AS v "
+        "FROM range(3)",
+    )
+    assert rec["first_mismatch"]["row"] == 2
+    assert any(
+        "value mismatch at sorted row 2" in f and "20" in f and "21" in f
+        for f in fails
+    ), fails
+
+
+def test_failures_float_strict_only(spark):
+    # 0.1 + 0.2 != 0.3 bit-exactly, but equal after the 9dp/12sg rounding
+    q = "SELECT CAST(0.1 AS DOUBLE) + CAST(0.2 AS DOUBLE) AS x"
+    rec, fails = _fails(spark, q, "SELECT CAST(0.3 AS DOUBLE) AS x")
+    assert rec["hash_match"] is True and rec["float_strict_match"] is False
+    assert any("FLOAT-STRICT mismatch" in f for f in fails), fails
+    # a named whitelist entry is the only way past it
+    _, fails = _fails(spark, q, "SELECT CAST(0.3 AS DOUBLE) AS x", True)
+    assert fails == []

@@ -858,10 +858,10 @@ def test_bpe_replace_kernel_equivalence():
     randomized sweep over multi-char symbols."""
     import random
 
-    def kernel(syms, a, b):
-        s = "," + ",,".join(syms) + ","
-        s = s.replace(f",{a},,{b},", f",{a + b},")
-        return [x for x in s.split(",") if x]
+    from datafusion_ballista_spark.inventory.pipeline_train import (
+        bpe_apply_merges,
+        bpe_token_lengths,
+    )
 
     cases = [
         (["xa", "b"], "a", "b"),          # suffix hazard: must NOT merge
@@ -880,7 +880,18 @@ def test_bpe_replace_kernel_equivalence():
              rng.choice(alpha), rng.choice(alpha))
         )
     for syms, a, b in cases:
-        assert kernel(syms, a, b) == _apply_merge(syms, a, b), (syms, a, b)
+        want = _apply_merge(syms, a, b)
+        got = bpe_apply_merges([syms], [(a, b)])[0]
+        assert [x for x in got.split(",") if x] == want, (syms, a, b)
+        if syms:  # words are nonempty ([a-z]+) upstream
+            assert bpe_token_lengths([syms], [(a, b)])[0] == len(want)
+    # a merge table applies in order, each merge over the previous output
+    table = [("a", "b"), ("ab", "ab"), ("x", "abab")]
+    want = list("xababab")
+    for a, b in table:
+        want = _apply_merge(want, a, b)
+    assert want == ["xabab", "ab"]
+    assert bpe_token_lengths(["xababab"], table)[0] == 2
 
 
 # ---------------------------------------------------------------------------

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pandas as pd
 import pytest
 
+from datafusion_ballista_spark.compare import oracle_connection
 from datafusion_ballista_spark.inventory import multimodal_cov
 from tests.conftest import assert_query_matches
 
@@ -49,13 +49,8 @@ def adversarial_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def adversarial_oracle(adversarial_sf):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{adversarial_sf}/documents.parquet'"
-    )
-    yield con
-    con.close()
+    with oracle_connection(adversarial_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", sorted(multimodal_cov.QUERIES))

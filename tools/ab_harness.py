@@ -1,7 +1,7 @@
 """Interactive A/B measurement harness for optimization work.
 
-Run under `python -i tools/ab_harness.py` (or exec in tmux): builds the
-same session as bench.py, then exposes:
+Run under `python -i tools/ab_harness.py` (or exec in tmux): builds a
+local[SPARK_GRAFT_CPUS] session over SPARK_GRAFT_SF_DIR, then exposes:
 
   t(name, n=3)     -> cold + n steady noop-sink timings for one query
   plan(name, path) -> write .explain("formatted") to path

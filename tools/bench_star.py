@@ -1,10 +1,9 @@
 """Star-schema stress bench: heavy verbatim TPC-DS queries at a scaled
 star fixture, Spark vs same-scale DuckDB.
 
-A separate artifact from bench.py (whose tracked set and method stay
-frozen for round-over-round comparability — this tool only ADDS a scale
-point, like BENCH_local_sf1.json did in round 5). Same measurement
-discipline: one warmup query, then per query 1 cold + 3 timed iterations
+A scale point of its own, like BENCH_local_sf1.json in round 5 (the
+repo benchmark is perfbench/). Measurement discipline: one warmup
+query, then per query 1 cold + 3 timed iterations
 with the median reported; the identical verbatim SQL text runs on DuckDB
 (same thread count, same parquet) for the ratio. The query set is the
 expensive tier of the 99 verbatim texts: multi-channel CTE monsters
@@ -27,8 +26,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-# Shared stamp helper (round-9 ADVICE: the verbatim _git_sha copy here
-# could drift from bench.py's; one implementation now serves both).
+# Shared stamp helper (round-9 ADVICE: one implementation, no drift).
 from datafusion_ballista_spark.stamp import git_sha as _git_sha
 
 # The heavy verbatim tier: the 8 most expensive TPC-DS texts at x100

@@ -17,12 +17,14 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import duckdb  # noqa: E402
-
-from datafusion_ballista_spark.compare import compare_query  # noqa: E402
+from datafusion_ballista_spark.compare import (  # noqa: E402
+    compare_query,
+    failures,
+    oracle_connection,
+)
 from datafusion_ballista_spark.inventory import all_queries  # noqa: E402
 from datafusion_ballista_spark.session import get_session  # noqa: E402
-from datafusion_ballista_spark.sources.registry import TABLES  # noqa: E402
+from datafusion_ballista_spark.stamp import git_sha as _git_sha  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 # Defaults replicate the driver's sf0.01 gate (local[8]). Larger one-off
@@ -53,7 +55,8 @@ GATE_MAXPART = os.environ.get("SPARK_GRAFT_GATE_MAXPART")
 
 # Float-strict whitelist, ASSERTED (round-9 VERDICT Next #4): a row
 # whose value hash matches only after the 9dp/12sg normalization
-# (float_strict_match: false) FAILS the gate unless named here. Exactly
+# (float_strict_match: false) FAILS the gate (compare.failures) unless
+# named here. Exactly
 # two entries, both sf1-stress-scale 1-ULP artifacts of the documented
 # decimal->double contract (tests/conftest.py FLOAT_ULP_WHITELIST keeps
 # the sf0.01 pytest gate empty-whitelist):
@@ -66,9 +69,6 @@ GATE_MAXPART = os.environ.get("SPARK_GRAFT_GATE_MAXPART")
 #   decimal-exact sum to double per row; one 1-ULP cell at sf1.
 # A THIRD appearance is a regression and fails loudly.
 FLOAT_ULP_SF1_WHITELIST = frozenset({"tpch_q1", "sql_unpivot"})
-
-
-from datafusion_ballista_spark.stamp import git_sha as _git_sha  # shared stamp
 
 
 def main() -> int:
@@ -87,64 +87,35 @@ def main() -> int:
         }
         or None,
     )
-    con = duckdb.connect()
-    # ORACLE memory guard (round-8 VERDICT Next #3): the round-8 bench
-    # series was poisoned by a runaway ORACLE plan — a pre-fix ppjoin
-    # candidate explosion built a 93 GB single-thread DuckDB hash table,
-    # evicted the VM's guest pages, and left BOTH engines 30-45% slow
-    # for hours. The Spark side is plan-audited against that class;
-    # the oracle side now fails fast instead: a pathological pair-space
-    # oracle hits this ceiling and errors (or spills bounded), rather
-    # than eating the machine mid-gate.
-    con.execute(
-        "SET memory_limit = "
-        f"'{os.environ.get('SPARK_GRAFT_ORACLE_MEM', '16GB')}'"
-    )
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
     results: dict[str, dict] = {}
-    failures = 0
-    for name, spec in all_queries().items():
-        if name in GATE_EXCLUDE:
-            continue
-        if GATE_ONLY_PREFIXES and not any(
-            name.startswith(p) for p in GATE_ONLY_PREFIXES
-        ):
-            continue
-        # progress line BEFORE the run (round 11: a runaway oracle spilled
-        # 50 GB with no way to tell which query from the log) and timing
-        # after — flush so a stuck run shows its culprit immediately.
-        print(f"RUN {name}", file=sys.stderr, flush=True)
-        t0 = time.time()
-        try:
-            df = spec.spark(spark, SF_DIR)
-            rec = compare_query(df, con, spec.oracle)
-        except Exception as ex:
-            rec = {"err": f"{type(ex).__name__}: {ex}"[:500]}
-        rec["secs"] = round(time.time() - t0, 2)
-        print(f"  {name} {rec['secs']}s", file=sys.stderr, flush=True)
-        results[name] = rec
-        ok = rec.get("err") is None and (
-            rec.get("hash_match") or (spec.oracle is None and rec.get("rows_match"))
-        )
-        if (
-            ok
-            and rec.get("float_strict_match") is False
-            and name not in FLOAT_ULP_SF1_WHITELIST
-        ):
-            ok = False
-            rec["err"] = (
-                "float_strict_match false outside FLOAT_ULP_SF1_WHITELIST: "
-                "values agree only after 9dp/12sg normalization — round in "
-                "the query on both sides, or justify a whitelist entry"
-            )
-        if not ok:
-            failures += 1
-            print(f"FAIL {name}: {rec}", file=sys.stderr)
-    meta = {"sf_dir": SF_DIR, "n": len(results), "failures": failures,
+    n_failed = 0
+    with oracle_connection(SF_DIR) as con:
+        for name, spec in all_queries().items():
+            if name in GATE_EXCLUDE:
+                continue
+            if GATE_ONLY_PREFIXES and not any(
+                name.startswith(p) for p in GATE_ONLY_PREFIXES
+            ):
+                continue
+            # progress line BEFORE the run (round 11: a runaway oracle
+            # spilled 50 GB with no way to tell which query from the log)
+            # and timing after — flush so a stuck run shows its culprit.
+            print(f"RUN {name}", file=sys.stderr, flush=True)
+            t0 = time.time()
+            try:
+                df = spec.spark(spark, SF_DIR)
+                rec = compare_query(df, con, spec.oracle)
+            except Exception as ex:
+                rec = {"err": f"{type(ex).__name__}: {ex}"[:500]}
+            rec["secs"] = round(time.time() - t0, 2)
+            print(f"  {name} {rec['secs']}s", file=sys.stderr, flush=True)
+            results[name] = rec
+            fails = failures(rec, name in FLOAT_ULP_SF1_WHITELIST)
+            if fails:
+                rec["failures"] = fails
+                n_failed += 1
+                print(f"FAIL {name}: {rec}", file=sys.stderr)
+    meta = {"sf_dir": SF_DIR, "n": len(results), "failures": n_failed,
             "excluded": sorted(GATE_EXCLUDE), "sha": _git_sha(),
             "results": results}
     if os.environ.get("SPARK_GRAFT_STAR_DIR"):
@@ -153,10 +124,9 @@ def main() -> int:
         meta["only_prefixes"] = GATE_ONLY_PREFIXES
     with open(out_path, "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True)
-    print(f"{len(results) - failures}/{len(results)} green -> {out_path}")
+    print(f"{len(results) - n_failed}/{len(results)} green -> {out_path}")
     spark.stop()
-    con.close()
-    return 1 if failures else 0
+    return 1 if n_failed else 0
 
 
 if __name__ == "__main__":

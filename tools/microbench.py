@@ -11,7 +11,7 @@ Targets:
 
 Prints ONE JSON line: {"metric": "microbench", "unit": "mb_per_sec",
 "cases": {...}} — throughput, so bigger is better; deterministic inputs
-(seeded numpy), min of N draws (the bench.py discipline).
+(seeded numpy), min of N draws.
 
 Usage: python tools/microbench.py [out.json]
 """
