@@ -108,17 +108,6 @@ def all_queries() -> dict[str, QuerySpec]:
         sql_surface,
         streaming_cov,
         tpcds,
-        tpcds2,
-        tpcds3,
-        tpcds4,
-        tpcds5,
-        tpcds6,
-        tpcds7,
-        tpcds8,
-        tpcds9,
-        tpcds10,
-        tpcds11,
-        tpcds12,
         tpcds_real,
         tpcds_real2,
         tpcds_real3,
@@ -143,17 +132,6 @@ def all_queries() -> dict[str, QuerySpec]:
         multimodal_cov,
         streaming_cov,
         tpcds,
-        tpcds2,
-        tpcds3,
-        tpcds4,
-        tpcds5,
-        tpcds6,
-        tpcds7,
-        tpcds8,
-        tpcds9,
-        tpcds10,
-        tpcds11,
-        tpcds12,
         tpcds_real,
         tpcds_real2,
         tpcds_real3,

@@ -1,14 +1,14 @@
 """Verbatim TPC-DS queries over the real star schema.
 
-The 99 ``tpcds_q*_shape`` analogues prove each query's operator signature
-against the driver's TPC-H-ish fixtures; this module (and tranches 2/3 in
-tpcds_real2.py / tpcds_real3.py — 33 verbatim queries total) closes the
-fidelity gap they cannot: the queries below are the reference's own TPC-DS
-texts (reference: benchmarks/queries-tpcds/q{3,7,13,19,42,52,55,88,96,98}.sql, the suite
-its CI runs at SF1 — .github/workflows/tpcds.yml:55-74) executed against
-the real table names, calendar date_dim, decimal(7,2) money columns, and
-nullable fact foreign keys of a committed deterministic star fixture
-(tools/gen_tpcds_star.py, fixtures/tpcds_star/).
+This module and tpcds_real2..9.py are the registry's TPC-DS tier: all 99
+of the reference's own TPC-DS texts (reference:
+benchmarks/queries-tpcds/q1.sql..q99.sql, the suite its CI runs at SF1 —
+.github/workflows/tpcds.yml:55-74), executed against the real table
+names, calendar date_dim, decimal(7,2) money columns, and nullable fact
+foreign keys of a committed deterministic star fixture
+(tools/gen_tpcds_star.py, fixtures/tpcds_star/). The few DataFrame
+analogues left in inventory/tpcds.py cover only operators these plans
+do not reach. This module holds q3/q7/q13/q19/q42/q52/q55/q88/q96/q98.
 
 Fidelity contract: ONE SQL body per query, byte-identical on both engines
 — Spark runs it over temp views, DuckDB over read_parquet CTEs — so the
@@ -149,21 +149,6 @@ def _spark_runner(body: str):
         # sf is ignored by design: the real-schema fixture is its own
         # (committed, deterministic) scale point.
         _register(spark)
-        # Default: verbatim execution — Catalyst inlines CTEs, and a
-        # 12-query A/B at the x100 star fixture measured inlining FASTER
-        # overall (36.4 s vs 77.9 s): consumer-specific filter pushdown
-        # into the CTE body is the dominant effect on Spark (q95's
-        # pair-list CTE degrades 3.9 s -> 44 s if materialized). The
-        # DuckDB/Postgres-style materialized strategy stays available as
-        # an opt-in for the shapes where it wins (q14/q23/q47/q57):
-        # SPARK_GRAFT_MATERIALIZE_CTES=1. datafusion_ballista_spark/cte.py
-        # has the full trade analysis.
-        if os.environ.get("SPARK_GRAFT_MATERIALIZE_CTES") == "1":
-            from datafusion_ballista_spark.cte import (
-                run_with_materialized_ctes,
-            )
-
-            return run_with_materialized_ctes(spark, body)
         return spark.sql(body)
 
     return run

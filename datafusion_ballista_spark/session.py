@@ -112,6 +112,23 @@ def get_session(
     return spark
 
 
+def tool_sizing_conf() -> dict[str, str]:
+    """Driver heap and scan-split ceiling for the standalone tools' larger
+    one-off runs, from SPARK_GRAFT_DRIVER_MEM (spark.driver.memory) and
+    SPARK_GRAFT_MAXPART (spark.sql.files.maxPartitionBytes); an unset
+    variable keeps Spark's default.
+
+    A 1g default driver heap fails on broadcast *materialization* at sf1,
+    a harness limit rather than a plan defect. The sf1 and scaled star
+    fixtures are ~50 MB single files, so the 128 MB default split makes
+    each scan one task; 16m restores the multi-task scans a cluster has."""
+    env = {
+        "spark.driver.memory": "SPARK_GRAFT_DRIVER_MEM",
+        "spark.sql.files.maxPartitionBytes": "SPARK_GRAFT_MAXPART",
+    }
+    return {k: os.environ[v] for k, v in env.items() if os.environ.get(v)}
+
+
 class BallistaSession:
     """API-parity facade over ``SparkSession``.
 

@@ -6,7 +6,9 @@ sweep builds every lazily-planned inventory query and asserts:
 
 - no CartesianProduct / BroadcastNestedLoopJoin outside the whitelist of
   known scalar (1-row) cross joins and the deliberate theta join;
-- parquet scans in filtered TPC-H queries carry PushedFilters.
+- parquet scans in filtered TPC-H queries carry PushedFilters;
+- every surviving TPC-DS shape analogue still adds an operator kind to
+  its verbatim twin's plan (the rule that retired the rest).
 
 Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
 execution) are excluded — their plans are audited by their own runs.
@@ -63,14 +65,12 @@ _NESTED_LOOP_OK = {
     "rel_not_in",
     "rel_not_in_nulls",
     "win_share_of_total",
-    "tpcds_q88_shape",  # ds q88 shape: eight 1-row scalar counts cross-joined
     "tpcds_real_q88",  # verbatim ds q88: same eight 1-row counts, real schema
     "tpcds_real_q28",  # verbatim ds q28: six 1-row quantity-band stat blocks
     "tpcds_real_q61",  # verbatim ds q61: two 1-row scalar revenue blocks
     "tpcds_real_q77",  # verbatim ds q77: published 6x6 call-center CTE cross
     "tpcds_real_q90",  # verbatim ds q90: two 1-row am/pm count blocks
     "tpcds_q23_shape",  # ds q23 shape: 1-row max-spend threshold crossJoin
-    "tpcds_q61_shape",  # ds q61 shape: two 1-row scalar revenue crossJoins
     "tpcds_q24_shape",  # ds q24 shape: 1-row spine-average threshold crossJoin
     "h2o_w_basic_global_sum",  # OVER () rewrite: 1-row total crossJoin
     "dedup_containment",  # quote seeding: 1-row max(doc_id) scalar crossJoin
@@ -104,9 +104,10 @@ _NESTED_LOOP_OK = {
     "ann_recall_eval",  # exact arm broadcasts the bounded (20-row) query set
 }
 
+_REGISTRY = all_queries()
 _ALL = {
     name: spec
-    for name, spec in all_queries().items()
+    for name, spec in _REGISTRY.items()
     if spec.spark.__module__.rsplit(".", 1)[-1] not in _EAGER_MODULES
     and name not in _EAGER_QUERIES
 }
@@ -162,3 +163,52 @@ def test_filters_reach_scan(name, spark):
         for seg in plan.split("PushedFilters: [")[1:]
     ]
     assert any(p.strip() for p in pushed), f"[{name}] no pushed filters\n{plan}"
+
+
+def test_allowlists_name_registered_queries():
+    """An allowlist entry must not outlive its query: a stale name would
+    silently exempt whatever later reuses it."""
+    assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
+    assert _EAGER_QUERIES <= set(_REGISTRY), _EAGER_QUERIES - set(_REGISTRY)
+
+
+# Codegen and reuse wrappers: they say how a plan runs, not which operator
+# code it exercises.
+_PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused")
+
+
+def _operator_kinds(spark, name) -> set[str]:
+    """Operator names in the static physical plan (AQE off, so the plan is
+    not deferred to runtime), subquery plans included, wrappers dropped."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = _REGISTRY[name].spark(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    kinds, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.nodeName().strip()
+        if not kind.startswith(_PLAN_WRAPPERS):
+            kinds.add(kind)
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return kinds
+
+
+_TPCDS_SHAPES = sorted(
+    n for n in _REGISTRY if n.startswith("tpcds_q") and n.endswith("_shape")
+)
+
+
+@pytest.mark.parametrize("name", _TPCDS_SHAPES)
+def test_tpcds_shape_adds_an_operator(name, spark):
+    """A DataFrame analogue stays only while it exercises an operator kind
+    its verbatim twin does not; the rest were retired as subsumed. Red
+    here means a Spark upgrade or an edit to either side made this shape
+    redundant: retire it, or give it back something the twin lacks."""
+    twin = name.replace("tpcds_q", "tpcds_real_q").removesuffix("_shape")
+    added = _operator_kinds(spark, name) - _operator_kinds(spark, twin)
+    assert added, f"[{name}] every operator kind also appears in {twin}"

@@ -47,7 +47,7 @@ HEAVY = [
 
 def main() -> int:
     from datafusion_ballista_spark.inventory import all_queries
-    from datafusion_ballista_spark.session import get_session
+    from datafusion_ballista_spark.session import get_session, tool_sizing_conf
 
     star_dir = os.environ.get("SPARK_GRAFT_STAR_DIR", "fixtures/tpcds_star")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -56,17 +56,7 @@ def main() -> int:
         master=f"local[{cpus}]",
         app_name="dbspark-bench-star",
         shuffle_partitions=int(cpus),
-        extra_conf={
-            k: v
-            for k, v in {
-                "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
-                "spark.sql.files.maxPartitionBytes": os.environ.get(
-                    "SPARK_GRAFT_MAXPART"
-                ),
-            }.items()
-            if v
-        }
-        or None,
+        extra_conf=tool_sizing_conf(),
     )
     specs = all_queries()
     names = [n for n in HEAVY if n in specs]

@@ -1,11 +1,10 @@
 """Deterministic TPC-DS star-schema fixture generator (sf ~0.01), v3.
 
-The inventory's 99 ``tpcds_q*_shape`` analogues exercise each query's
-operator signature over the driver's TPC-H-ish fixtures, but they cannot
-cover what the real schema exercises: calendar date_dim joins, decimal(7,2)
-money columns, and null fact-table foreign keys. This generator writes a
-minimal real-schema star — store_sales + 9 dimensions — so a third of
-the reference's verbatim TPC-DS queries
+The TPC-H-style fixtures cannot host what the real TPC-DS schema
+exercises: calendar date_dim joins, decimal(7,2) money columns, and null
+fact-table foreign keys. This generator writes a real-schema star
+(every TPC-DS table since v4, FIXTURES.md §6) so all 99 of the
+reference's verbatim TPC-DS queries
 (reference: benchmarks/queries-tpcds/q3.sql etc., run in CI by
 .github/workflows/tpcds.yml:55-74) can run unmodified-in-structure against
 the real table names/columns (inventory/tpcds_real*.py).
