@@ -6,9 +6,9 @@ benchmarks/queries-tpcds/q1.sql..q99.sql, the suite its CI runs at SF1 —
 .github/workflows/tpcds.yml:55-74), executed against the real table
 names, calendar date_dim, decimal(7,2) money columns, and nullable fact
 foreign keys of a committed deterministic star fixture
-(tools/gen_tpcds_star.py, fixtures/tpcds_star/). The few DataFrame
-analogues left in inventory/tpcds.py cover only operators these plans
-do not reach. This module holds q3/q7/q13/q19/q42/q52/q55/q88/q96/q98.
+(tools/gen_tpcds_star.py, fixtures/tpcds_star/). The DataFrame
+analogues left in inventory/tpcds.py run operators these plans do not
+reach, or more nodes of one. This module holds q3/q7/q13/q19/q42/q52/q55/q88/q96/q98.
 
 Fidelity contract: ONE SQL body per query, byte-identical on both engines
 — Spark runs it over temp views, DuckDB over read_parquet CTEs — so the
