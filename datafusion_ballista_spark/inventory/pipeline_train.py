@@ -824,24 +824,6 @@ def train_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("rank")
 
 
-def _bpe_fold(a: str, b: str, m: str, src: Column | str = "s") -> Column:
-    """Greedy left-to-right non-overlapping application of one merge
-    (a, b) -> m to the symbol array ``src`` (a column name or a Column
-    expression, so folds CHAIN into one select): append x, or replace
-    the accumulator tail with m when (tail, x) == (a, b). The tail can
-    never spuriously equal ``a`` post-merge since a||b != a for
-    nonempty b."""
-    al, bl, ml = F.lit(a), F.lit(b), F.lit(m)
-    return F.aggregate(
-        src,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == al) & (x == bl),
-            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(ml)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
 def _learn_bpe_merges(words: DataFrame) -> list[tuple]:
     """Run the _BPE_R merge-learning rounds over a (word, cnt)
     frequency table; returns [(rank, a, b, merged, weighted_count)].

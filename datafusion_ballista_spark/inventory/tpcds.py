@@ -7,17 +7,16 @@ star fixture (inventory/tpcds_real*.py). The DataFrame analogues kept here
 are the ones that still exercise something their verbatim twin does not.
 The rule: take the static physical plan (AQE off), drop the codegen
 wrappers (WholeStageCodegen, InputAdapter, ColumnarToRow, Reused*), walk
-subquery plans too, and compare the operator names. An analogue whose
-operator names are a sub-multiset of its twin's (every kind, with no more
-nodes of it) was retired. The set rule is the target: extra Project or
-Exchange nodes track query size, not which engine code runs, so an
-analogue whose set of kinds is a subset of its twin's adds nothing either.
-tests/test_plans.py::test_tpcds_shape_adds_an_operator re-checks both
-rules, so a Spark upgrade or an edit to a twin that makes an analogue
-redundant turns it red.
+subquery plans too, and compare the sets of operator kinds. An analogue
+stays only while its plan has a kind its twin's lacks; one whose kinds are
+a subset of its twin's was retired, since extra nodes of a kind the twin
+already runs (more Project or Exchange steps) track query size, not which
+engine code runs. tests/test_plans.py::test_tpcds_shape_adds_an_operator
+re-checks the rule, so a Spark upgrade or an edit to a twin that makes an
+analogue redundant turns it red.
 
-Why 22 analogues stay under the set rule (operator kinds their twin's
-plan lacks):
+Why each of the 22 analogues stays (operator kinds their twin's plan
+lacks):
 
 - Sort — q5, q15, q45, q50, q62, q66, q76, q80, q85, q90, q99: a global
   ORDER BY with no LIMIT, where the published text ends in
@@ -32,13 +31,6 @@ plan lacks):
 - Union — q35 (its twin has none) and q45 (IN-list OR IN-subquery);
 - Window + WindowGroupLimit, with the Sort that feeds them — q79: a
   rank-filtered top-N per customer.
-
-Subsumed under the set rule but not yet retired — their twin has every
-operator kind, but they run more nodes of some (extra aggregate stages,
-exchanges, projections, top-k or window steps): q2, q10, q11, q12, q16,
-q17, q19, q20, q25, q29, q31, q33, q36, q44, q49, q56, q59, q60, q67, q69,
-q70, q75, q77, q78, q86, q93, q94, q95, q97. They are the next batch to
-retire (ROADMAP 4.4).
 
 Fixture mapping: lineitem is the sales fact, ``l_linenumber % 3`` the
 store/web/catalog channel and l_returnflag the returns channel; orders is
@@ -66,9 +58,6 @@ from datafusion_ballista_spark.inventory.util import D, davg, dsum, tables
 _STORE, _WEB, _CATALOG = 0, 1, 2
 
 
-_DOW = ["sun", "mon", "tue", "wed", "thu", "fri", "sat"]
-
-
 _REV_SQL = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,4))"
 
 
@@ -82,68 +71,6 @@ def _chan_sql(k: int) -> str:
 
 def _rev():
     return D(F.col("l_extendedprice") * (1 - F.col("l_discount")), 27, 4)
-
-
-# --------------------------------------------------------------------------
-# q2 shape: two channels UNION'd, periodized, then period joined to
-# period+1 for a ratio. reference: benchmarks/queries-tpcds/q2.sql
-# --------------------------------------------------------------------------
-def tpcds_q2_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """Year-over-year monthly revenue ratio across the union of two order
-    'channels' (urgent vs standard priority), ds q2's
-    wscs-union -> weekly-sum -> y/y+1 self-join shape."""
-    t = tables(spark, sf, "orders")
-    urgent = t.orders.where(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    )
-    standard = t.orders.where(
-        ~F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    )
-    sales = urgent.select("o_orderdate", "o_totalprice").unionAll(
-        standard.select("o_orderdate", "o_totalprice")
-    )
-    monthly = sales.groupBy(
-        F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("m")
-    ).agg(F.sum(D("o_totalprice")).alias("tot"))
-    nxt = monthly.select(
-        (F.col("y") - 1).alias("ny"),
-        F.col("m").alias("nm"),
-        F.col("tot").alias("ntot"),
-    )
-    return (
-        monthly.join(nxt, (F.col("y") == F.col("ny")) & (F.col("m") == F.col("nm")))
-        .select(
-            "y",
-            "m",
-            F.col("tot").cast("double").alias("cur_total"),
-            F.col("ntot").cast("double").alias("next_total"),
-            F.round(
-                F.col("tot").cast("double") / F.col("ntot").cast("double"), 6
-            ).alias("yoy_ratio"),
-        )
-        .orderBy("y", "m")
-    )
-
-
-TPCDS_Q2_SQL = """
-WITH sales AS (
-  SELECT o_orderdate, o_totalprice FROM orders
-  WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-  UNION ALL
-  SELECT o_orderdate, o_totalprice FROM orders
-  WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')),
-monthly AS (
-  SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
-         CAST(month(o_orderdate) AS INTEGER) AS m,
-         SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS tot
-  FROM sales GROUP BY 1, 2)
-SELECT a.y, a.m,
-  CAST(a.tot AS DOUBLE) AS cur_total,
-  CAST(b.tot AS DOUBLE) AS next_total,
-  ROUND(CAST(a.tot AS DOUBLE) / CAST(b.tot AS DOUBLE), 6) AS yoy_ratio
-FROM monthly a JOIN monthly b ON a.y = b.y - 1 AND a.m = b.m
-ORDER BY a.y, a.m
-"""
 
 
 # --------------------------------------------------------------------------
@@ -230,201 +157,6 @@ ORDER BY channel ASC NULLS FIRST, nation ASC NULLS FIRST
 """
 
 
-# --------------------------------------------------------------------------
-# q10 shape: EXISTS + NOT EXISTS channel gate -> demographic counts.
-# reference: benchmarks/queries-tpcds/q10.sql (also q35/q69 family)
-# --------------------------------------------------------------------------
-def tpcds_q10_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q10's gated census: customers with 1995 store-channel activity
-    (EXISTS -> left_semi) and no 1995 web-channel activity (NOT EXISTS ->
-    left_anti), counted per (nation, mktsegment). Both probes shuffle on
-    the customer key; the distinct customer spines are built once."""
-    t = tables(spark, sf, "lineitem", "orders", "customer", "nation")
-    base = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.year("o_orderdate") == 1995)
-    )
-
-    def custs(k: int) -> DataFrame:
-        return base.where(_chan(k)).select("o_custkey").distinct()
-
-    gated = (
-        t.customer.join(
-            custs(_STORE), F.col("c_custkey") == F.col("o_custkey"), "left_semi"
-        )
-        .join(
-            custs(_WEB), F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-        )
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    return (
-        gated.groupBy("n_name", "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(
-                F.avg(F.col("c_acctbal").cast("decimal(18,2)")).cast("double"),
-                6,
-            ).alias("avg_bal"),
-        )
-        .orderBy("n_name", "c_mktsegment")
-    )
-
-
-TPCDS_Q10_SQL = f"""
-SELECT n_name, c_mktsegment, COUNT(*) AS n_customers,
-  ROUND(CAST(AVG(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 6)
-    AS avg_bal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-WHERE EXISTS (
-    SELECT 1 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995
-      AND {_chan_sql(_STORE)})
-  AND NOT EXISTS (
-    SELECT 1 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995
-      AND {_chan_sql(_WEB)})
-GROUP BY n_name, c_mktsegment
-ORDER BY n_name, c_mktsegment
-"""
-
-
-# --------------------------------------------------------------------------
-# q11 shape: one year_total CTE consumed FOUR times (two channels x two
-# years), growth-ratio comparison. reference: benchmarks/queries-tpcds/q11.sql
-# --------------------------------------------------------------------------
-def tpcds_q11_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """Customers whose urgent-channel spend grew faster year-over-year than
-    their standard-channel spend (1997 -> 1998) — ds q11's four-way
-    year_total self-join. The ratio compare is cross-multiplied decimal
-    (u2*s1 > s2*u1), so no float division exists at any SF."""
-    t = tables(spark, sf, "orders", "customer")
-    yt = (
-        t.orders.withColumn(
-            "channel",
-            F.when(
-                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "urgent"
-            ).otherwise("standard"),
-        )
-        .groupBy(
-            "o_custkey", F.year("o_orderdate").alias("y"), F.col("channel")
-        )
-        .agg(F.sum(D("o_totalprice")).alias("tot"))
-    )
-
-    def slice_(ch: str, y: int, alias: str):
-        return yt.where((F.col("channel") == ch) & (F.col("y") == y)).select(
-            F.col("o_custkey").alias(f"{alias}_ck"), F.col("tot").alias(alias)
-        )
-
-    u1, u2 = slice_("urgent", 1997, "u1"), slice_("urgent", 1998, "u2")
-    s1, s2 = slice_("standard", 1997, "s1"), slice_("standard", 1998, "s2")
-    return (
-        u1.join(u2, F.col("u1_ck") == F.col("u2_ck"))
-        .join(s1, F.col("u1_ck") == F.col("s1_ck"))
-        .join(s2, F.col("u1_ck") == F.col("s2_ck"))
-        .where(
-            (F.col("u1") > 0)
-            & (F.col("s1") > 0)
-            & (F.col("u2") * F.col("s1") > F.col("s2") * F.col("u1"))
-        )
-        .join(t.customer, F.col("u1_ck") == F.col("c_custkey"))
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("u1").cast("double").alias("urgent_1997"),
-            F.col("u2").cast("double").alias("urgent_1998"),
-            F.col("s1").cast("double").alias("standard_1997"),
-            F.col("s2").cast("double").alias("standard_1998"),
-        )
-        .orderBy("c_custkey")
-    )
-
-
-TPCDS_Q11_SQL = """
-WITH yt AS (
-  SELECT o_custkey,
-    CAST(year(o_orderdate) AS INTEGER) AS y,
-    CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-         THEN 'urgent' ELSE 'standard' END AS channel,
-    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS tot
-  FROM orders GROUP BY 1, 2, 3)
-SELECT c_custkey, c_name,
-  CAST(u1.tot AS DOUBLE) AS urgent_1997,
-  CAST(u2.tot AS DOUBLE) AS urgent_1998,
-  CAST(s1.tot AS DOUBLE) AS standard_1997,
-  CAST(s2.tot AS DOUBLE) AS standard_1998
-FROM yt u1
-JOIN yt u2 ON u1.o_custkey = u2.o_custkey
-JOIN yt s1 ON u1.o_custkey = s1.o_custkey
-JOIN yt s2 ON u1.o_custkey = s2.o_custkey
-JOIN customer ON u1.o_custkey = c_custkey
-WHERE u1.channel = 'urgent' AND u1.y = 1997
-  AND u2.channel = 'urgent' AND u2.y = 1998
-  AND s1.channel = 'standard' AND s1.y = 1997
-  AND s2.channel = 'standard' AND s2.y = 1998
-  AND u1.tot > 0 AND s1.tot > 0
-  AND u2.tot * s1.tot > s2.tot * u1.tot
-ORDER BY c_custkey
-"""
-
-
-def _share_shape(spark, sf, chan: int, q: int) -> DataFrame:
-    """q12/q20 both = q98's share-window on a different channel + a
-    bounded date window."""
-    t = tables(spark, sf, "lineitem", "orders", "part")
-    rev = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(
-            _chan(chan)
-            & (F.year("o_orderdate") == 1995)
-            & (F.quarter("o_orderdate") == q)
-        )
-        .join(t.part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_type", "p_brand")
-        .agg(F.sum(_rev()).alias("itemrevenue"))
-    )
-    w = Window.partitionBy("p_type")
-    return (
-        rev.select(
-            "p_type",
-            "p_brand",
-            F.col("itemrevenue").cast("double").alias("itemrevenue"),
-            F.round(
-                F.col("itemrevenue").cast("double")
-                * 100
-                / F.sum("itemrevenue").over(w).cast("double"),
-                6,
-            ).alias("revenueratio"),
-        )
-        .orderBy("p_type", "p_brand")
-        .limit(500)
-    )
-
-
-def _share_sql(chan: int, q: int) -> str:
-    return f"""
-WITH rev AS (
-  SELECT p_type, p_brand, SUM({_REV_SQL}) AS itemrevenue
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN part ON l_partkey = p_partkey
-  WHERE {_chan_sql(chan)} AND year(o_orderdate) = 1995
-    AND quarter(o_orderdate) = {q}
-  GROUP BY 1, 2)
-SELECT p_type, p_brand, CAST(itemrevenue AS DOUBLE) AS itemrevenue,
-       ROUND(CAST(itemrevenue AS DOUBLE) * 100
-             / CAST(SUM(itemrevenue) OVER (PARTITION BY p_type) AS DOUBLE),
-             6) AS revenueratio
-FROM rev ORDER BY p_type, p_brand LIMIT 500
-"""
-
-
-def tpcds_q12_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q98 family, web channel + Q1 window (ds q12)."""
-    return _share_shape(spark, sf, _WEB, 1)
-
-
 def tpcds_q15_shape(spark: SparkSession, sf: str) -> DataFrame:
     """ds q15: per-nation Q1-1995 revenue where a row qualifies through
     ANY of three heterogeneous predicates — a key bucket, a balance
@@ -466,201 +198,6 @@ WHERE year(o_orderdate) = 1995 AND quarter(o_orderdate) = 1
 GROUP BY n_name
 ORDER BY n_name
 """
-
-
-def tpcds_q16_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q94/q95 family on the catalog channel (ds q16): multi-supplier
-    orders with no returned line, restricted to catalog-channel lines
-    and a priority filter."""
-    t = tables(spark, sf, "lineitem", "orders")
-    cat = t.lineitem.where(_chan(_CATALOG))
-    multi = (
-        cat.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("ns"))
-        .where(F.col("ns") > 1)
-        .select("l_orderkey")
-    )
-    ret_orders = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-        .distinct()
-    )
-    sel = (
-        t.orders.where(
-            (F.year("o_orderdate") == 1995)
-            & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        )
-        .join(multi, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .join(ret_orders, F.col("o_orderkey") == F.col("l_orderkey"), "left_anti")
-    )
-    return sel.agg(
-        F.countDistinct("o_orderkey").alias("order_count"),
-        F.sum(D("o_totalprice")).cast("double").alias("total_price"),
-    )
-
-
-TPCDS_Q16_SQL = f"""
-SELECT COUNT(DISTINCT o_orderkey) AS order_count,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_price
-FROM orders
-WHERE year(o_orderdate) = 1995
-  AND o_orderpriority IN ('1-URGENT', '2-HIGH')
-  AND o_orderkey IN (
-    SELECT l_orderkey FROM lineitem WHERE {_chan_sql(_CATALOG)}
-    GROUP BY l_orderkey HAVING COUNT(DISTINCT l_suppkey) > 1)
-  AND o_orderkey NOT IN (
-    SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R')
-"""
-
-
-# --------------------------------------------------------------------------
-# q17 shape: triple-subset quantity statistics joined on part.
-# reference: benchmarks/queries-tpcds/q17.sql
-# --------------------------------------------------------------------------
-def tpcds_q17_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q17's store-sales/store-returns/catalog-sales quantity panel:
-    count/avg/stddev/cov of quantity per part computed over three
-    disjoint subsets (store channel, returned lines, catalog channel)
-    and inner-joined on part — three aggregate spines, one join key."""
-    t = tables(spark, sf, "lineitem")
-    li = t.lineitem
-
-    def stats(cond, tag: str) -> DataFrame:
-        # stddev/cov from exact decimal power sums (sum, sum-of-squares):
-        # native STDDEV_SAMP is an order-dependent float reduction whose
-        # engine-specific accumulation can cross the rounding boundary.
-        # With exact sums pinned, both engines evaluate the SAME double
-        # expression tree -> bit-identical results; variance is clamped
-        # at 0 against cancellation noise for constant groups.
-        n = F.count(F.lit(1))
-        s1 = F.sum(D("l_quantity")).cast("double")
-        s2 = F.sum(
-            D(F.col("l_quantity") * F.col("l_quantity"), 28, 4)
-        ).cast("double")
-        var = F.greatest(F.lit(0.0), (s2 - s1 * s1 / n) / (n - 1))
-        return (
-            li.where(cond)
-            .groupBy("l_partkey")
-            .agg(
-                n.alias(f"{tag}_cnt"),
-                F.round(s1 / n, 6).alias(f"{tag}_avg"),
-                F.round(F.sqrt(var), 6).alias(f"{tag}_std"),
-                F.round(F.sqrt(var) / (s1 / n), 6).alias(f"{tag}_cov"),
-            )
-            .where(F.col(f"{tag}_cnt") >= 3)
-        )
-
-    ss = stats(_chan(_STORE) & (F.col("l_returnflag") != "R"), "ss")
-    sr = stats(F.col("l_returnflag") == "R", "sr").withColumnRenamed(
-        "l_partkey", "sr_pk"
-    )
-    cs = stats(_chan(_CATALOG) & (F.col("l_returnflag") != "R"), "cs").withColumnRenamed(
-        "l_partkey", "cs_pk"
-    )
-    return (
-        ss.join(sr, F.col("l_partkey") == F.col("sr_pk"))
-        .join(cs, F.col("l_partkey") == F.col("cs_pk"))
-        .select(
-            "l_partkey",
-            "ss_cnt", "ss_avg", "ss_std", "ss_cov",
-            "sr_cnt", "sr_avg", "sr_std", "sr_cov",
-            "cs_cnt", "cs_avg", "cs_std", "cs_cov",
-        )
-        .orderBy("l_partkey")
-        .limit(100)
-    )
-
-
-def _q17_stats_sql(cond: str, tag: str) -> str:
-    # Mirrors the Spark side exactly: stddev/cov from exact decimal power
-    # sums, same double expression tree, variance clamped at 0.
-    s1 = "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"
-    s2 = "CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS DOUBLE)"
-    var = f"GREATEST(0.0, ({s2} - {s1} * {s1} / COUNT(*)) / (COUNT(*) - 1))"
-    return f"""
-{tag} AS (
-  SELECT l_partkey, COUNT(*) AS {tag}_cnt,
-         ROUND({s1} / COUNT(*), 6) AS {tag}_avg,
-         ROUND(SQRT({var}), 6) AS {tag}_std,
-         ROUND(SQRT({var}) / ({s1} / COUNT(*)), 6) AS {tag}_cov
-  FROM lineitem WHERE {cond}
-  GROUP BY 1 HAVING COUNT(*) >= 3)"""
-
-
-TPCDS_Q17_SQL = (
-    "WITH "
-    + _q17_stats_sql(f"{_chan_sql(_STORE)} AND l_returnflag <> 'R'", "ss")[1:]
-    + ","
-    + _q17_stats_sql("l_returnflag = 'R'", "sr")
-    + ","
-    + _q17_stats_sql(f"{_chan_sql(_CATALOG)} AND l_returnflag <> 'R'", "cs")
-    + """
-SELECT ss.l_partkey,
-       ss_cnt, ss_avg, ss_std, ss_cov,
-       sr_cnt, sr_avg, sr_std, sr_cov,
-       cs_cnt, cs_avg, cs_std, cs_cov
-FROM ss JOIN sr ON ss.l_partkey = sr.l_partkey
-JOIN cs ON ss.l_partkey = cs.l_partkey
-ORDER BY ss.l_partkey
-LIMIT 100
-"""
-)
-
-
-def tpcds_q19_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q19: brand revenue panel over cross-nation purchases only
-    (supplier nation <> buyer nation — the store-zip vs customer-zip
-    inequality), with a part-size band filter."""
-    t = tables(
-        spark, sf, "lineitem", "orders", "customer", "supplier", "nation", "part"
-    )
-    n2 = t.nation.select(
-        F.col("n_nationkey").alias("cnk"), F.col("n_name").alias("cust_nation")
-    )
-    j = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.year("o_orderdate") == 1995)
-        .join(t.part, F.col("l_partkey") == F.col("p_partkey"))
-        .where(F.col("p_size").between(1, 15))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(n2, F.col("c_nationkey") == F.col("cnk"))
-        .where(F.col("n_name") != F.col("cust_nation"))
-    )
-    return (
-        j.groupBy("p_brand")
-        .agg(
-            F.sum(_rev()).cast("double").alias("ext_price"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .orderBy("p_brand")
-        .limit(100)
-    )
-
-
-TPCDS_Q19_SQL = f"""
-SELECT p_brand, CAST(SUM({_REV_SQL}) AS DOUBLE) AS ext_price,
-       COUNT(*) AS n_lines
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-WHERE year(o_orderdate) = 1995 AND p_size BETWEEN 1 AND 15
-  AND sn.n_name <> cn.n_name
-GROUP BY p_brand
-ORDER BY p_brand
-LIMIT 100
-"""
-
-
-def tpcds_q20_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q98 family, catalog channel + Q2 window (ds q20)."""
-    return _share_shape(spark, sf, _CATALOG, 2)
 
 
 # --------------------------------------------------------------------------
@@ -784,78 +321,6 @@ LIMIT 100
 """
 
 
-def _stats_panel(spark, sf, agg_fn, agg_sql: str, name: str):
-    """q17 family panel builder for q25 (sums) / q29 (quantity sums)."""
-    t = tables(spark, sf, "lineitem")
-    li = t.lineitem
-
-    def stats(cond, tag: str) -> DataFrame:
-        return (
-            li.where(cond)
-            .groupBy("l_partkey")
-            .agg(agg_fn(tag), F.count(F.lit(1)).alias(f"{tag}_cnt"))
-            .where(F.col(f"{tag}_cnt") >= 3)
-        )
-
-    ss = stats(_chan(_STORE) & (F.col("l_returnflag") != "R"), "ss")
-    sr = stats(F.col("l_returnflag") == "R", "sr").withColumnRenamed(
-        "l_partkey", "sr_pk"
-    )
-    cs = stats(_chan(_CATALOG) & (F.col("l_returnflag") != "R"), "cs").withColumnRenamed(
-        "l_partkey", "cs_pk"
-    )
-    return (
-        ss.join(sr, F.col("l_partkey") == F.col("sr_pk"))
-        .join(cs, F.col("l_partkey") == F.col("cs_pk"))
-        .select(
-            "l_partkey",
-            f"ss_{name}", "ss_cnt", f"sr_{name}", "sr_cnt",
-            f"cs_{name}", "cs_cnt",
-        )
-        .orderBy("l_partkey")
-        .limit(100)
-    )
-
-
-def _stats_panel_sql(agg_sql: str, name: str) -> str:
-    def blk(cond: str, tag: str) -> str:
-        return (
-            f"{tag} AS (SELECT l_partkey, {agg_sql} AS {tag}_{name}, "
-            f"COUNT(*) AS {tag}_cnt FROM lineitem WHERE {cond} "
-            f"GROUP BY 1 HAVING COUNT(*) >= 3)"
-        )
-
-    return (
-        "WITH "
-        + blk(f"{_chan_sql(_STORE)} AND l_returnflag <> 'R'", "ss")
-        + ", "
-        + blk("l_returnflag = 'R'", "sr")
-        + ", "
-        + blk(f"{_chan_sql(_CATALOG)} AND l_returnflag <> 'R'", "cs")
-        + f"""
-SELECT ss.l_partkey, ss_{name}, ss_cnt, sr_{name}, sr_cnt,
-       cs_{name}, cs_cnt
-FROM ss JOIN sr ON ss.l_partkey = sr.l_partkey
-JOIN cs ON ss.l_partkey = cs.l_partkey
-ORDER BY ss.l_partkey LIMIT 100
-"""
-    )
-
-
-def tpcds_q25_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q17 family with revenue SUM panels (ds q25)."""
-    return _stats_panel(
-        spark,
-        sf,
-        lambda tag: F.sum(_rev()).cast("double").alias(f"{tag}_rev"),
-        "",
-        "rev",
-    )
-
-
-TPCDS_Q25_SQL = _stats_panel_sql(f"CAST(SUM({_REV_SQL}) AS DOUBLE)", "rev")
-
-
 # --------------------------------------------------------------------------
 # q28: six band statistic blocks in one pass (avg / distinct / count).
 # --------------------------------------------------------------------------
@@ -909,165 +374,6 @@ TPCDS_Q28_SQL = (
 )
 
 
-def tpcds_q29_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q17 family with quantity SUM panels (ds q29)."""
-    return _stats_panel(
-        spark,
-        sf,
-        lambda tag: F.sum("l_quantity").cast("bigint").alias(f"{tag}_qty"),
-        "",
-        "qty",
-    )
-
-
-TPCDS_Q29_SQL = _stats_panel_sql("CAST(SUM(l_quantity) AS BIGINT)", "qty")
-
-
-# --------------------------------------------------------------------------
-# q31 shape: per-(nation, quarter) spines chained q1->q2->q3 across two
-# channels. reference: benchmarks/queries-tpcds/q31.sql
-# --------------------------------------------------------------------------
-def tpcds_q31_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q31's county quarter-chain: per customer-nation quarterly
-    revenue spines for the urgent and standard order channels, 6 aliases
-    joined on nation so each row carries q1/q2/q3 of both channels;
-    nations where the urgent channel accelerated faster than standard in
-    BOTH quarter steps (decimal cross-multiplied)."""
-    t = tables(spark, sf, "orders", "customer")
-    o = t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-    base = o.where(F.year("o_orderdate") == 1995).select(
-        "c_nationkey",
-        F.quarter("o_orderdate").alias("q"),
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("urgent"),
-        "o_totalprice",
-    )
-    spine = base.groupBy("c_nationkey", "q", "urgent").agg(
-        F.sum(D("o_totalprice")).alias("tot")
-    )
-
-    def alias_q(qn: int, urgent: bool, tag: str) -> DataFrame:
-        return spine.where(
-            (F.col("q") == qn) & (F.col("urgent") == urgent)
-        ).select(F.col("c_nationkey").alias(f"nk_{tag}"), F.col("tot").alias(tag))
-
-    u1, u2, u3 = (alias_q(i, True, f"u{i}") for i in (1, 2, 3))
-    s1, s2, s3 = (alias_q(i, False, f"s{i}") for i in (1, 2, 3))
-    j = (
-        u1.join(u2, F.col("nk_u1") == F.col("nk_u2"))
-        .join(u3, F.col("nk_u1") == F.col("nk_u3"))
-        .join(s1, F.col("nk_u1") == F.col("nk_s1"))
-        .join(s2, F.col("nk_u1") == F.col("nk_s2"))
-        .join(s3, F.col("nk_u1") == F.col("nk_s3"))
-        .where(
-            (F.col("u2") * F.col("s1") > F.col("u1") * F.col("s2"))
-            & (F.col("u3") * F.col("s2") > F.col("u2") * F.col("s3"))
-        )
-    )
-    return (
-        j.select(
-            F.col("nk_u1").alias("c_nationkey"),
-            F.round(F.col("u2").cast("double") / F.col("u1").cast("double"), 6).alias("urgent_q1_q2"),
-            F.round(F.col("u3").cast("double") / F.col("u2").cast("double"), 6).alias("urgent_q2_q3"),
-            F.round(F.col("s2").cast("double") / F.col("s1").cast("double"), 6).alias("std_q1_q2"),
-            F.round(F.col("s3").cast("double") / F.col("s2").cast("double"), 6).alias("std_q2_q3"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-TPCDS_Q31_SQL = """
-WITH spine AS (
-  SELECT c_nationkey, quarter(o_orderdate) AS q,
-         o_orderpriority IN ('1-URGENT', '2-HIGH') AS urgent,
-         SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS tot
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE year(o_orderdate) = 1995
-  GROUP BY 1, 2, 3)
-SELECT u1.c_nationkey,
-       ROUND(u2.tot / u1.tot, 6) AS urgent_q1_q2,
-       ROUND(u3.tot / u2.tot, 6) AS urgent_q2_q3,
-       ROUND(s2.tot / s1.tot, 6) AS std_q1_q2,
-       ROUND(s3.tot / s2.tot, 6) AS std_q2_q3
-FROM spine u1 JOIN spine u2 ON u1.c_nationkey = u2.c_nationkey
-JOIN spine u3 ON u1.c_nationkey = u3.c_nationkey
-JOIN spine s1 ON u1.c_nationkey = s1.c_nationkey
-JOIN spine s2 ON u1.c_nationkey = s2.c_nationkey
-JOIN spine s3 ON u1.c_nationkey = s3.c_nationkey
-WHERE u1.q = 1 AND u1.urgent AND u2.q = 2 AND u2.urgent
-  AND u3.q = 3 AND u3.urgent
-  AND s1.q = 1 AND NOT s1.urgent AND s2.q = 2 AND NOT s2.urgent
-  AND s3.q = 3 AND NOT s3.urgent
-  AND u2.tot * s1.tot > u1.tot * s2.tot
-  AND u3.tot * s2.tot > u2.tot * s3.tot
-ORDER BY u1.c_nationkey
-"""
-
-
-# --------------------------------------------------------------------------
-# q33 shape: dim-subquery filter + per-channel manufacturer totals UNION'd.
-# reference: benchmarks/queries-tpcds/q33.sql
-# --------------------------------------------------------------------------
-def tpcds_q33_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q33's manufacturer roll-call: the qualifying manufacturer set
-    comes from a dim subquery (brands carrying any PROMO-type part); each
-    channel aggregates revenue per brand over that set (semi-join), the
-    three spines UNION ALL and re-aggregate. The dim probe is bounded;
-    each channel reads the fact once."""
-    t = tables(spark, sf, "lineitem", "orders", "part")
-    promo_brands = (
-        t.part.where(F.col("p_type").startswith("PROMO"))
-        .select("p_brand")
-        .distinct()
-    )
-    base = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(
-            (F.year("o_orderdate") == 1995) & (F.month("o_orderdate") == 3)
-        )
-        .join(t.part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(promo_brands, "p_brand", "left_semi")
-    )
-
-    def channel(k: int) -> DataFrame:
-        return (
-            base.where(_chan(k))
-            .groupBy("p_brand")
-            .agg(F.sum(_rev()).alias("total_sales"))
-        )
-
-    u = channel(_STORE).unionAll(channel(_WEB)).unionAll(channel(_CATALOG))
-    return (
-        u.groupBy("p_brand")
-        .agg(F.sum("total_sales").cast("double").alias("total_sales"))
-        .orderBy("p_brand")
-        .limit(100)
-    )
-
-
-def _q33_channel_sql(k: int) -> str:
-    return f"""
-  SELECT p_brand, SUM({_REV_SQL}) AS total_sales
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN part ON l_partkey = p_partkey
-  WHERE year(o_orderdate) = 1995 AND month(o_orderdate) = 3
-    AND {_chan_sql(k)}
-    AND p_brand IN (SELECT DISTINCT p_brand FROM part
-                    WHERE p_type LIKE 'PROMO%')
-  GROUP BY p_brand"""
-
-
-TPCDS_Q33_SQL = (
-    "SELECT p_brand, CAST(SUM(total_sales) AS DOUBLE) AS total_sales FROM ("
-    + _q33_channel_sql(_STORE)
-    + "\n  UNION ALL\n"
-    + _q33_channel_sql(_WEB)
-    + "\n  UNION ALL\n"
-    + _q33_channel_sql(_CATALOG)
-    + "\n) u GROUP BY p_brand ORDER BY p_brand LIMIT 100"
-)
-
-
 # --------------------------------------------------------------------------
 # q35 shape: OR of two correlated EXISTS + multi-stat conditional aggregate.
 # reference: benchmarks/queries-tpcds/q35.sql
@@ -1115,69 +421,6 @@ WHERE EXISTS (
       AND o_totalprice > 300000)
 GROUP BY c_nationkey, c_mktsegment
 ORDER BY c_nationkey, c_mktsegment
-"""
-
-
-# --------------------------------------------------------------------------
-# q36 shape: ROLLUP + GROUPING() + rank within each grouping level.
-# reference: benchmarks/queries-tpcds/q36.sql (lochierarchy ranking)
-# --------------------------------------------------------------------------
-def tpcds_q36_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """Revenue ROLLUP over (priority, segment) with ds q36's lochierarchy
-    pattern: GROUPING() builds the level indicator and a window ranks rows
-    WITHIN each (level, parent) group — rank-over-grouping-sets, a combo no
-    other inventory entry exercises. Ranking keys on exact decimal revenue
-    with a name tiebreak, so no float order ambiguity."""
-    t = tables(spark, sf, "orders", "customer")
-    o = t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-    rolled = o.rollup("o_orderpriority", "c_mktsegment").agg(
-        F.sum(D("o_totalprice")).alias("rev"),
-        # grouping() is only resolvable INSIDE the grouping-sets aggregate
-        (F.grouping("o_orderpriority") + F.grouping("c_mktsegment")).alias(
-            "lochierarchy"
-        ),
-        F.grouping("c_mktsegment").alias("g_seg"),
-    )
-    w = Window.partitionBy(
-        "lochierarchy",
-        F.when(F.col("g_seg") == 1, F.lit(None)).otherwise(
-            F.col("o_orderpriority")
-        ),
-    ).orderBy(F.desc("rev"), F.asc_nulls_first("c_mktsegment"))
-    return (
-        rolled.select(
-            "o_orderpriority",
-            "c_mktsegment",
-            F.col("rev").cast("double").alias("total_rev"),
-            "lochierarchy",
-            F.row_number().over(w).alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.desc("lochierarchy"),
-            F.asc_nulls_first("o_orderpriority"),
-            "rank_within_parent",
-        )
-    )
-
-
-TPCDS_Q36_SQL = """
-WITH rolled AS (
-  SELECT o_orderpriority, c_mktsegment,
-    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev,
-    GROUPING(o_orderpriority) + GROUPING(c_mktsegment) AS lochierarchy,
-    GROUPING(c_mktsegment) AS g_seg
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY ROLLUP (o_orderpriority, c_mktsegment))
-SELECT o_orderpriority, c_mktsegment,
-  CAST(rev AS DOUBLE) AS total_rev,
-  lochierarchy,
-  ROW_NUMBER() OVER (
-    PARTITION BY lochierarchy,
-                 CASE WHEN g_seg = 1 THEN NULL ELSE o_orderpriority END
-    ORDER BY rev DESC, c_mktsegment ASC NULLS FIRST) AS rank_within_parent
-FROM rolled
-ORDER BY lochierarchy DESC, o_orderpriority ASC NULLS FIRST,
-         rank_within_parent
 """
 
 
@@ -1247,73 +490,6 @@ LIMIT 100
 
 
 # --------------------------------------------------------------------------
-# q44 shape: best and worst performers ranked independently, joined on
-# rank. reference: benchmarks/queries-tpcds/q44.sql
-# --------------------------------------------------------------------------
-def tpcds_q44_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-10 best and worst parts by average lineitem revenue, paired by
-    rank — ds q44's ascending/descending double ranking. Both rankings
-    reduce via orderBy().limit(10) (TakeOrderedAndProject) before the
-    10-row ranking window, so no full-cardinality global sort exists."""
-    t = tables(spark, sf, "lineitem", "part")
-    perf = t.lineitem.groupBy("l_partkey").agg(
-        F.round(F.sum(_rev()).cast("double") / F.count(F.lit(1)), 6).alias(
-            "avg_rev"
-        )
-    )
-
-    def ranked(df: DataFrame, order: list, alias: str) -> DataFrame:
-        top = df.orderBy(*order).limit(10)
-        w = Window.orderBy(*order)
-        return top.select(
-            F.row_number().over(w).alias("rnk"),
-            F.col("l_partkey").alias(f"{alias}_partkey"),
-        )
-
-    best = ranked(perf, [F.desc("avg_rev"), F.asc("l_partkey")], "best")
-    worst = ranked(perf, [F.asc("avg_rev"), F.asc("l_partkey")], "worst")
-    p = t.part.select("p_partkey", "p_name")
-    return (
-        best.join(worst, "rnk")
-        .join(
-            p.select(
-                F.col("p_partkey").alias("bk"), F.col("p_name").alias("best_part")
-            ),
-            F.col("best_partkey") == F.col("bk"),
-        )
-        .join(
-            p.select(
-                F.col("p_partkey").alias("wk"), F.col("p_name").alias("worst_part")
-            ),
-            F.col("worst_partkey") == F.col("wk"),
-        )
-        .select("rnk", "best_part", "worst_part")
-        .orderBy("rnk")
-    )
-
-
-TPCDS_Q44_SQL = f"""
-WITH perf AS (
-  SELECT l_partkey,
-    ROUND(CAST(SUM({_REV_SQL}) AS DOUBLE) / COUNT(*), 6) AS avg_rev
-  FROM lineitem GROUP BY l_partkey),
-best AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY avg_rev DESC, l_partkey) AS rnk,
-         l_partkey FROM perf
-  ORDER BY avg_rev DESC, l_partkey LIMIT 10),
-worst AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY avg_rev ASC, l_partkey) AS rnk,
-         l_partkey FROM perf
-  ORDER BY avg_rev ASC, l_partkey LIMIT 10)
-SELECT best.rnk AS rnk, pb.p_name AS best_part, pw.p_name AS worst_part
-FROM best JOIN worst ON best.rnk = worst.rnk
-JOIN part pb ON best.l_partkey = pb.p_partkey
-JOIN part pw ON worst.l_partkey = pw.p_partkey
-ORDER BY rnk
-"""
-
-
-# --------------------------------------------------------------------------
 # q45: IN-list OR IN-subquery predicate.
 # --------------------------------------------------------------------------
 def tpcds_q45_shape(spark: SparkSession, sf: str) -> DataFrame:
@@ -1360,87 +536,6 @@ WHERE c_custkey IN ({_Q45_KEYS})
 GROUP BY n_name
 ORDER BY n_name
 """
-
-
-# --------------------------------------------------------------------------
-# q49 shape: per-channel worst-return-ratio top-N, ranked and UNION'd.
-# reference: benchmarks/queries-tpcds/q49.sql
-# --------------------------------------------------------------------------
-def tpcds_q49_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q49's worst-returns report: per channel and part, the returned
-    vs shipped quantity ratio, ranked inside each channel (partitioned
-    window — never a global sort) with a unique part tiebreak; the
-    channel top-10s are UNION'd. Ratios order on exact integer-derived
-    doubles, so ranks agree across engines."""
-    t = tables(spark, sf, "lineitem", "orders")
-    li, o = t.lineitem, t.orders
-    base = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).where(
-        F.year("o_orderdate") == 1995
-    )
-
-    def channel(name: str, modes: int) -> DataFrame:
-        per_part = (
-            base.where(_chan(modes))
-            .groupBy("l_partkey")
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("l_returnflag") == "R", F.col("l_quantity")
-                    ).otherwise(0.0)
-                )
-                .cast("bigint")
-                .alias("ret_qty"),
-                F.sum("l_quantity").cast("bigint").alias("qty"),
-            )
-            .where(F.col("qty") > 0)
-        )
-        w = Window.partitionBy(F.lit(name)).orderBy(
-            F.desc(F.col("ret_qty").cast("double") / F.col("qty")),
-            F.asc("l_partkey"),
-        )
-        return per_part.select(
-            F.lit(name).alias("channel"),
-            "l_partkey",
-            F.round(F.col("ret_qty").cast("double") / F.col("qty"), 6).alias(
-                "ratio"
-            ),
-            F.row_number().over(w).alias("rnk"),
-        ).where(F.col("rnk") <= 10)
-
-    return (
-        channel("store", _STORE)
-        .unionAll(channel("web", _WEB))
-        .unionAll(channel("catalog", _CATALOG))
-        .orderBy("channel", "rnk")
-    )
-
-
-def _q49_channel_sql(name: str, modes: int) -> str:
-    return f"""
-  SELECT '{name}' AS channel, l_partkey,
-         ROUND(CAST(ret_qty AS DOUBLE) / qty, 6) AS ratio,
-         ROW_NUMBER() OVER (
-           ORDER BY CAST(ret_qty AS DOUBLE) / qty DESC, l_partkey) AS rnk
-  FROM (
-    SELECT l_partkey,
-      CAST(SUM(CASE WHEN l_returnflag = 'R' THEN l_quantity ELSE 0 END)
-           AS BIGINT) AS ret_qty,
-      CAST(SUM(l_quantity) AS BIGINT) AS qty
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE year(o_orderdate) = 1995 AND {_chan_sql(modes)}
-    GROUP BY l_partkey HAVING SUM(l_quantity) > 0) t
-  QUALIFY rnk <= 10"""
-
-
-TPCDS_Q49_SQL = (
-    "SELECT * FROM ("
-    + _q49_channel_sql("store", _STORE)
-    + "\n  UNION ALL\n"
-    + _q49_channel_sql("web", _WEB)
-    + "\n  UNION ALL\n"
-    + _q49_channel_sql("catalog", _CATALOG)
-    + "\n) u ORDER BY channel, rnk"
-)
 
 
 def _fact(spark, sf):
@@ -1492,151 +587,6 @@ FROM (SELECT n_name, date_diff('day', o_orderdate, l_shipdate) AS lag_d
       WHERE l_returnflag = 'R')
 GROUP BY n_name ORDER BY n_name
 """
-
-
-# -- q56/q60 (q33 family): dim-filtered channel unions ---------------------
-def _channel_union_shape(spark, sf, dim_filter, tag: str) -> DataFrame:
-    t = tables(spark, sf, "part")
-    base = (
-        _fact(spark, sf)
-        .where((F.year("o_orderdate") == 1995) & (F.month("o_orderdate") == 6))
-        .join(t.part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(
-            t.part.where(dim_filter).select("p_brand").distinct(),
-            "p_brand",
-            "left_semi",
-        )
-    )
-    u = None
-    for k in (_STORE, _WEB, _CATALOG):
-        c = base.where(_chan(k)).groupBy("p_brand").agg(
-            F.sum(_rev()).alias("total_sales")
-        )
-        u = c if u is None else u.unionAll(c)
-    return (
-        u.groupBy("p_brand")
-        .agg(F.sum("total_sales").cast("double").alias("total_sales"))
-        .orderBy("p_brand")
-        .limit(100)
-    )
-
-
-def _channel_union_sql(dim_sql: str) -> str:
-    legs = "\n  UNION ALL\n".join(
-        f"""
-  SELECT p_brand, SUM({_REV_SQL}) AS total_sales
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  JOIN part ON l_partkey = p_partkey
-  WHERE year(o_orderdate) = 1995 AND month(o_orderdate) = 6
-    AND {_chan_sql(k)}
-    AND p_brand IN (SELECT DISTINCT p_brand FROM part WHERE {dim_sql})
-  GROUP BY p_brand"""
-        for k in (_STORE, _WEB, _CATALOG)
-    )
-    return (
-        "SELECT p_brand, CAST(SUM(total_sales) AS DOUBLE) AS total_sales"
-        " FROM (" + legs + "\n) u GROUP BY p_brand ORDER BY p_brand LIMIT 100"
-    )
-
-
-def tpcds_q56_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q33 family, brand set from a name-prefix filter (ds q56)."""
-    return _channel_union_shape(
-        spark, sf, F.col("p_name").startswith("a"), "q56"
-    )
-
-
-# --------------------------------------------------------------------------
-# q59 shape: weekly dow matrix, year-over-year ratio join.
-# reference: benchmarks/queries-tpcds/q59.sql
-# --------------------------------------------------------------------------
-def tpcds_q59_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q59's wss spine: per (store, week) revenue split across the
-    seven weekdays by conditional aggregation, then week w of 1995 joined
-    to week w of 1996 per store and each weekday ratioed — the join is
-    spine-to-spine on (store, week)."""
-    t = tables(spark, sf, "lineitem", "orders")
-    base = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    ).select(
-        (F.col("l_suppkey") % 100).alias("store"),
-        F.year("o_orderdate").alias("y"),
-        F.weekofyear("o_orderdate").alias("wk"),
-        F.dayofweek("o_orderdate").alias("dow"),  # 1=Sunday .. 7=Saturday
-        D("l_extendedprice").alias("price"),
-    )
-    wss = base.groupBy("store", "y", "wk").agg(
-        *[
-            F.sum(F.when(F.col("dow") == i + 1, F.col("price"))).alias(
-                f"{d}_sales"
-            )
-            for i, d in enumerate(_DOW)
-        ]
-    )
-    y1 = wss.where(F.col("y") == 1995)
-    y2 = wss.where(F.col("y") == 1996).select(
-        F.col("store").alias("store2"),
-        F.col("wk").alias("wk2"),
-        *[F.col(f"{d}_sales").alias(f"{d}_sales2") for d in _DOW],
-    )
-    j = y1.join(
-        y2, (F.col("store") == F.col("store2")) & (F.col("wk") == F.col("wk2"))
-    )
-    return (
-        j.select(
-            "store",
-            "wk",
-            *[
-                F.round(
-                    F.col(f"{d}_sales").cast("double")
-                    / F.col(f"{d}_sales2").cast("double"),
-                    6,
-                ).alias(f"{d}_ratio")
-                for d in _DOW
-            ],
-        )
-        .orderBy("store", "wk")
-        .limit(100)
-    )
-
-
-def _q59_dow_sql(i: int, d: str) -> str:
-    # DuckDB dayofweek: 0=Sunday .. 6=Saturday (Spark is 1..7)
-    return (
-        f"SUM(CASE WHEN dayofweek(o_orderdate) = {i} THEN "
-        f"CAST(l_extendedprice AS DECIMAL(18,2)) END) AS {d}_sales"
-    )
-
-
-TPCDS_Q59_SQL = (
-    """
-WITH wss AS (
-  SELECT l_suppkey % 100 AS store, year(o_orderdate) AS y,
-         weekofyear(o_orderdate) AS wk,
-         """
-    + ",\n         ".join(_q59_dow_sql(i, d) for i, d in enumerate(_DOW))
-    + """
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2, 3)
-SELECT y1.store, y1.wk,
-       """
-    + ",\n       ".join(
-        f"ROUND(y1.{d}_sales / y2.{d}_sales, 6) AS {d}_ratio" for d in _DOW
-    )
-    + """
-FROM wss y1 JOIN wss y2 ON y1.store = y2.store AND y1.wk = y2.wk
-WHERE y1.y = 1995 AND y2.y = 1996
-ORDER BY y1.store, y1.wk
-LIMIT 100
-"""
-)
-
-
-def tpcds_q60_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q33 family, brand set from a size-band filter (ds q60)."""
-    return _channel_union_shape(
-        spark, sf, F.col("p_size").between(20, 30), "q60"
-    )
 
 
 def tpcds_q62_shape(spark: SparkSession, sf: str) -> DataFrame:
@@ -1788,201 +738,6 @@ ORDER BY nation
 """
 
 
-# --------------------------------------------------------------------------
-# q67 shape: window rank over a grouped aggregate, top-N per partition.
-# reference: benchmarks/queries-tpcds/q67.sql
-# --------------------------------------------------------------------------
-def tpcds_q67_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-3 revenue months per order priority: groupBy aggregate, then
-    rank() partitioned by priority — ds q67's rank-over-rollup shape. The
-    window runs over aggregate output (|priorities| x 12 rows per key),
-    partitioned — never a global sort."""
-    t = tables(spark, sf, "orders")
-    monthly = t.orders.groupBy(
-        "o_orderpriority",
-        F.year("o_orderdate").alias("y"),
-        F.month("o_orderdate").alias("m"),
-    ).agg(F.sum(D("o_totalprice")).alias("tot"))
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("tot"), F.asc("y"), F.asc("m")
-    )
-    return (
-        monthly.select(
-            "o_orderpriority",
-            "y",
-            "m",
-            F.col("tot").cast("double").alias("month_sales"),
-            F.row_number().over(w).alias("rk"),
-        )
-        .where(F.col("rk") <= 3)
-        .orderBy("o_orderpriority", "rk")
-    )
-
-
-TPCDS_Q67_SQL = """
-WITH monthly AS (
-  SELECT o_orderpriority,
-    CAST(year(o_orderdate) AS INTEGER) AS y,
-    CAST(month(o_orderdate) AS INTEGER) AS m,
-    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS tot
-  FROM orders
-  GROUP BY 1, 2, 3)
-SELECT * FROM (
-  SELECT o_orderpriority, y, m,
-    CAST(tot AS DOUBLE) AS month_sales,
-    ROW_NUMBER() OVER (
-      PARTITION BY o_orderpriority ORDER BY tot DESC, y, m) AS rk
-  FROM monthly)
-WHERE rk <= 3
-ORDER BY o_orderpriority, rk
-"""
-
-
-# -- q69 (q10 family): NOT EXISTS in BOTH other channels -------------------
-def tpcds_q69_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q10's sibling: active in store, absent from web AND catalog
-    (ds q69)."""
-    t = tables(spark, sf, "customer", "nation")
-    base = _fact(spark, sf).where(F.year("o_orderdate") == 1995)
-
-    def custs(k: int) -> DataFrame:
-        return base.where(_chan(k)).select("o_custkey").distinct()
-
-    gated = (
-        t.customer.join(
-            custs(_STORE), F.col("c_custkey") == F.col("o_custkey"), "left_semi"
-        )
-        .join(custs(_WEB), F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .join(
-            custs(_CATALOG), F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-        )
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    return (
-        gated.groupBy("n_name", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("n_name", "c_mktsegment")
-    )
-
-
-TPCDS_Q69_SQL = f"""
-SELECT n_name, c_mktsegment, COUNT(*) AS n_customers
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-WHERE EXISTS (
-    SELECT 1 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995
-      AND {_chan_sql(_STORE)})
-  AND NOT EXISTS (
-    SELECT 1 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995
-      AND {_chan_sql(_WEB)})
-  AND NOT EXISTS (
-    SELECT 1 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995
-      AND {_chan_sql(_CATALOG)})
-GROUP BY n_name, c_mktsegment
-ORDER BY n_name, c_mktsegment
-"""
-
-
-# --------------------------------------------------------------------------
-# q70 shape: ranked semi-join feeding ROLLUP + rank-within-parent.
-# reference: benchmarks/queries-tpcds/q70.sql
-# --------------------------------------------------------------------------
-def tpcds_q70_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q70's two-stage ranking: nations ranked by total profit (the
-    subquery's rank <= 5 semi-join — a window over a 25-row nation
-    aggregate, bounded), then ROLLUP(nation, supplier-group) over only
-    the qualifying nations with GROUPING() lochierarchy and a rank within
-    each parent level."""
-    t = tables(spark, sf, "lineitem", "supplier", "nation")
-    profit = (
-        t.lineitem.join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            "n_name",
-            (F.col("s_suppkey") % 10).alias("sgrp"),
-            D(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")), 27, 4
-            ).alias("p"),
-        )
-    )
-    by_nation = profit.groupBy("n_name").agg(F.sum("p").alias("tot"))
-    top5 = (
-        by_nation.withColumn(
-            "rk",
-            F.rank().over(Window.orderBy(F.desc("tot"), F.asc("n_name"))),
-        )
-        .where(F.col("rk") <= 5)
-        .select(F.col("n_name").alias("top_nation"))
-    )
-    rolled = (
-        profit.join(top5, F.col("n_name") == F.col("top_nation"), "left_semi")
-        .rollup("n_name", "sgrp")
-        .agg(
-            F.sum("p").alias("total_sum"),
-            (F.grouping("n_name") + F.grouping("sgrp")).alias("lochierarchy"),
-            F.grouping("sgrp").alias("g_s"),
-        )
-    )
-    w = Window.partitionBy(
-        "lochierarchy",
-        F.when(F.col("g_s") == 1, F.lit(None)).otherwise(F.col("n_name")),
-    ).orderBy(
-        F.desc("total_sum"),
-        F.asc_nulls_first("sgrp"),
-        F.asc_nulls_first("n_name"),
-    )
-    return (
-        rolled.select(
-            F.col("total_sum").cast("double").alias("total_sum"),
-            "n_name",
-            "sgrp",
-            "lochierarchy",
-            F.row_number().over(w).alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.desc("lochierarchy"),
-            F.asc_nulls_first("n_name"),
-            "rank_within_parent",
-        )
-        .limit(100)
-    )
-
-
-TPCDS_Q70_SQL = """
-WITH profit AS (
-  SELECT n_name, s_suppkey % 10 AS sgrp,
-         CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,4)) AS p
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey),
-top5 AS (
-  SELECT n_name FROM (
-    SELECT n_name,
-           RANK() OVER (ORDER BY SUM(p) DESC, n_name) AS rk
-    FROM profit GROUP BY n_name) t
-  WHERE rk <= 5),
-rolled AS (
-  SELECT SUM(p) AS total_sum, n_name, sgrp,
-         GROUPING(n_name) + GROUPING(sgrp) AS lochierarchy,
-         GROUPING(sgrp) AS g_s
-  FROM profit
-  WHERE n_name IN (SELECT n_name FROM top5)
-  GROUP BY ROLLUP (n_name, sgrp))
-SELECT CAST(total_sum AS DOUBLE) AS total_sum, n_name, sgrp, lochierarchy,
-       ROW_NUMBER() OVER (
-         PARTITION BY lochierarchy,
-                      CASE WHEN g_s = 1 THEN NULL ELSE n_name END
-         ORDER BY total_sum DESC, sgrp ASC NULLS FIRST,
-                  n_name ASC NULLS FIRST)
-         AS rank_within_parent
-FROM rolled
-ORDER BY lochierarchy DESC, n_name ASC NULLS FIRST, rank_within_parent
-LIMIT 100
-"""
-
-
 # -- q71 (time-dim union): brand revenue across unioned date windows ------
 def tpcds_q71_shape(spark: SparkSession, sf: str) -> DataFrame:
     """ds q71: the time dimension assembled as a UNION of three windows
@@ -2059,96 +814,6 @@ LIMIT 100
 
 
 # --------------------------------------------------------------------------
-# q75 shape: channel-union yearly sales-minus-returns, prev/curr year join
-# with an exact shrink predicate. reference: benchmarks/queries-tpcds/q75.sql
-# --------------------------------------------------------------------------
-def tpcds_q75_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q75's year-over-year decline report: per-channel per-(year,
-    part) net quantity (sold minus returned) UNION ALL'd and re-grouped,
-    then 1995 joined to 1996 keeping parts whose sales shrank below 90%
-    — the predicate is integer math (curr*10 < prev*9), no float
-    boundary."""
-    t = tables(spark, sf, "lineitem", "orders")
-    base = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    )
-
-    def channel(modes: int) -> DataFrame:
-        return (
-            base.where(_chan(modes))
-            .groupBy(F.year("o_orderdate").alias("y"), "l_partkey")
-            .agg(
-                F.sum(
-                    F.when(F.col("l_returnflag") != "R", F.col("l_quantity"))
-                    .otherwise(-F.col("l_quantity"))
-                )
-                .cast("bigint")
-                .alias("net_qty")
-            )
-        )
-
-    u = (
-        channel(_STORE)
-        .unionAll(channel(_WEB))
-        .unionAll(channel(_CATALOG))
-        .groupBy("y", "l_partkey")
-        .agg(F.sum("net_qty").alias("net_qty"))
-    )
-    prev = u.where(F.col("y") == 1995).select(
-        "l_partkey", F.col("net_qty").alias("prev_qty")
-    )
-    curr = u.where(F.col("y") == 1996).select(
-        F.col("l_partkey").alias("pk2"), F.col("net_qty").alias("curr_qty")
-    )
-    return (
-        prev.join(curr, F.col("l_partkey") == F.col("pk2"))
-        .where(
-            (F.col("prev_qty") > 0)
-            & (F.col("curr_qty") * 10 < F.col("prev_qty") * 9)
-        )
-        .select(
-            "l_partkey",
-            "prev_qty",
-            "curr_qty",
-            (F.col("curr_qty") - F.col("prev_qty")).alias("qty_diff"),
-        )
-        .orderBy("l_partkey")
-        .limit(100)
-    )
-
-
-def _q75_channel_sql(modes: int) -> str:
-    return f"""
-  SELECT year(o_orderdate) AS y, l_partkey,
-    CAST(SUM(CASE WHEN l_returnflag <> 'R' THEN l_quantity
-             ELSE -l_quantity END) AS BIGINT) AS net_qty
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE {_chan_sql(modes)}
-  GROUP BY 1, 2"""
-
-
-TPCDS_Q75_SQL = (
-    "WITH u AS (SELECT y, l_partkey, CAST(SUM(net_qty) AS BIGINT) AS net_qty"
-    " FROM ("
-    + _q75_channel_sql(_STORE)
-    + "\n  UNION ALL\n"
-    + _q75_channel_sql(_WEB)
-    + "\n  UNION ALL\n"
-    + _q75_channel_sql(_CATALOG)
-    + """
-) c GROUP BY y, l_partkey)
-SELECT p.l_partkey, p.net_qty AS prev_qty, c.net_qty AS curr_qty,
-       c.net_qty - p.net_qty AS qty_diff
-FROM u p JOIN u c ON p.l_partkey = c.l_partkey
-WHERE p.y = 1995 AND c.y = 1996
-  AND p.net_qty > 0 AND c.net_qty * 10 < p.net_qty * 9
-ORDER BY p.l_partkey
-LIMIT 100
-"""
-)
-
-
-# --------------------------------------------------------------------------
 # q76: heterogeneous filtered-projection union census.
 # --------------------------------------------------------------------------
 def tpcds_q76_shape(spark: SparkSession, sf: str) -> DataFrame:
@@ -2202,224 +867,6 @@ TPCDS_Q76_SQL = (
     + "\n  UNION ALL\n"
     + _q76_leg_sql("l_returnflag = 'R'", "returned")
     + "\n) u GROUP BY channel, reason ORDER BY channel, reason"
-)
-
-
-# --------------------------------------------------------------------------
-# q77 shape: per-channel sales/returns FULL OUTER spines + ROLLUP.
-# reference: benchmarks/queries-tpcds/q77.sql
-# --------------------------------------------------------------------------
-def tpcds_q77_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q77's channel P&L: per channel, the sales spine (non-returned
-    revenue per nation) FULL OUTER joins the returns spine (returned
-    revenue per nation); the three channel results UNION ALL and ROLLUP
-    over (channel, nation) with grand totals. All spines are bounded
-    (channels x nations); the rollup is one grouping-sets aggregate."""
-    t = tables(spark, sf, "lineitem", "supplier", "nation")
-    base = (
-        t.lineitem.join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
-    )
-
-    def channel(k: int, name: str) -> DataFrame:
-        sales = (
-            base.where(_chan(k) & (F.col("l_returnflag") != "R"))
-            .groupBy(F.col("n_name").alias("s_nation"))
-            .agg(F.sum(_rev()).alias("sales"))
-        )
-        returns = (
-            base.where(_chan(k) & (F.col("l_returnflag") == "R"))
-            .groupBy(F.col("n_name").alias("r_nation"))
-            .agg(F.sum(_rev()).alias("returns"))
-        )
-        return (
-            sales.join(
-                returns, F.col("s_nation") == F.col("r_nation"), "full_outer"
-            )
-            .select(
-                F.lit(name).alias("channel"),
-                F.coalesce(F.col("s_nation"), F.col("r_nation")).alias(
-                    "nation"
-                ),
-                F.coalesce(F.col("sales"), F.lit(0).cast("decimal(27,4)")).alias(
-                    "sales"
-                ),
-                F.coalesce(
-                    F.col("returns"), F.lit(0).cast("decimal(27,4)")
-                ).alias("returns"),
-            )
-        )
-
-    u = (
-        channel(_STORE, "store")
-        .unionAll(channel(_WEB, "web"))
-        .unionAll(channel(_CATALOG, "catalog"))
-    )
-    return (
-        u.rollup("channel", "nation")
-        .agg(
-            F.sum("sales").cast("double").alias("sales"),
-            F.sum("returns").cast("double").alias("returns"),
-        )
-        .orderBy(
-            F.asc_nulls_first("channel"), F.asc_nulls_first("nation")
-        )
-    )
-
-
-def _q77_channel_sql(k: int, name: str) -> str:
-    return f"""
-  SELECT '{name}' AS channel,
-         COALESCE(s.n_name, r.n_name) AS nation,
-         COALESCE(sales, CAST(0 AS DECIMAL(27,4))) AS sales,
-         COALESCE(returns, CAST(0 AS DECIMAL(27,4))) AS returns
-  FROM (SELECT n_name, SUM({_REV_SQL}) AS sales
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE {_chan_sql(k)} AND l_returnflag <> 'R' GROUP BY n_name) s
-  FULL OUTER JOIN
-       (SELECT n_name, SUM({_REV_SQL}) AS returns
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE {_chan_sql(k)} AND l_returnflag = 'R' GROUP BY n_name) r
-    ON s.n_name = r.n_name"""
-
-
-TPCDS_Q77_SQL = (
-    "SELECT channel, nation, CAST(SUM(sales) AS DOUBLE) AS sales, "
-    "CAST(SUM(returns) AS DOUBLE) AS returns FROM ("
-    + _q77_channel_sql(_STORE, "store")
-    + "\n  UNION ALL\n"
-    + _q77_channel_sql(_WEB, "web")
-    + "\n  UNION ALL\n"
-    + _q77_channel_sql(_CATALOG, "catalog")
-    + """
-) u GROUP BY ROLLUP (channel, nation)
-ORDER BY channel ASC NULLS FIRST, nation ASC NULLS FIRST"""
-)
-
-
-# --------------------------------------------------------------------------
-# q78 shape: per-channel returns-anti-join spines, store LEFT JOIN web and
-# catalog with COALESCE ratios. reference: benchmarks/queries-tpcds/q78.sql
-# --------------------------------------------------------------------------
-def tpcds_q78_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q78's cross-channel loyalty spine: each channel aggregates only
-    never-returned sales (anti-join against the returned (order, part)
-    set — ds's 'wr_order_number is null' LEFT-JOIN-null idiom), grouped
-    by (year, part, customer); the store spine LEFT JOINs the other two
-    and keeps rows with any other-channel activity, computing COALESCE'd
-    ratios. Anti-joins shuffle on the composite key; the three spines are
-    aggregates, so the final joins are spine-to-spine."""
-    t = tables(spark, sf, "lineitem", "orders")
-    returned = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    base = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    ).where(F.year("o_orderdate") == 1995)
-
-    def spine(modes: int, tag: str) -> DataFrame:
-        return (
-            base.where(_chan(modes))
-            .join(returned, ["l_orderkey", "l_partkey"], "left_anti")
-            .groupBy("l_partkey", "o_custkey")
-            .agg(
-                F.sum("l_quantity").cast("bigint").alias(f"{tag}_qty"),
-                F.sum(D("l_extendedprice")).alias(f"{tag}_sp"),
-            )
-        )
-
-    ss = spine(_STORE, "ss")
-    ws = spine(_WEB, "ws").withColumnsRenamed(
-        {"l_partkey": "w_pk", "o_custkey": "w_ck"}
-    )
-    cs = spine(_CATALOG, "cs").withColumnsRenamed(
-        {"l_partkey": "c_pk", "o_custkey": "c_ck"}
-    )
-    out = (
-        ss.join(
-            ws,
-            (F.col("l_partkey") == F.col("w_pk"))
-            & (F.col("o_custkey") == F.col("w_ck")),
-            "left",
-        )
-        .join(
-            cs,
-            (F.col("l_partkey") == F.col("c_pk"))
-            & (F.col("o_custkey") == F.col("c_ck")),
-            "left",
-        )
-        .withColumn(
-            "other_qty",
-            F.coalesce(F.col("ws_qty"), F.lit(0))
-            + F.coalesce(F.col("cs_qty"), F.lit(0)),
-        )
-        .where(F.col("other_qty") > 0)
-    )
-    return (
-        out.select(
-            "l_partkey",
-            "o_custkey",
-            "ss_qty",
-            "other_qty",
-            F.round(
-                F.col("ss_qty").cast("double") / F.col("other_qty"), 6
-            ).alias("ratio"),
-            F.col("ss_sp").cast("double").alias("store_sales"),
-            (
-                F.coalesce(F.col("ws_sp"), F.lit(0).cast("decimal(18,2)"))
-                + F.coalesce(F.col("cs_sp"), F.lit(0).cast("decimal(18,2)"))
-            )
-            .cast("double")
-            .alias("other_sales"),
-        )
-        .orderBy("l_partkey", "o_custkey")
-        .limit(100)
-    )
-
-
-def _q78_spine_sql(modes: int, tag: str) -> str:
-    return f"""
-{tag} AS (
-  SELECT l_partkey, o_custkey,
-         CAST(SUM(l_quantity) AS BIGINT) AS {tag}_qty,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS {tag}_sp
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE year(o_orderdate) = 1995 AND {_chan_sql(modes)}
-    AND NOT EXISTS (
-      SELECT 1 FROM lineitem r
-      WHERE r.l_returnflag = 'R'
-        AND r.l_orderkey = lineitem.l_orderkey
-        AND r.l_partkey = lineitem.l_partkey)
-  GROUP BY 1, 2)"""
-
-
-TPCDS_Q78_SQL = (
-    "WITH "
-    + _q78_spine_sql(_STORE, "ss")[1:]
-    + ","
-    + _q78_spine_sql(_WEB, "ws")
-    + ","
-    + _q78_spine_sql(_CATALOG, "cs")
-    + """
-SELECT ss.l_partkey, ss.o_custkey, ss_qty,
-       COALESCE(ws_qty, 0) + COALESCE(cs_qty, 0) AS other_qty,
-       ROUND(CAST(ss_qty AS DOUBLE)
-             / (COALESCE(ws_qty, 0) + COALESCE(cs_qty, 0)), 6) AS ratio,
-       CAST(ss_sp AS DOUBLE) AS store_sales,
-       CAST(COALESCE(ws_sp, CAST(0 AS DECIMAL(18,2)))
-            + COALESCE(cs_sp, CAST(0 AS DECIMAL(18,2))) AS DOUBLE)
-         AS other_sales
-FROM ss
-LEFT JOIN ws ON ss.l_partkey = ws.l_partkey AND ss.o_custkey = ws.o_custkey
-LEFT JOIN cs ON ss.l_partkey = cs.l_partkey AND ss.o_custkey = cs.o_custkey
-WHERE COALESCE(ws_qty, 0) + COALESCE(cs_qty, 0) > 0
-ORDER BY ss.l_partkey, ss.o_custkey
-LIMIT 100
-"""
 )
 
 
@@ -2572,68 +1019,6 @@ ORDER BY o_orderpriority
 """
 
 
-# -- q86 (q36/q70 family): 2-level rollup + rank within parent -------------
-def tpcds_q86_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """q36 family at two levels on the web channel (ds q86)."""
-    t = tables(spark, sf, "customer")
-    rolled = (
-        _fact(spark, sf)
-        .where(_chan(_WEB))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .rollup("c_mktsegment", "o_orderpriority")
-        .agg(
-            F.sum(_rev()).alias("total_sum"),
-            (
-                F.grouping("c_mktsegment") + F.grouping("o_orderpriority")
-            ).alias("lochierarchy"),
-            F.grouping("o_orderpriority").alias("g_p"),
-        )
-    )
-    w = Window.partitionBy(
-        "lochierarchy",
-        F.when(F.col("g_p") == 1, F.lit(None)).otherwise(F.col("c_mktsegment")),
-    ).orderBy(F.desc("total_sum"), F.asc_nulls_first("o_orderpriority"))
-    return (
-        rolled.select(
-            F.col("total_sum").cast("double").alias("total_sum"),
-            "c_mktsegment",
-            "o_orderpriority",
-            "lochierarchy",
-            F.row_number().over(w).alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.desc("lochierarchy"),
-            F.asc_nulls_first("c_mktsegment"),
-            "rank_within_parent",
-        )
-        .limit(100)
-    )
-
-
-TPCDS_Q86_SQL = f"""
-WITH rolled AS (
-  SELECT SUM({_REV_SQL}) AS total_sum, c_mktsegment, o_orderpriority,
-         GROUPING(c_mktsegment) + GROUPING(o_orderpriority)
-           AS lochierarchy,
-         GROUPING(o_orderpriority) AS g_p
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  WHERE {_chan_sql(_WEB)}
-  GROUP BY ROLLUP (c_mktsegment, o_orderpriority))
-SELECT CAST(total_sum AS DOUBLE) AS total_sum, c_mktsegment,
-       o_orderpriority, lochierarchy,
-       ROW_NUMBER() OVER (
-         PARTITION BY lochierarchy,
-                      CASE WHEN g_p = 1 THEN NULL ELSE c_mktsegment END
-         ORDER BY total_sum DESC, o_orderpriority ASC NULLS FIRST)
-         AS rank_within_parent
-FROM rolled
-ORDER BY lochierarchy DESC, c_mktsegment ASC NULLS FIRST,
-         rank_within_parent
-LIMIT 100
-"""
-
-
 # --------------------------------------------------------------------------
 # q90 shape: am/pm conditional-count ratio.
 # reference: benchmarks/queries-tpcds/q90.sql
@@ -2711,245 +1096,6 @@ WHERE l_returnflag = 'R' AND year(o_orderdate) = 1995
 GROUP BY 1, 2, 3
 ORDER BY n_name, c_mktsegment, m
 LIMIT 200
-"""
-
-
-# --------------------------------------------------------------------------
-# q93 shape: returns-adjusted actual sales via LEFT JOIN + conditional
-# arithmetic. reference: benchmarks/queries-tpcds/q93.sql
-# --------------------------------------------------------------------------
-def tpcds_q93_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q93's refund-adjusted revenue: the per-(order, part) returned
-    quantity LEFT JOINs back onto sales lines, each line's effective
-    quantity is (qty - returned, floored at 0), and the adjusted decimal
-    revenue rolls up per customer — top-100 ordered on the exact decimal
-    before the double cast."""
-    t = tables(spark, sf, "lineitem", "orders")
-    ret = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.sum("l_quantity").cast("bigint").alias("ret_qty"))
-    )
-    li = t.lineitem.where(F.col("l_returnflag") != "R")
-    adj = (
-        li.join(ret, ["l_orderkey", "l_partkey"], "left")
-        .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .withColumn(
-            "eff_qty",
-            F.greatest(
-                F.col("l_quantity").cast("bigint")
-                - F.coalesce(F.col("ret_qty"), F.lit(0)),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "act_sales",
-            D("l_extendedprice") * F.col("eff_qty"),
-        )
-    )
-    agg = adj.groupBy("o_custkey").agg(F.sum("act_sales").alias("sumsales"))
-    return (
-        agg.orderBy(F.desc("sumsales"), "o_custkey")
-        .limit(100)
-        .select(
-            "o_custkey", F.col("sumsales").cast("double").alias("act_sales")
-        )
-    )
-
-
-TPCDS_Q93_SQL = """
-WITH ret AS (
-  SELECT l_orderkey, l_partkey,
-         CAST(SUM(l_quantity) AS BIGINT) AS ret_qty
-  FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1, 2),
-adj AS (
-  SELECT o_custkey,
-    CAST(l_extendedprice AS DECIMAL(18,2))
-      * GREATEST(CAST(l_quantity AS BIGINT) - COALESCE(ret_qty, 0), 0)
-      AS act_sales
-  FROM lineitem
-  LEFT JOIN ret USING (l_orderkey, l_partkey)
-  JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_returnflag <> 'R')
-SELECT o_custkey, CAST(sumsales AS DOUBLE) AS act_sales
-FROM (SELECT o_custkey, SUM(act_sales) AS sumsales FROM adj GROUP BY 1)
-ORDER BY sumsales DESC, o_custkey
-LIMIT 100
-"""
-
-
-# --------------------------------------------------------------------------
-# q94 shape: multi-supplier orders with no returned line -> COUNT(DISTINCT).
-# reference: benchmarks/queries-tpcds/q94.sql
-# --------------------------------------------------------------------------
-def tpcds_q94_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q94's shipped-not-returned census: Q1-1995 orders whose lines
-    span more than one supplier (semi-join on the COUNT(DISTINCT) spine)
-    and with NO returned line (anti-join on the returned-order spine) —
-    the q95 plan with the second membership probe inverted."""
-    t = tables(spark, sf, "lineitem", "orders")
-    multi = (
-        t.lineitem.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("ns"))
-        .where(F.col("ns") > 1)
-        .select("l_orderkey")
-    )
-    ret_orders = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-        .distinct()
-    )
-    sel = (
-        t.orders.where(
-            (F.year("o_orderdate") == 1995) & (F.month("o_orderdate") <= 3)
-        )
-        .join(multi, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .join(
-            ret_orders,
-            F.col("o_orderkey") == F.col("l_orderkey"),
-            "left_anti",
-        )
-    )
-    return sel.agg(
-        F.countDistinct("o_orderkey").alias("order_count"),
-        F.sum(D("o_totalprice")).cast("double").alias("total_price"),
-    )
-
-
-TPCDS_Q94_SQL = """
-SELECT COUNT(DISTINCT o_orderkey) AS order_count,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_price
-FROM orders
-WHERE year(o_orderdate) = 1995 AND month(o_orderdate) <= 3
-  AND o_orderkey IN (
-    SELECT l_orderkey FROM lineitem
-    GROUP BY l_orderkey HAVING COUNT(DISTINCT l_suppkey) > 1)
-  AND o_orderkey NOT IN (
-    SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R')
-"""
-
-
-# --------------------------------------------------------------------------
-# q95 shape: double semi-join (multi-supplier orders AND returned orders),
-# COUNT(DISTINCT) reduction. reference: benchmarks/queries-tpcds/q95.sql
-# --------------------------------------------------------------------------
-def tpcds_q95_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q95's ws_wh double-IN: orders in Q1-1995 that used more than
-    one supplier (the ws_wh self-join expressed as a COUNT(DISTINCT)
-    HAVING spine — same semantics, one shuffle instead of a fact
-    self-join) AND had at least one returned line; reduced to
-    COUNT(DISTINCT) + decimal total. Both probes are semi-joins on
-    o_orderkey."""
-    t = tables(spark, sf, "lineitem", "orders")
-    multi = (
-        t.lineitem.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("ns"))
-        .where(F.col("ns") > 1)
-        .select("l_orderkey")
-    )
-    ret_orders = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-        .distinct()
-    )
-    sel = (
-        t.orders.where(
-            (F.year("o_orderdate") == 1995) & (F.month("o_orderdate") <= 3)
-        )
-        .join(multi, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .join(
-            ret_orders,
-            F.col("o_orderkey") == F.col("l_orderkey"),
-            "left_semi",
-        )
-    )
-    return sel.agg(
-        F.countDistinct("o_orderkey").alias("order_count"),
-        F.sum(D("o_totalprice")).cast("double").alias("total_price"),
-    )
-
-
-TPCDS_Q95_SQL = """
-SELECT COUNT(DISTINCT o_orderkey) AS order_count,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_price
-FROM orders
-WHERE year(o_orderdate) = 1995 AND month(o_orderdate) <= 3
-  AND o_orderkey IN (
-    SELECT l_orderkey FROM lineitem
-    GROUP BY l_orderkey HAVING COUNT(DISTINCT l_suppkey) > 1)
-  AND o_orderkey IN (
-    SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R')
-"""
-
-
-# --------------------------------------------------------------------------
-# q97 shape: two distinct (customer, part) spines FULL OUTER joined into
-# both/only counts. reference: benchmarks/queries-tpcds/q97.sql
-# --------------------------------------------------------------------------
-def tpcds_q97_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q97's channel-overlap census: the distinct (customer, part)
-    pairs of the store and catalog channels FULL OUTER joined, counting
-    store-only / catalog-only / both. The spines are DISTINCT aggregates;
-    the FULL OUTER is spine-to-spine on the composite key."""
-    t = tables(spark, sf, "lineitem", "orders")
-    base = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    )
-
-    def spine(modes: int, ck: str, pk: str) -> DataFrame:
-        return (
-            base.where(_chan(modes))
-            .select(
-                F.col("o_custkey").alias(ck), F.col("l_partkey").alias(pk)
-            )
-            .distinct()
-        )
-
-    ssc = spine(_STORE, "s_ck", "s_pk")
-    csc = spine(_CATALOG, "c_ck", "c_pk")
-    j = ssc.join(
-        csc,
-        (F.col("s_ck") == F.col("c_ck")) & (F.col("s_pk") == F.col("c_pk")),
-        "full_outer",
-    )
-    return j.agg(
-        F.sum(
-            F.when(
-                F.col("s_ck").isNotNull() & F.col("c_ck").isNull(), 1
-            ).otherwise(0)
-        ).alias("store_only"),
-        F.sum(
-            F.when(
-                F.col("s_ck").isNull() & F.col("c_ck").isNotNull(), 1
-            ).otherwise(0)
-        ).alias("catalog_only"),
-        F.sum(
-            F.when(
-                F.col("s_ck").isNotNull() & F.col("c_ck").isNotNull(), 1
-            ).otherwise(0)
-        ).alias("both_channels"),
-    )
-
-
-TPCDS_Q97_SQL = f"""
-WITH ssc AS (
-  SELECT DISTINCT o_custkey AS s_ck, l_partkey AS s_pk
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE {_chan_sql(_STORE)}),
-csc AS (
-  SELECT DISTINCT o_custkey AS c_ck, l_partkey AS c_pk
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE {_chan_sql(_CATALOG)})
-SELECT
-  CAST(SUM(CASE WHEN s_ck IS NOT NULL AND c_ck IS NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS store_only,
-  CAST(SUM(CASE WHEN s_ck IS NULL AND c_ck IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS catalog_only,
-  CAST(SUM(CASE WHEN s_ck IS NOT NULL AND c_ck IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS both_channels
-FROM ssc FULL OUTER JOIN csc ON s_ck = c_ck AND s_pk = c_pk
 """
 
 
@@ -3068,59 +1214,26 @@ ORDER BY o_orderpriority
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "tpcds_q2_shape": QuerySpec(tpcds_q2_shape, TPCDS_Q2_SQL),
     "tpcds_q5_shape": QuerySpec(tpcds_q5_shape, TPCDS_Q5_SQL),
-    "tpcds_q10_shape": QuerySpec(tpcds_q10_shape, TPCDS_Q10_SQL),
-    "tpcds_q11_shape": QuerySpec(tpcds_q11_shape, TPCDS_Q11_SQL),
-    "tpcds_q12_shape": QuerySpec(tpcds_q12_shape, _share_sql(_WEB, 1)),
     "tpcds_q15_shape": QuerySpec(tpcds_q15_shape, TPCDS_Q15_SQL),
-    "tpcds_q16_shape": QuerySpec(tpcds_q16_shape, TPCDS_Q16_SQL),
-    "tpcds_q17_shape": QuerySpec(tpcds_q17_shape, TPCDS_Q17_SQL),
-    "tpcds_q19_shape": QuerySpec(tpcds_q19_shape, TPCDS_Q19_SQL),
-    "tpcds_q20_shape": QuerySpec(tpcds_q20_shape, _share_sql(_CATALOG, 2)),
     "tpcds_q23_shape": QuerySpec(tpcds_q23_shape, TPCDS_Q23_SQL),
     "tpcds_q24_shape": QuerySpec(tpcds_q24_shape, TPCDS_Q24_SQL),
-    "tpcds_q25_shape": QuerySpec(tpcds_q25_shape, TPCDS_Q25_SQL),
     "tpcds_q28_shape": QuerySpec(tpcds_q28_shape, TPCDS_Q28_SQL),
-    "tpcds_q29_shape": QuerySpec(tpcds_q29_shape, TPCDS_Q29_SQL),
-    "tpcds_q31_shape": QuerySpec(tpcds_q31_shape, TPCDS_Q31_SQL),
-    "tpcds_q33_shape": QuerySpec(tpcds_q33_shape, TPCDS_Q33_SQL),
     "tpcds_q35_shape": QuerySpec(tpcds_q35_shape, TPCDS_Q35_SQL),
-    "tpcds_q36_shape": QuerySpec(tpcds_q36_shape, TPCDS_Q36_SQL),
     "tpcds_q39_shape": QuerySpec(tpcds_q39_shape, TPCDS_Q39_SQL),
-    "tpcds_q44_shape": QuerySpec(tpcds_q44_shape, TPCDS_Q44_SQL),
     "tpcds_q45_shape": QuerySpec(tpcds_q45_shape, TPCDS_Q45_SQL),
-    "tpcds_q49_shape": QuerySpec(tpcds_q49_shape, TPCDS_Q49_SQL),
     "tpcds_q50_shape": QuerySpec(tpcds_q50_shape, TPCDS_Q50_SQL),
-    "tpcds_q56_shape": QuerySpec(
-        tpcds_q56_shape, _channel_union_sql("p_name LIKE 'a%'")
-    ),
-    "tpcds_q59_shape": QuerySpec(tpcds_q59_shape, TPCDS_Q59_SQL),
-    "tpcds_q60_shape": QuerySpec(
-        tpcds_q60_shape, _channel_union_sql("p_size BETWEEN 20 AND 30")
-    ),
     "tpcds_q62_shape": QuerySpec(tpcds_q62_shape, TPCDS_Q62_SQL),
     "tpcds_q64_shape": QuerySpec(tpcds_q64_shape, TPCDS_Q64_SQL),
     "tpcds_q66_shape": QuerySpec(tpcds_q66_shape, TPCDS_Q66_SQL),
-    "tpcds_q67_shape": QuerySpec(tpcds_q67_shape, TPCDS_Q67_SQL),
-    "tpcds_q69_shape": QuerySpec(tpcds_q69_shape, TPCDS_Q69_SQL),
-    "tpcds_q70_shape": QuerySpec(tpcds_q70_shape, TPCDS_Q70_SQL),
     "tpcds_q71_shape": QuerySpec(tpcds_q71_shape, TPCDS_Q71_SQL),
     "tpcds_q73_shape": QuerySpec(tpcds_q73_shape, TPCDS_Q73_SQL),
-    "tpcds_q75_shape": QuerySpec(tpcds_q75_shape, TPCDS_Q75_SQL),
     "tpcds_q76_shape": QuerySpec(tpcds_q76_shape, TPCDS_Q76_SQL),
-    "tpcds_q77_shape": QuerySpec(tpcds_q77_shape, TPCDS_Q77_SQL),
-    "tpcds_q78_shape": QuerySpec(tpcds_q78_shape, TPCDS_Q78_SQL),
     "tpcds_q79_shape": QuerySpec(tpcds_q79_shape, TPCDS_Q79_SQL),
     "tpcds_q80_shape": QuerySpec(tpcds_q80_shape, TPCDS_Q80_SQL),
     "tpcds_q85_shape": QuerySpec(tpcds_q85_shape, TPCDS_Q85_SQL),
-    "tpcds_q86_shape": QuerySpec(tpcds_q86_shape, TPCDS_Q86_SQL),
     "tpcds_q90_shape": QuerySpec(tpcds_q90_shape, TPCDS_Q90_SQL),
     "tpcds_q91_shape": QuerySpec(tpcds_q91_shape, TPCDS_Q91_SQL),
-    "tpcds_q93_shape": QuerySpec(tpcds_q93_shape, TPCDS_Q93_SQL),
-    "tpcds_q94_shape": QuerySpec(tpcds_q94_shape, TPCDS_Q94_SQL),
-    "tpcds_q95_shape": QuerySpec(tpcds_q95_shape, TPCDS_Q95_SQL),
-    "tpcds_q97_shape": QuerySpec(tpcds_q97_shape, TPCDS_Q97_SQL),
     "tpcds_q98_shape": QuerySpec(tpcds_q98_shape, TPCDS_Q98_SQL),
     "tpcds_q99_shape": QuerySpec(tpcds_q99_shape, TPCDS_Q99_SQL),
 }

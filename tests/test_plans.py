@@ -7,17 +7,14 @@ sweep builds every lazily-planned inventory query and asserts:
 - no CartesianProduct / BroadcastNestedLoopJoin outside the whitelist of
   known scalar (1-row) cross joins and the deliberate theta join;
 - parquet scans in filtered TPC-H queries carry PushedFilters;
-- every remaining TPC-DS shape analogue still adds to its verbatim
-  twin's plan: an operator kind, or (for the set-subsumed batch not yet
-  retired) more of some operator.
+- every TPC-DS shape analogue still adds an operator kind to its
+  verbatim twin's plan.
 
 Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
 execution) are excluded — their plans are audited by their own runs.
 """
 
 from __future__ import annotations
-
-from collections import Counter
 
 import pytest
 
@@ -173,7 +170,6 @@ def test_allowlists_name_registered_queries():
     silently exempt whatever later reuses it."""
     assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
     assert _EAGER_QUERIES <= set(_REGISTRY), _EAGER_QUERIES - set(_REGISTRY)
-    assert _SET_SUBSUMED <= set(_REGISTRY), _SET_SUBSUMED - set(_REGISTRY)
 
 
 # Codegen and reuse wrappers: they say how a plan runs, not which operator
@@ -181,10 +177,9 @@ def test_allowlists_name_registered_queries():
 _PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused")
 
 
-def _operator_counts(spark, name) -> Counter[str]:
+def _operator_kinds(spark, name) -> set[str]:
     """Operator names in the static physical plan (AQE off, so the plan is
-    not deferred to runtime), subquery plans included, wrappers dropped,
-    each with its number of nodes."""
+    not deferred to runtime), subquery plans included, wrappers dropped."""
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -192,12 +187,12 @@ def _operator_counts(spark, name) -> Counter[str]:
         plan = df._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    kinds, stack = Counter(), [plan]
+    kinds, stack = set(), [plan]
     while stack:
         node = stack.pop()
         kind = node.nodeName().strip()
         if not kind.startswith(_PLAN_WRAPPERS):
-            kinds[kind] += 1
+            kinds.add(kind)
         for seq in (node.children(), node.subqueries()):
             stack.extend(seq.apply(i) for i in range(seq.size()))
     return kinds
@@ -207,30 +202,13 @@ _TPCDS_SHAPES = sorted(
     n for n in _REGISTRY if n.startswith("tpcds_q") and n.endswith("_shape")
 )
 
-# Shapes whose operator kinds their twin already has, but which run more of
-# some operator (extra aggregate stages, exchanges, projections): subsumed
-# under the set rule, not under the multiset one. Only the shapes subsumed
-# under both rules are retired so far; these are the next batch (ROADMAP
-# 4.4) and meanwhile must at least stay distinct as multisets.
-_SET_SUBSUMED = {
-    f"tpcds_q{q}_shape"
-    for q in (2, 10, 11, 12, 16, 17, 19, 20, 25, 29, 31, 33, 36, 44, 49)
-    + (56, 59, 60, 67, 69, 70, 75, 77, 78, 86, 93, 94, 95, 97)
-}
-
 
 @pytest.mark.parametrize("name", _TPCDS_SHAPES)
 def test_tpcds_shape_adds_an_operator(name, spark):
     """A DataFrame analogue stays only while it exercises an operator kind
-    its verbatim twin does not (or, in the set-subsumed batch, more of
-    some operator); the rest were retired as subsumed. Red here means a
-    Spark upgrade or an edit to either side made this shape redundant:
-    retire it, or give it back something the twin lacks."""
+    its verbatim twin does not; the rest were retired as subsumed. Red
+    here means a Spark upgrade or an edit to either side made this shape
+    redundant: retire it, or give it back something the twin lacks."""
     twin = name.replace("tpcds_q", "tpcds_real_q").removesuffix("_shape")
-    shape, real = _operator_counts(spark, name), _operator_counts(spark, twin)
-    if name in _SET_SUBSUMED:
-        added = shape - real
-        assert added, f"[{name}] no operator occurs more often than in {twin}"
-    else:
-        added = shape.keys() - real.keys()
-        assert added, f"[{name}] every operator kind also appears in {twin}"
+    added = _operator_kinds(spark, name) - _operator_kinds(spark, twin)
+    assert added, f"[{name}] every operator kind also appears in {twin}"

@@ -65,3 +65,54 @@ def test_package_has_no_assert_statements():
         if isinstance(node, ast.Assert)
     ]
     assert found == []
+
+
+def _module_level_names(tree: ast.Module) -> list[tuple[str, int]]:
+    """(name, line) for every name a module binds at its top level."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((node.name, node.lineno))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out.extend(
+                (n.id, node.lineno)
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            )
+    return out
+
+
+def test_package_has_no_dead_private_helpers():
+    """A private module-level name (``_x``, not a dunder) in the package
+    must be used somewhere: a helper whose last caller was deleted is
+    deleted with it. A use is a load of the name, an attribute or import
+    of it, or a string equal to it (``getattr``/``monkeypatch`` targets),
+    in any ``.py`` file of the repo."""
+    files = [
+        p
+        for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+    used: set[str] = set()
+    defined = []
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                used.add(node.value)
+        if path.is_relative_to(REPO / "datafusion_ballista_spark"):
+            defined += [
+                (name, f"{path.relative_to(REPO)}:{line}")
+                for name, line in _module_level_names(tree)
+                if name.startswith("_") and not name.startswith("__")
+            ]
+    dead = sorted(where for name, where in defined if name not in used)
+    assert dead == []
