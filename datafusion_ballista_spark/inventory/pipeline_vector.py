@@ -22,10 +22,10 @@ Scale notes (100 TB):
   groupBy(bucket) join, cost Σ per-bucket sizes. More tables/probes trade
   recall for cost without changing the plan shape. An IVF variant is the
   same plan with learned centroids as the bucketer.
-- Dot products run as in-JVM expression folds: at 64-d this beats the
-  Arrow-batched pandas_udf alternative (kept + tested as `_cos_vec`/
-  `_bucket_vec`) because the UDF pays ~1 KB/pair operand transfer; the
-  vectorized forms are the documented switch-over for ~512-d+ embeddings.
+- Dot products run as in-JVM expression folds: at 64-d this beats an
+  Arrow-batched pandas_udf (A/B at sf0.1 and sf1: ann_bruteforce 0.56 s
+  expr vs 0.75 s UDF) because the UDF pays ~1 KB/pair operand transfer;
+  a numpy matmul per batch only pays off for ~512-d+ embeddings.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType
 
 from datafusion_ballista_spark.inventory import QuerySpec
 from datafusion_ballista_spark.inventory.util import tables
@@ -76,34 +75,6 @@ def _cos(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-# Arrow-vectorized ALTERNATIVES to the two kernels, measured and NOT used
-# at this dimensionality: at 64-d the in-JVM expression fold wins (A/B at
-# sf0.1 and sf1: e.g. ann_bruteforce 0.56s expr vs 0.75s pandas_udf),
-# because the UDF must ship BOTH operand arrays through the Arrow pipe
-# (~1 KB per candidate pair) while the expression path computes with zero
-# transfer — "stay JVM-side" beats "vectorize in numpy" until the
-# per-row compute outgrows the per-row transfer. Kept, tested
-# (tests/test_pipeline_vector.py::test_vectorized_kernels_match), and
-# documented as the switch-over path for high-dim embeddings (~512-d+),
-# where one matmul per batch amortizes the transfer. Results agree with
-# the expression forms within 1 ulp; every consumer rounds at 9 dp.
-
-
-@pandas_udf(DoubleType())
-def _cos_vec(a, b):
-    import numpy as np
-
-    ma = np.vstack(a.to_numpy())
-    mb = np.vstack(b.to_numpy())
-    num = np.einsum("ij,ij->i", ma, mb)
-    den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-        np.einsum("ij,ij->i", mb, mb)
-    )
-    import pandas as pd
-
-    return pd.Series(num / den)
-
-
 def _plane_col(p: list[int]) -> Column:
     return F.array(*[F.lit(float(c)) for c in p])
 
@@ -115,18 +86,6 @@ def _bucket(v: Column) -> Column:
         for h, p in enumerate(_PLANES)
     ]
     return sum(bits).cast("int")
-
-
-@pandas_udf(IntegerType())
-def _bucket_vec(v):
-    import numpy as np
-    import pandas as pd
-
-    planes = np.array(_PLANES, dtype=np.float64).T  # DIM x N_PLANES
-    m = np.vstack(v.to_numpy())
-    bits = (m @ planes) >= 0.0
-    weights = 1 << np.arange(_N_PLANES)
-    return pd.Series((bits * weights).sum(axis=1).astype(np.int32))
 
 
 _DOT_SQL = "list_dot_product({a}, {b})"
@@ -625,7 +584,7 @@ def _km_assign_expr(pts: DataFrame, cents: list[list[int]]) -> DataFrame:
     array expression; argmin = array_position of the min (first match =
     lowest cluster id on exact-integer ties). Kept as the zero-Python
     alternative; the default is the Arrow-vectorized kernel below —
-    the OPPOSITE call from the pair kernels (_cos_vec), because
+    the OPPOSITE call from the pair kernels (_cos, _bucket), because
     assignment is per-ROW: ~512 B of operand transfer buys k x dim
     distance ops, and a same-session sf1 A/B (min-of-2, two alternating
     passes) measured emb_kmeans_lloyd 4.4-4.7 s (expr) vs 2.0-2.2 s

@@ -7,6 +7,7 @@ import pytest
 
 from datafusion_ballista_spark.inventory import WINDOW, all_queries
 from tests.conftest import SF_DIR, assert_query_matches
+from tests.test_plans import _EAGER_QUERIES
 
 _ALL = all_queries()
 
@@ -14,7 +15,20 @@ _ALL = all_queries()
 @pytest.mark.parametrize("name", sorted(_ALL))
 def test_inventory_query(name, spark, oracle):
     spec = _ALL[name]
-    assert_query_matches(spec.spark(spark, SF_DIR), oracle, spec.oracle, name)
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = spec.spark(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    if name in _EAGER_QUERIES:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group), (
+            f"[{name}] listed as eager but fired no job while building"
+        )
+    assert_query_matches(df, oracle, spec.oracle, name)
 
 
 def test_rows_only_set_is_exactly_the_documented_exception():

@@ -39,43 +39,6 @@ def test_lsh_bucket_sizes_bounded(spark):
     assert max(sizes) < total / 2
 
 
-def test_vectorized_kernels_match(spark):
-    """The Arrow-batched kernels (the documented high-dim switch-over
-    path) must agree with the in-JVM expression folds the queries use:
-    identical LSH buckets, cosines equal at the 9-dp rounding every
-    consumer applies."""
-    from pyspark.sql import functions as F
-
-    from datafusion_ballista_spark.inventory.pipeline_vector import (
-        _bucket,
-        _bucket_vec,
-        _cos,
-        _cos_vec,
-        _emb,
-    )
-    from tests.conftest import SF_DIR
-
-    e = _emb(spark, SF_DIR).limit(200)
-    pairs = (
-        e.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-        .join(
-            e.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb")),
-            F.col("ia") == F.col("ib") - 1,
-        )
-    )
-    diff = pairs.select(
-        (
-            F.round(_cos(F.col("va"), F.col("vb")), 9)
-            != F.round(_cos_vec(F.col("va"), F.col("vb")), 9)
-        ).alias("cos_diff")
-    ).where(F.col("cos_diff"))
-    assert diff.count() == 0
-    bdiff = e.select(
-        (_bucket(F.col("v")) != _bucket_vec(F.col("v"))).alias("d")
-    ).where(F.col("d"))
-    assert bdiff.count() == 0
-
-
 def test_km_assign_kernels_agree(spark):
     """The Arrow-vectorized default assignment and the expression-fold
     alternative must produce identical (cid, dist) for every vector

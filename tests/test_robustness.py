@@ -89,11 +89,14 @@ def test_package_has_no_dead_private_helpers():
     must be used somewhere: a helper whose last caller was deleted is
     deleted with it. A use is a load of the name, an attribute or import
     of it, or a string equal to it (``getattr``/``monkeypatch`` targets),
-    in any ``.py`` file of the repo."""
+    in any ``.py`` file of the repo outside the test suites: a helper only
+    a test calls is dead code with a test attached."""
+    tests = (REPO / "tests", REPO / "perfbench" / "tests")
     files = [
         p
         for p in REPO.rglob("*.py")
         if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+        and not any(p.is_relative_to(t) for t in tests)
     ]
     used: set[str] = set()
     defined = []
