@@ -106,18 +106,24 @@ def _result(value, failed=0, **layers):
 
 
 def test_summary_counts_operations_and_names_the_layer_that_moved_most():
-    bench = {"end_to_end": [{"name": "pass_cpu_s", "unit": "s", "better": "lower", "bound": BOUND}]}
+    metric = {"name": "pass_cpu_s", "unit": "s", "better": "lower", "bound": BOUND}
+    bench = {"end_to_end": [metric]}
     runs = [{"a": _result(10.0), "b": _result(8.0)} for _ in range(10)]
     traced = {
         "a": _result(1.0, **{"execute.exec_s": 4.0, "plan.plan_s": 1.0, "trace.overhead_s": 0.1}),
-        "b": _result(1.0, **{"execute.exec_s": 3.5, "plan.plan_s": 0.5, "trace.overhead_s": -0.1}),
+        "b": _result(1.0, **{"execute.exec_s": 3.5, "plan.plan_s": 0.2, "trace.overhead_s": 1.1}),
     }
+    traced["a"]["metrics"]["execute.jobs"] = {"value": 1, "unit": "count"}
+    traced["b"]["metrics"]["execute.jobs"] = {"value": 3, "unit": "count"}
     out = summarize(bench, runs, traced)
     json.dumps(out)
     assert out["metrics"]["pass_cpu_s"]["gain"] is True
     assert out["sides"]["a"] == {"failed_runs": 0, "attempted": 110, "failed": 0}
-    # the benchmark's own trace group moved most, the engine's plan layer next
-    assert [d["metric"] for d in out["layers"]["deltas"]][:2] == ["trace.overhead_s", "plan.plan_s"]
+    # times by seconds moved, then counts by relative move; the benchmark's
+    # own trace group moved most, the engine's plan layer next
+    assert [d["metric"] for d in out["layers"]["deltas"]] == [
+        "trace.overhead_s", "plan.plan_s", "execute.exec_s", "pass_cpu_s", "execute.jobs",
+    ]
     assert out["layers"]["moved_most"] == "plan"
     # more failed operations on the change cancel the gain
     runs[0]["b"] = _result(8.0, failed=1)

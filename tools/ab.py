@@ -17,8 +17,8 @@ JSON summary:
   quartiles, spread and minimum, the pairs the change won, and three verdicts
   (:func:`verdicts`);
 - per side: runs that failed, and failed / attempted operations;
-- the traced per-layer deltas, largest relative change first, and the
-  engine layer that moved most.
+- the traced per-layer deltas, largest move first, and the engine layer
+  whose time moved most (:func:`layer_deltas`).
 
 Exits 2 when the refs cannot be compared, 1 when a run failed, else 0.
 """
@@ -123,7 +123,11 @@ def verdicts(pairs: list[tuple[float | None, float | None]], bound: float, bette
 
 def layer_deltas(a: dict, b: dict) -> dict:
     """Per-layer metrics of the traced pair, parent ``a`` against change
-    ``b``, ordered by ``(b - a) / max(|a|, |b|)``, largest move first."""
+    ``b``, largest move first: times by the seconds they moved, as every
+    layer spends the same seconds, then counts and sizes by their
+    ``relative`` move ``(b - a) / max(|a|, |b|)``. The layer that moved
+    most is that of the first time metric outside the benchmark's own
+    groups."""
     rows = []
     for name in sorted(set(a) & set(b)):
         x, y = a[name]["value"], b[name]["value"]
@@ -138,10 +142,14 @@ def layer_deltas(a: dict, b: dict) -> dict:
                 "relative": (y - x) / scale if scale else 0.0,
             }
         )
-    rows.sort(key=lambda r: -abs(r["relative"]))
-    engine = [r for r in rows if r["metric"].split(".")[0] not in BENCH_LAYERS]
+    rows.sort(
+        key=lambda r: (r["unit"] != "s", -abs(r["delta" if r["unit"] == "s" else "relative"]))
+    )
+    times = [
+        r for r in rows if r["unit"] == "s" and r["metric"].split(".")[0] not in BENCH_LAYERS
+    ]
     return {
-        "moved_most": engine[0]["metric"].split(".")[0] if engine else None,
+        "moved_most": times[0]["metric"].split(".")[0] if times else None,
         "deltas": rows,
     }
 
