@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import json
 
-from tools.ab import layer_deltas, parse_run, schedule, summarize, verdicts
+from tools.ab import parse_run, schedule, summarize, verdicts
 
 BOUND = 0.25
 
@@ -105,7 +105,7 @@ def _result(value, failed=0, **layers):
     }
 
 
-def test_summary_counts_operations_and_names_the_layer_that_moved_most():
+def test_summary_counts_operations_and_lists_the_traced_layers():
     metric = {"name": "pass_cpu_s", "unit": "s", "better": "lower", "bound": BOUND}
     bench = {"end_to_end": [metric]}
     runs = [{"a": _result(10.0), "b": _result(8.0)} for _ in range(10)]
@@ -119,12 +119,12 @@ def test_summary_counts_operations_and_names_the_layer_that_moved_most():
     json.dumps(out)
     assert out["metrics"]["pass_cpu_s"]["gain"] is True
     assert out["sides"]["a"] == {"failed_runs": 0, "attempted": 110, "failed": 0}
-    # times by seconds moved, then counts by relative move; the benchmark's
-    # own trace group moved most, the engine's plan layer next
-    assert [d["metric"] for d in out["layers"]["deltas"]] == [
-        "trace.overhead_s", "plan.plan_s", "execute.exec_s", "pass_cpu_s", "execute.jobs",
+    # each side's traced values, unranked
+    assert out["layers"]["plan.plan_s"] == {"unit": "s", "a": 1.0, "b": 0.2}
+    assert out["layers"]["execute.jobs"] == {"unit": "count", "a": 1, "b": 3}
+    assert sorted(out["layers"]) == [
+        "execute.exec_s", "execute.jobs", "pass_cpu_s", "plan.plan_s", "trace.overhead_s",
     ]
-    assert out["layers"]["moved_most"] == "plan"
     # more failed operations on the change cancel the gain
     runs[0]["b"] = _result(8.0, failed=1)
     out = summarize(bench, runs, traced)
@@ -134,8 +134,6 @@ def test_summary_counts_operations_and_names_the_layer_that_moved_most():
     out = summarize(bench, runs, traced)
     assert out["sides"]["b"]["failed_runs"] == 1
     assert out["metrics"]["pass_cpu_s"]["wins"] == 9
-
-
-def test_layer_deltas_of_zero_values():
-    zero = {"udf.python_run_s": {"value": 0.0, "unit": "s"}}
-    assert layer_deltas(zero, zero)["deltas"][0]["relative"] == 0.0
+    # no layers when a traced run failed
+    out = summarize(bench, runs, {"a": traced["a"], "b": None})
+    assert out["layers"] is None

@@ -6,8 +6,8 @@ from __future__ import annotations
 import pytest
 
 from datafusion_ballista_spark.inventory import WINDOW, all_queries
-from tests.conftest import SF_DIR, assert_query_matches
-from tests.test_plans import _EAGER_QUERIES
+from datafusion_ballista_spark.sources.registry import tables
+from tests.conftest import EAGER_QUERIES, SF_DIR, assert_query_matches
 
 _ALL = all_queries()
 
@@ -16,6 +16,9 @@ _ALL = all_queries()
 def test_inventory_query(name, spark, oracle):
     spec = _ALL[name]
     sc = spark.sparkContext
+    # load the fixture tables first: a table's first load fires a job of
+    # its own, which would count for whichever builder loads it first
+    tables(spark, SF_DIR)
     group = f"build-{name}"
     sc.setJobGroup(group, group)
     try:
@@ -23,7 +26,7 @@ def test_inventory_query(name, spark, oracle):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    if name in _EAGER_QUERIES:
+    if name in EAGER_QUERIES:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert sc.statusTracker().getJobIdsForGroup(group), (
             f"[{name}] listed as eager but fired no job while building"

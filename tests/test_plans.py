@@ -19,42 +19,11 @@ from __future__ import annotations
 import pytest
 
 from datafusion_ballista_spark.inventory import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import EAGER_QUERIES, SF_DIR
 
 # Queries whose *construction* executes work (writes, streams, collects):
 # planning them here would re-run side effects, not just build a plan.
 _EAGER_MODULES = {"io_ops", "streaming_cov"}
-# Builders that collect while building; tests/test_inventory.py checks that
-# each still fires a Spark job then (one way only: the first load of a
-# fixture table fires one too). Nine unlisted builders also fire jobs,
-# through a lazy localCheckpoint under AQE (ann_ivfpq_refine,
-# ann_mmr_rerank, dedup_incremental, dedup_minhash_lsh,
-# dedup_prefix_filter_join, dedup_semdedup, dedup_substring_exact,
-# text_winnow_fingerprint, train_split_leakage); they stay in the audit.
-_EAGER_QUERIES = {
-    "ctas_insert_sql",
-    "dedup_clusters",  # iterative fixpoint: construction runs jobs per round
-    "dedup_keep_best",  # same label-propagation fixpoint at construction
-    "train_bpe_merges",  # iterative merge rounds collect at construction
-    "train_bpe_encode",  # same merge learning collects at construction
-    "emb_kmeans_lloyd",  # iterative Lloyd rounds: update jobs at construction
-    "emb_pq_encode",  # 4 subspace codebooks train (collect) at construction
-    "ann_pq_adc",  # same codebook training collects at construction
-    "ann_ivfpq_topk",  # coarse k-means + codebooks train (collect) at construction
-    "emb_pca_project",  # moment matrix + component sums collect at construction
-    "train_curriculum_order",  # global row-number offsets collect at construction
-    "win_global_rownumber_dist",  # offset cumulation collects per-part counts
-    "win_global_rank_dist",  # same operator family
-    "win_global_dense_rank_dist",  # same operator family
-    "win_global_cumsum_dist",  # same operator family
-    "h2o_w_sorted_rownum",  # same operator: offsets collect at construction
-    "emb_kmeanspp_init",  # farthest-first rounds collect at construction
-    "train_contamination_bloom",  # bloom set-bit positions collect at construction
-    "sketch_quantile_bottomk",  # bounded bottom-k sample collects at construction
-    "sketch_range_partition_cuts",  # same bounded sample collect
-    "sketch_theta_set_ops",  # two bounded KMV samples collect at construction
-    "train_pack_concat_chunks",  # global cumsum offsets collect at construction
-}
 
 # Nested-loop / cartesian is legitimate only for genuinely-bounded sides:
 # 1-row scalar aggregates (tpch q11/q14/q17/q22, NOT IN stats row, global
@@ -115,7 +84,7 @@ _ALL = {
     name: spec
     for name, spec in _REGISTRY.items()
     if spec.spark.__module__.rsplit(".", 1)[-1] not in _EAGER_MODULES
-    and name not in _EAGER_QUERIES
+    and name not in EAGER_QUERIES
 }
 
 
@@ -175,7 +144,7 @@ def test_allowlists_name_registered_queries():
     """An allowlist entry must not outlive its query: a stale name would
     silently exempt whatever later reuses it."""
     assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
-    assert _EAGER_QUERIES <= set(_REGISTRY), _EAGER_QUERIES - set(_REGISTRY)
+    assert EAGER_QUERIES <= set(_REGISTRY), EAGER_QUERIES - set(_REGISTRY)
 
 
 # Codegen and reuse wrappers: they say how a plan runs, not which operator

@@ -2,12 +2,12 @@
 
 Usage, from anywhere inside the checkout::
 
-    python tools/ab.py PARENT CHANGE --workload relational --pairs 10 [--seed 1]
+    python tools/ab.py PARENT CHANGE --workload relational --pairs 10
 
 Both refs are checked out as detached ``git worktree``s under the temporary
 directory and removed on exit, error included. The refs must agree on
 ``perfbench/`` and ``BENCHMARK.json``, so both sides run the same benchmark.
-Pair ``i`` runs ``perfbench/run.py --seed S+i --seconds <run_seconds>`` once
+Pair ``i`` runs ``perfbench/run.py --seed 1+i --seconds <run_seconds>`` once
 per side, PARENT first on even pairs and CHANGE first on odd ones, with
 ``PYTHONPATH`` unset so each side imports its own package. One traced pair
 (``--trace 1``) follows. Progress goes to stderr; the last stdout line is the
@@ -17,8 +17,9 @@ JSON summary:
   quartiles, spread and minimum, the pairs the change won, and three verdicts
   (:func:`verdicts`);
 - per side: runs that failed, and failed / attempted operations;
-- the traced per-layer deltas, largest move first, and the engine layer
-  whose time moved most (:func:`layer_deltas`).
+- the traced pair's per-layer values, each side's side by side
+  (:func:`layer_values`). One traced sample per side does not tell a move
+  from noise, so they are not ranked or judged.
 
 Exits 2 when the refs cannot be compared, 1 when a run failed, else 0.
 """
@@ -44,8 +45,8 @@ BENCH_PATHS = ("perfbench", "BENCHMARK.json")
 # The guide's rule: at least ten pairs, and at least nine tenths of them won.
 GAIN_MIN_PAIRS = 10
 GAIN_SHARE = 0.9
-# Per-layer groups that belong to the benchmark itself, not to the engine.
-BENCH_LAYERS = ("trace", "compare")
+# Pair i runs with perfbench seed SEED + i on both sides.
+SEED = 1
 
 
 def schedule(pairs: int, seed: int) -> list[tuple[int, int, tuple[str, str]]]:
@@ -121,36 +122,12 @@ def verdicts(pairs: list[tuple[float | None, float | None]], bound: float, bette
     )
 
 
-def layer_deltas(a: dict, b: dict) -> dict:
-    """Per-layer metrics of the traced pair, parent ``a`` against change
-    ``b``, largest move first: times by the seconds they moved, as every
-    layer spends the same seconds, then counts and sizes by their
-    ``relative`` move ``(b - a) / max(|a|, |b|)``. The layer that moved
-    most is that of the first time metric outside the benchmark's own
-    groups."""
-    rows = []
-    for name in sorted(set(a) & set(b)):
-        x, y = a[name]["value"], b[name]["value"]
-        scale = max(abs(x), abs(y))
-        rows.append(
-            {
-                "metric": name,
-                "unit": a[name]["unit"],
-                "a": x,
-                "b": y,
-                "delta": y - x,
-                "relative": (y - x) / scale if scale else 0.0,
-            }
-        )
-    rows.sort(
-        key=lambda r: (r["unit"] != "s", -abs(r["delta" if r["unit"] == "s" else "relative"]))
-    )
-    times = [
-        r for r in rows if r["unit"] == "s" and r["metric"].split(".")[0] not in BENCH_LAYERS
-    ]
+def layer_values(a: dict, b: dict) -> dict:
+    """Per-layer metrics of the traced pair: ``{metric: {unit, a, b}}`` for
+    the metrics both sides report, parent ``a`` and change ``b``."""
     return {
-        "moved_most": times[0]["metric"].split(".")[0] if times else None,
-        "deltas": rows,
+        name: {"unit": a[name]["unit"], "a": a[name]["value"], "b": b[name]["value"]}
+        for name in sorted(set(a) & set(b))
     }
 
 
@@ -179,7 +156,7 @@ def summarize(bench: dict, runs: list[dict], traced: dict) -> dict:
         for s in "ab"
     }
     layers = (
-        layer_deltas(traced["a"]["metrics"], traced["b"]["metrics"])
+        layer_values(traced["a"]["metrics"], traced["b"]["metrics"])
         if traced["a"] and traced["b"]
         else None
     )
@@ -234,7 +211,6 @@ def main(argv: list[str]) -> int:
     p.add_argument("change", help="ref of side b, the change")
     p.add_argument("--workload", required=True, help="a workload of BENCHMARK.json")
     p.add_argument("--pairs", type=int, required=True)
-    p.add_argument("--seed", type=int, default=1)
     args = p.parse_args(argv)
     if args.pairs < 1:
         p.error("--pairs must be at least 1")
@@ -274,7 +250,7 @@ def main(argv: list[str]) -> int:
                 )
             return rec
 
-        plan = schedule(args.pairs + 1, args.seed)
+        plan = schedule(args.pairs + 1, SEED)
         runs = [pair(i, seed, order, 0) for i, seed, order in plan[:-1]]
         traced = pair(*plan[-1], 1)
     finally:
@@ -287,7 +263,6 @@ def main(argv: list[str]) -> int:
     summary = {
         "workload": args.workload,
         "pairs": args.pairs,
-        "seed": args.seed,
         "run_seconds": seconds,
         "parent": {"ref": args.parent, "commit": shas["a"]},
         "change": {"ref": args.change, "commit": shas["b"]},
