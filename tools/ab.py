@@ -17,9 +17,8 @@ JSON summary:
   quartiles, spread and minimum, the pairs the change won, and three verdicts
   (:func:`verdicts`);
 - per side: runs that failed, and failed / attempted operations;
-- the traced pair's per-layer values, each side's side by side
-  (:func:`layer_values`). One traced sample per side does not tell a move
-  from noise, so they are not ranked or judged.
+- the traced pair's per-layer values for both sides (:func:`layer_values`),
+  unranked: one traced sample per side does not tell a move from noise.
 
 Exits 2 when the refs cannot be compared, 1 when a run failed, else 0.
 """
