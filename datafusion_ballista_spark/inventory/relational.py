@@ -1,12 +1,14 @@
 """Set-op / grouping / join-type / misc relational inventory (SURVEY §2.4, §2.5, §2.7).
 
-Reference surface: Union/Interleave (datafusion.proto:345-348,1213-1220),
-INTERSECT/EXCEPT lowered to semi/anti joins (datafusion_common.proto:85-87),
-GROUPING SETS / CUBE / ROLLUP (datafusion.proto:463-474), DISTINCT ON
-(:258-268), VALUES + empty relation (:219-223,159-162), LIMIT/OFFSET
-(:354-361), full/right outer + nested-loop theta joins
-(datafusion_common.proto:80-92, datafusion.proto:1359-1366), NULLS
-FIRST/LAST sorts (:139-145), generate_series (:1453-1498).
+Reference surface: INTERSECT/EXCEPT lowered to semi/anti joins
+(datafusion_common.proto:85-87), GROUPING SETS / CUBE / ROLLUP
+(datafusion.proto:463-474; an explicit sets list plans the same Expand as
+CUBE and ROLLUP), DISTINCT ON (:258-268), VALUES + empty relation
+(:219-223,159-162), LIMIT/OFFSET (:354-361), full/right outer + nested-loop
+theta joins (datafusion_common.proto:80-92, datafusion.proto:1359-1366),
+NULLS FIRST/LAST sorts (:139-145), generate_series (:1453-1498). UNION ALL
+and UNION (datafusion.proto:345-348,1213-1220) run in the tpcds_q5, q35
+and q45 shapes and in dedup_containment.
 
 Scale notes: set ops shuffle on the full row (the same plan any engine
 needs); grouping sets expand rows by the number of sets before the shuffle
@@ -22,49 +24,6 @@ from pyspark.sql import functions as F
 
 from datafusion_ballista_spark.inventory import QuerySpec
 from datafusion_ballista_spark.inventory.util import D, dsum, not_in_join, tables
-
-
-def rel_union_all(spark: SparkSession, sf: str) -> DataFrame:
-    """UNION ALL (positional, keeps duplicates) of two tagged projections."""
-    t = tables(spark, sf, "customer", "supplier")
-    c = t.customer.select(
-        F.lit("customer").alias("kind"), F.col("c_nationkey").alias("nationkey")
-    )
-    s = t.supplier.select(
-        F.lit("supplier").alias("kind"), F.col("s_nationkey").alias("nationkey")
-    )
-    return (
-        c.union(s)
-        .groupBy("kind", "nationkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("kind", "nationkey")
-    )
-
-
-REL_UNION_ALL_SQL = """
-SELECT kind, nationkey, COUNT(*) AS n FROM (
-  SELECT 'customer' AS kind, c_nationkey AS nationkey FROM customer
-  UNION ALL
-  SELECT 'supplier' AS kind, s_nationkey AS nationkey FROM supplier)
-GROUP BY kind, nationkey
-ORDER BY kind, nationkey
-"""
-
-
-def rel_union_distinct(spark: SparkSession, sf: str) -> DataFrame:
-    """UNION (distinct): nation keys present as customer OR supplier homes."""
-    t = tables(spark, sf, "customer", "supplier")
-    c = t.customer.select(F.col("c_nationkey").alias("nationkey"))
-    s = t.supplier.select(F.col("s_nationkey").alias("nationkey"))
-    return c.union(s).distinct().orderBy("nationkey")
-
-
-REL_UNION_DISTINCT_SQL = """
-SELECT c_nationkey AS nationkey FROM customer
-UNION
-SELECT s_nationkey FROM supplier
-ORDER BY nationkey
-"""
 
 
 def rel_intersect(spark: SparkSession, sf: str) -> DataFrame:
@@ -182,26 +141,6 @@ SELECT event_type, user_id % 5 AS user_bucket, COUNT(*) AS n,
 FROM events WHERE user_id < 50
 GROUP BY CUBE (event_type, user_id % 5)
 ORDER BY event_type NULLS FIRST, user_bucket NULLS FIRST
-"""
-
-
-def rel_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
-    """Explicit GROUPING SETS list (not derivable from cube/rollup)."""
-    t = tables(spark, sf, "customer")
-    return (
-        t.customer.groupingSets(
-            [["c_mktsegment"], ["c_nationkey"]], "c_mktsegment", "c_nationkey"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("c_mktsegment", "c_nationkey")
-    )
-
-
-REL_GROUPING_SETS_SQL = """
-SELECT c_mktsegment, c_nationkey, COUNT(*) AS n
-FROM customer
-GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey))
-ORDER BY c_mktsegment NULLS FIRST, c_nationkey NULLS FIRST
 """
 
 
@@ -400,25 +339,6 @@ ORDER BY et_n ASC NULLS FIRST, value DESC NULLS LAST, event_id
 """
 
 
-def rel_not_in(spark: SparkSession, sf: str) -> DataFrame:
-    """NOT IN over a null-free subquery (rows survive)."""
-    t = tables(spark, sf, "customer", "orders")
-    urgent = t.orders.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    return (
-        not_in_join(t.customer, "c_custkey", urgent, "o_custkey")
-        .select("c_custkey", "c_mktsegment")
-        .orderBy("c_custkey")
-    )
-
-
-REL_NOT_IN_SQL = """
-SELECT c_custkey, c_mktsegment FROM customer
-WHERE c_custkey NOT IN (
-  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-ORDER BY c_custkey
-"""
-
-
 def rel_not_in_nulls(spark: SparkSession, sf: str) -> DataFrame:
     """NOT IN over a null-bearing subquery: three-valued logic makes the
     result empty — a plain left_anti would wrongly return rows."""
@@ -515,14 +435,11 @@ ORDER BY segment
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "rel_union_all": QuerySpec(rel_union_all, REL_UNION_ALL_SQL),
-    "rel_union_distinct": QuerySpec(rel_union_distinct, REL_UNION_DISTINCT_SQL),
     "rel_intersect": QuerySpec(rel_intersect, REL_INTERSECT_SQL),
     "rel_intersect_all": QuerySpec(rel_intersect_all, REL_INTERSECT_ALL_SQL),
     "rel_except_all": QuerySpec(rel_except_all, REL_EXCEPT_ALL_SQL),
     "rel_rollup": QuerySpec(rel_rollup, REL_ROLLUP_SQL),
     "rel_cube": QuerySpec(rel_cube, REL_CUBE_SQL),
-    "rel_grouping_sets": QuerySpec(rel_grouping_sets, REL_GROUPING_SETS_SQL),
     "rel_distinct_on": QuerySpec(rel_distinct_on, REL_DISTINCT_ON_SQL),
     "rel_values_inmem": QuerySpec(rel_values_inmem, REL_VALUES_SQL),
     "rel_empty_relation": QuerySpec(rel_empty_relation, REL_EMPTY_SQL),
@@ -531,7 +448,6 @@ QUERIES: dict[str, QuerySpec] = {
     "rel_right_outer": QuerySpec(rel_right_outer, REL_RIGHT_OUTER_SQL),
     "rel_theta_join": QuerySpec(rel_theta_join, REL_THETA_SQL),
     "rel_null_ordering": QuerySpec(rel_null_ordering, REL_NULL_ORDERING_SQL),
-    "rel_not_in": QuerySpec(rel_not_in, REL_NOT_IN_SQL),
     "rel_not_in_nulls": QuerySpec(rel_not_in_nulls, REL_NOT_IN_NULLS_SQL),
     "rel_generate_series": QuerySpec(rel_generate_series, REL_GENERATE_SERIES_SQL),
     "rel_salted_skew_join": QuerySpec(rel_salted_skew_join, REL_SALTED_SKEW_SQL),

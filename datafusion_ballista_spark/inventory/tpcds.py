@@ -4,25 +4,26 @@ The reference gates on the 99 published TPC-DS texts (reference
 benchmarks/queries-tpcds/q1.sql..q99.sql, CI .github/workflows/tpcds.yml:55-74).
 The registry runs those same texts as ``tpcds_real_qN`` over the committed
 star fixture (inventory/tpcds_real*.py). The DataFrame analogues kept here
-are the ones that still exercise something their verbatim twin does not.
-The rule: take the static physical plan (AQE off), drop the codegen
-wrappers (WholeStageCodegen, InputAdapter, ColumnarToRow, Reused*), walk
-subquery plans too, and compare the sets of operator kinds. An analogue
-stays only while its plan has a kind its twin's lacks; one whose kinds are
-a subset of its twin's was retired, since extra nodes of a kind the twin
-already runs (more Project or Exchange steps) track query size, not which
-engine code runs. tests/test_plans.py::test_tpcds_shape_adds_an_operator
-re-checks the rule, so a Spark upgrade or an edit to a twin that makes an
-analogue redundant turns it red.
+are the ones that still exercise something no other entry does.
 
-Why each of the 22 analogues stays (operator kinds their twin's plan
-lacks):
+The rule (tests/test_plans.py::test_feature_probes_are_not_subsumed)
+covers every feature-probe module, this one included. An entry's
+fingerprint is the set of plan classes, Scala objects, data-type kinds and
+PythonUDF names in the toJSON() of its parsed logical and static physical
+plans (AQE off), plus the package functions outside inventory/ that its
+build enters. An analogue stays only while no other single planned entry's
+fingerprint holds all of its own; a Spark upgrade or an edit that makes
+one redundant turns the test red. 77 analogues went first, as subsets of
+their verbatim twin's operator kinds; q62 and q91 went next, subsumed by
+q50/q99 and q71.
 
-- Sort — q5, q15, q45, q50, q62, q66, q76, q80, q85, q90, q99: a global
+What each of the 20 analogues adds to its verbatim twin's plan:
+
+- Sort — q5, q15, q45, q50, q66, q76, q80, q85, q90, q99: a global
   ORDER BY with no LIMIT, where the published text ends in
   ``ORDER BY ... LIMIT 100`` and plans a TakeOrderedAndProject instead
   (q90's twin, a one-row cross join of scalar counts, plans neither);
-- TakeOrderedAndProject — q24, q39, q64, q71, q73, q91, q98: the converse,
+- TakeOrderedAndProject — q24, q39, q64, q71, q73, q98: the converse,
   a bounded top-k over a twin that sorts its whole output;
 - BroadcastNestedLoopJoin — q23, q24: a 1-row scalar threshold
   (max spend, spine average) cross-joined onto the spine;
@@ -543,7 +544,7 @@ def _fact(spark, sf):
     return t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
 
 
-# -- q50 (q62/q99 family): returned-line lag buckets by nation -------------
+# -- q50 (q99 family): returned-line lag buckets by nation ------------------
 def tpcds_q50_shape(spark: SparkSession, sf: str) -> DataFrame:
     """q99 family restricted to returned lines, grouped by supplier
     nation (ds q50's store-vs-return lag census)."""
@@ -586,48 +587,6 @@ FROM (SELECT n_name, date_diff('day', o_orderdate, l_shipdate) AS lag_d
       JOIN nation ON s_nationkey = n_nationkey
       WHERE l_returnflag = 'R')
 GROUP BY n_name ORDER BY n_name
-"""
-
-
-def tpcds_q62_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q62: ship-lag day-bucket histogram grouped by TWO dims
-    (priority x linestatus) — q99's bucket family with a wider grouping
-    key."""
-    t = tables(spark, sf, "lineitem", "orders")
-    lag_d = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    j = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    ).select("o_orderpriority", "l_linestatus", lag_d.alias("lag_d"))
-    return (
-        j.groupBy("o_orderpriority", "l_linestatus")
-        .agg(
-            F.sum(F.when(F.col("lag_d") <= 30, 1).otherwise(0)).alias("d30"),
-            F.sum(
-                F.when((F.col("lag_d") > 30) & (F.col("lag_d") <= 60), 1).otherwise(0)
-            ).alias("d60"),
-            F.sum(
-                F.when((F.col("lag_d") > 60) & (F.col("lag_d") <= 90), 1).otherwise(0)
-            ).alias("d90"),
-            F.sum(F.when(F.col("lag_d") > 90, 1).otherwise(0)).alias("d_over_90"),
-        )
-        .orderBy("o_orderpriority", "l_linestatus")
-    )
-
-
-TPCDS_Q62_SQL = """
-SELECT o_orderpriority, l_linestatus,
-  CAST(SUM(CASE WHEN lag_d <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS d30,
-  CAST(SUM(CASE WHEN lag_d > 30 AND lag_d <= 60 THEN 1 ELSE 0 END)
-       AS BIGINT) AS d60,
-  CAST(SUM(CASE WHEN lag_d > 60 AND lag_d <= 90 THEN 1 ELSE 0 END)
-       AS BIGINT) AS d90,
-  CAST(SUM(CASE WHEN lag_d > 90 THEN 1 ELSE 0 END) AS BIGINT) AS d_over_90
-FROM (
-  SELECT o_orderpriority, l_linestatus,
-         date_diff('day', o_orderdate, l_shipdate) AS lag_d
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-GROUP BY o_orderpriority, l_linestatus
-ORDER BY o_orderpriority, l_linestatus
 """
 
 
@@ -1062,43 +1021,6 @@ ORDER BY event_type
 """
 
 
-def tpcds_q91_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """ds q91: returned-revenue loss per (nation, segment, month of
-    1995) — the returns fact filtered and rolled up across three dims."""
-    t = tables(spark, sf, "lineitem", "orders", "customer", "nation")
-    r = (
-        t.lineitem.where(F.col("l_returnflag") == "R")
-        .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.year("o_orderdate") == 1995)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    return (
-        r.groupBy(
-            "n_name",
-            "c_mktsegment",
-            F.month("o_orderdate").alias("m"),
-        )
-        .agg(F.sum(_rev()).cast("double").alias("returns_loss"))
-        .orderBy("n_name", "c_mktsegment", "m")
-        .limit(200)
-    )
-
-
-TPCDS_Q91_SQL = f"""
-SELECT n_name, c_mktsegment, month(o_orderdate) AS m,
-       CAST(SUM({_REV_SQL}) AS DOUBLE) AS returns_loss
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R' AND year(o_orderdate) = 1995
-GROUP BY 1, 2, 3
-ORDER BY n_name, c_mktsegment, m
-LIMIT 200
-"""
-
-
 # --------------------------------------------------------------------------
 # q98 shape: revenue share within class via window over aggregate.
 # reference: benchmarks/queries-tpcds/q98.sql
@@ -1223,7 +1145,6 @@ QUERIES: dict[str, QuerySpec] = {
     "tpcds_q39_shape": QuerySpec(tpcds_q39_shape, TPCDS_Q39_SQL),
     "tpcds_q45_shape": QuerySpec(tpcds_q45_shape, TPCDS_Q45_SQL),
     "tpcds_q50_shape": QuerySpec(tpcds_q50_shape, TPCDS_Q50_SQL),
-    "tpcds_q62_shape": QuerySpec(tpcds_q62_shape, TPCDS_Q62_SQL),
     "tpcds_q64_shape": QuerySpec(tpcds_q64_shape, TPCDS_Q64_SQL),
     "tpcds_q66_shape": QuerySpec(tpcds_q66_shape, TPCDS_Q66_SQL),
     "tpcds_q71_shape": QuerySpec(tpcds_q71_shape, TPCDS_Q71_SQL),
@@ -1233,7 +1154,6 @@ QUERIES: dict[str, QuerySpec] = {
     "tpcds_q80_shape": QuerySpec(tpcds_q80_shape, TPCDS_Q80_SQL),
     "tpcds_q85_shape": QuerySpec(tpcds_q85_shape, TPCDS_Q85_SQL),
     "tpcds_q90_shape": QuerySpec(tpcds_q90_shape, TPCDS_Q90_SQL),
-    "tpcds_q91_shape": QuerySpec(tpcds_q91_shape, TPCDS_Q91_SQL),
     "tpcds_q98_shape": QuerySpec(tpcds_q98_shape, TPCDS_Q98_SQL),
     "tpcds_q99_shape": QuerySpec(tpcds_q99_shape, TPCDS_Q99_SQL),
 }

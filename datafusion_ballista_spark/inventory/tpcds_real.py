@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_ballista_spark.inventory import QuerySpec
+from datafusion_ballista_spark.sources.registry import load_table
 
 FIXTURE_TABLES = (
     "date_dim",
@@ -101,33 +102,15 @@ def fixture_dir() -> str:
     return d
 
 
-_DF_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _register(spark: SparkSession) -> None:
-    """(Re)register the 24 fixture views. The DataFrames are cached per
-    SparkContext (re-reading 24 parquet schemas per query call dominated
-    sub-second queries), but the views are re-registered EVERY call:
-    other inventory queries legitimately bind the same names (TPC-H's
-    ``customer``/``orders`` vs this schema's) and view registration is a
-    cheap catalog-only operation.
-
-    Cache key = (applicationId, fixture dir): applicationId is unique per
-    SparkContext lifetime, so a restarted context never sees stale
-    DataFrames; multiple SparkSessions over one context can safely share
-    the plans (DataFrames are context-scoped, not session-scoped, for
-    parquet reads with no session-local catalog state)."""
+    """(Re)register the 24 fixture views on every call: other inventory
+    queries legitimately bind the same names (TPC-H's ``customer``/``orders``
+    vs this schema's) and view registration is a cheap catalog-only
+    operation. The DataFrames come from the fixture-table cache
+    (sources.registry.load_table), so each parquet schema is read once."""
     d = fixture_dir()
-    key = (spark.sparkContext.applicationId, d)
-    dfs = _DF_CACHE.get(key)
-    if dfs is None:
-        dfs = [
-            (t, spark.read.parquet(os.path.join(d, f"{t}.parquet")))
-            for t in FIXTURE_TABLES
-        ]
-        _DF_CACHE[key] = dfs
-    for t, df in dfs:
-        df.createOrReplaceTempView(t)
+    for t in FIXTURE_TABLES:
+        load_table(spark, d, t).createOrReplaceTempView(t)
 
 
 def _oracle(body: str) -> str:

@@ -35,8 +35,62 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _PID = "__gw_pid"
-_LOCAL_RN = "__gw_local_rn"
+_LOCAL = "__gw_local"
 _OFFSET = "__gw_offset"
+
+
+def _stitch(
+    df: DataFrame,
+    order_cols: list[Column],
+    num_partitions: int | None,
+    fn: Column,
+    total: Column,
+    out_col: str,
+    offset_type: str | None = None,
+) -> DataFrame:
+    """The shared algorithm: range-repartition on ``order_cols``, evaluate
+    the window function ``fn`` within each range partition in sort order,
+    then add the preceding partitions' cumulated ``total`` (a per-partition
+    aggregate, one row per partition, cumulated driver-side and broadcast
+    back). Offsets take ``offset_type``, else the local column's own type."""
+    n = num_partitions or df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"
+    )
+    # localCheckpoint PINS the range partitioning: the range partitioner
+    # SAMPLES its boundaries, so without materialization the totals job and
+    # the final job could re-execute the shuffle with different boundaries,
+    # silently mismatching offsets and partition ids between the two runs.
+    # Joining the totals in-plan instead does not help: ColumnPruning gives
+    # the totals branch its own, narrower range exchange, which samples its
+    # own boundaries (no ReusedExchange), so ranks and sums come out wrong.
+    ranged = (
+        df.repartitionByRange(int(n), *order_cols)
+        .withColumn(_PID, F.spark_partition_id())
+        .localCheckpoint()
+    )
+    # the frame the ranking functions require, and the running sum's
+    w = (
+        Window.partitionBy(_PID)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = ranged.withColumn(_LOCAL, fn.over(w))
+    local_type = dict(local.dtypes)[_LOCAL]
+    # fsum keeps double offsets error-free over any partition count; cheap
+    # because there are at most shuffle-partitions totals.
+    add = math.fsum if local_type in ("float", "double") else sum
+    offsets, prior = [], []
+    for pid, t in sorted(local.groupBy(_PID).agg(total).collect()):
+        offsets.append((pid, str(add(prior))))
+        prior.append(t if t is not None else 0)
+    off_df = df.sparkSession.createDataFrame(
+        offsets, f"{_PID} int, {_OFFSET} string"
+    ).withColumn(_OFFSET, F.col(_OFFSET).cast(offset_type or local_type))
+    return (
+        local.join(F.broadcast(off_df), _PID)
+        .withColumn(out_col, F.col(_LOCAL) + F.col(_OFFSET))
+        .drop(_PID, _LOCAL, _OFFSET)
+    )
 
 
 def global_row_number(
@@ -48,38 +102,16 @@ def global_row_number(
     """Append a GLOBAL 1-based row number ordered by ``order_cols`` without
     a single-partition sort. ``order_cols`` must end in a unique tiebreaker
     for exact ranks."""
-    n = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    # localCheckpoint PINS the range partitioning: the range partitioner
-    # SAMPLES its boundaries, so without materialization the counts job and
-    # the final job could re-execute the shuffle with different boundaries,
-    # silently mismatching offsets and partition ids between the two runs.
-    ranged = (
-        df.repartitionByRange(int(n), *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w = Window.partitionBy(_PID).orderBy(*order_cols)
-    local = ranged.withColumn(_LOCAL_RN, F.row_number().over(w))
-    # one row per partition; tiny driver-side cumulation, broadcast back
-    counts = sorted(
-        (r[_PID], r["c"])
-        for r in local.groupBy(_PID).agg(F.count(F.lit(1)).alias("c")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, c in counts:
-        offsets.append((pid, acc))
-        acc += c
-    off_df = df.sparkSession.createDataFrame(
-        offsets, f"{_PID} int, {_OFFSET} bigint"
-    )
-    return (
-        local.join(F.broadcast(off_df), _PID)
-        # bigint on purpose: this operator exists for full-table ranking at
-        # scale, where ranks exceed 2^31 (the reference's row_number is i64).
-        .withColumn(out_col, (F.col(_LOCAL_RN) + F.col(_OFFSET)).cast("bigint"))
-        .drop(_PID, _LOCAL_RN, _OFFSET)
+    # bigint on purpose: this operator exists for full-table ranking at
+    # scale, where ranks exceed 2^31 (the reference's row_number is i64).
+    return _stitch(
+        df,
+        order_cols,
+        num_partitions,
+        F.row_number(),
+        F.count(F.lit(1)),
+        out_col,
+        "bigint",
     )
 
 
@@ -96,36 +128,17 @@ def global_rank(
     a tie group never straddles a partition boundary, so a local rank plus
     the preceding partitions' row count (or distinct-key count for dense)
     is the global rank."""
-    n = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    ranged = (
-        df.repartitionByRange(int(n), *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()  # pin sampled range boundaries (see above)
-    )
-    w = Window.partitionBy(_PID).orderBy(*order_cols)
-    fn = F.dense_rank() if dense else F.rank()
-    local = ranged.withColumn(_LOCAL_RN, fn.over(w))
-    if dense:
-        # dense offset = number of DISTINCT key tuples in prior partitions,
-        # which is exactly the partition's max local dense_rank (no need to
-        # re-derive the key expression from the sort columns).
-        counts_df = local.groupBy(_PID).agg(F.max(_LOCAL_RN).alias("c"))
-    else:
-        counts_df = ranged.groupBy(_PID).agg(F.count(F.lit(1)).alias("c"))
-    counts = sorted((r[_PID], r["c"]) for r in counts_df.collect())
-    offsets, acc = [], 0
-    for pid, c in counts:
-        offsets.append((pid, acc))
-        acc += c
-    off_df = df.sparkSession.createDataFrame(
-        offsets, f"{_PID} int, {_OFFSET} bigint"
-    )
-    return (
-        local.join(F.broadcast(off_df), _PID)
-        .withColumn(out_col, (F.col(_LOCAL_RN) + F.col(_OFFSET)).cast("bigint"))
-        .drop(_PID, _LOCAL_RN, _OFFSET)
+    # dense offset = number of DISTINCT key tuples in prior partitions,
+    # which is exactly the partition's max local dense_rank (no need to
+    # re-derive the key expression from the sort columns).
+    return _stitch(
+        df,
+        order_cols,
+        num_partitions,
+        F.dense_rank() if dense else F.rank(),
+        F.max(_LOCAL) if dense else F.count(F.lit(1)),
+        out_col,
+        "bigint",
     )
 
 
@@ -145,46 +158,11 @@ def global_running_sum(
     deterministic.
 
     Exactness: decimal/integer value columns stitch exactly (addition is
-    associative). For float/double values the per-partition offsets are
-    accumulated with ``math.fsum`` (error-free driver-side summation), so
-    drift vs a serial scan is bounded to the final rounding of each offset
-    — pass a decimal column when bit-exact running sums are required."""
-    n = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    val = "__gw_val"
-    ranged = (
-        df.withColumn(val, value_col)
-        .repartitionByRange(int(n), *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn(_LOCAL_RN, F.sum(val).over(w))
-    # Offsets carry the LOCAL SUM's OWN type (pass decimals for exact,
-    # order-independent stitching — float partials would re-associate).
-    sum_type = dict(local.dtypes)[_LOCAL_RN]
-    sums = sorted(
-        (r[_PID], r["s"])
-        for r in ranged.groupBy(_PID).agg(F.sum(val).alias("s")).collect()
-    )
-    float_vals = sum_type in ("float", "double")
-    offsets, prior = [], []
-    for pid, s in sums:
-        # fsum keeps double offsets error-free over any partition count;
-        # cheap because len(prior) <= shuffle partitions (metadata-sized).
-        acc = math.fsum(prior) if float_vals else sum(prior)
-        offsets.append((pid, str(acc)))
-        prior.append(s if s is not None else 0)
-    off_df = df.sparkSession.createDataFrame(
-        offsets, f"{_PID} int, {_OFFSET} string"
-    ).withColumn(_OFFSET, F.col(_OFFSET).cast(sum_type))
-    return (
-        local.join(F.broadcast(off_df), _PID)
-        .withColumn(out_col, F.col(_LOCAL_RN) + F.col(_OFFSET))
-        .drop(_PID, _LOCAL_RN, _OFFSET, val)
+    associative); offsets carry the local sum's own type. For float/double
+    values the per-partition offsets are accumulated with ``math.fsum``
+    (error-free driver-side summation), so drift vs a serial scan is
+    bounded to the final rounding of each offset — pass a decimal column
+    when bit-exact running sums are required."""
+    return _stitch(
+        df, order_cols, num_partitions, F.sum(value_col), F.sum(value_col), out_col
     )

@@ -110,7 +110,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_available_now(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming query over all currently-available input and
-    return the materialized result (memory sink, bounded run)."""
+    return its result, a table over the memory sink (bounded run)."""
     name = "stream_out_" + uuid.uuid4().hex[:8]
     q = (
         sdf.writeStream.format("memory")
@@ -120,10 +120,6 @@ def run_available_now(sdf: DataFrame, output_mode: str = "complete") -> DataFram
         .start()
     )
     q.awaitTermination()
-    spark = sdf.sparkSession
-    out = spark.table(name)
-    # Materialize before the run's teardown drops the sink table.
-    rows = out.collect()
-    if rows:
-        return spark.createDataFrame(rows, out.schema)
-    return spark.createDataFrame([], out.schema)
+    # The memory sink keeps its rows after the query terminates, so they
+    # are read in place rather than sent through the driver.
+    return sdf.sparkSession.table(name)

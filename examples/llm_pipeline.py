@@ -2,7 +2,7 @@
 """LLM training-data mini-pipeline — the capability tier beyond the
 reference's examples crate: exact dedup -> quality filter -> fuzzy
 dedup -> token accounting over the `documents` table, each step a
-registry operator (see `__spark_entry__.queries()` for all 366).
+registry operator (see `__spark_entry__.queries()` for all 360).
 
 Usage: python examples/llm_pipeline.py [data_dir]
 """

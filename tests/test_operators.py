@@ -112,3 +112,36 @@ def test_global_running_sum_matches_single_partition_window(spark):
         for r in df.withColumn("rsum", F.sum("v").over(w)).collect()
     }
     assert got == want
+
+
+def test_large_input_matches_single_partition_window(spark):
+    """Past the range partitioner's sample size (20 rows per output
+    partition, drawn from each input partition) its boundaries depend on
+    the sampling job, so offsets and local ranks must come from one pinned
+    partitioning."""
+    from datafusion_ballista_spark.operators import global_rank, global_running_sum
+
+    df = spark.range(6000).selectExpr(
+        "id", "CAST(hash(id) % 1000 AS DECIMAL(18,2)) AS v"
+    )
+    order = [F.desc("v"), F.asc("id")]
+    got = global_running_sum(
+        global_rank(
+            global_row_number(df, order, num_partitions=7),
+            [F.desc("v")],
+            num_partitions=7,
+        ),
+        order,
+        F.col("v"),
+        out_col="rsum",
+        num_partitions=7,
+    )
+    w = Window.orderBy(*order)
+    want = df.select(
+        "id",
+        F.row_number().over(w).cast("bigint").alias("rn"),
+        F.rank().over(Window.orderBy(F.desc("v"))).cast("bigint").alias("rnk"),
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("rsum"),
+    )
+    cols = ["id", "rn", "rnk", "rsum"]
+    assert sorted(got.select(cols).collect()) == sorted(want.collect())

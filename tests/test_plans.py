@@ -7,8 +7,7 @@ sweep builds every lazily-planned inventory query and asserts:
 - no CartesianProduct / BroadcastNestedLoopJoin outside the whitelist of
   known scalar (1-row) cross joins and the deliberate theta join;
 - parquet scans in filtered TPC-H queries carry PushedFilters;
-- every TPC-DS shape analogue still adds an operator kind to its
-  verbatim twin's plan.
+- no entry of a feature-probe module is subsumed by another entry.
 
 Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
 execution) are excluded — their plans are audited by their own runs.
@@ -16,9 +15,17 @@ execution) are excluded — their plans are audited by their own runs.
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import sys
+
 import pytest
 
+import datafusion_ballista_spark
 from datafusion_ballista_spark.inventory import all_queries
+from datafusion_ballista_spark.inventory.tpcds_real import FIXTURE_TABLES, fixture_dir
+from datafusion_ballista_spark.sources.registry import tables
 from tests.conftest import EAGER_QUERIES, SF_DIR
 
 # Queries whose *construction* executes work (writes, streams, collects):
@@ -37,7 +44,6 @@ _NESTED_LOOP_OK = {
     "tpch_q22_global_sales",
     "rel_values_inmem",  # range-band join against a 3-row literal table
     "rel_theta_join",
-    "rel_not_in",
     "rel_not_in_nulls",
     "win_share_of_total",
     "tpcds_real_q88",  # verbatim ds q88: same eight 1-row counts, real schema
@@ -80,19 +86,95 @@ _NESTED_LOOP_OK = {
 }
 
 _REGISTRY = all_queries()
+
+
+_PACKAGE = os.path.dirname(datafusion_ballista_spark.__file__) + os.sep
+_INVENTORY = os.path.join(_PACKAGE, "inventory") + os.sep
+
+
+def _module(name: str) -> str:
+    return _REGISTRY[name].spark.__module__.rsplit(".", 1)[-1]
+
+
 _ALL = {
     name: spec
     for name, spec in _REGISTRY.items()
-    if spec.spark.__module__.rsplit(".", 1)[-1] not in _EAGER_MODULES
-    and name not in EAGER_QUERIES
+    if _module(name) not in _EAGER_MODULES and name not in EAGER_QUERIES
 }
 
 
+@functools.cache
+def _build(spark, name: str) -> tuple[str, frozenset[str]]:
+    """Build an entry once per session, warm and with AQE off (so the plan
+    is static, not deferred to runtime). Returns its formatted physical
+    plan and its fingerprint: the plan classes, Scala objects, data-type
+    kinds and PythonUDF names in the toJSON() of its parsed logical and
+    physical plans, plus the package functions outside inventory/ that
+    the build enters."""
+    # load the fixture tables first: a table's first load would otherwise
+    # add the loader to whichever entry happens to build first
+    tables(spark, SF_DIR)
+    tables(spark, fixture_dir(), *FIXTURE_TABLES)
+    found = set()
+
+    def profile(frame, event, arg):
+        path = frame.f_code.co_filename
+        if event == "call" and path.startswith(_PACKAGE) and not path.startswith(
+            _INVENTORY
+        ):
+            found.add(f"fn:{path[len(_PACKAGE):]}:{frame.f_code.co_qualname}")
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sys.setprofile(profile)
+        try:
+            df = _ALL[name].spark(spark, SF_DIR)
+        finally:
+            sys.setprofile(None)
+        qe = df._jdf.queryExecution()
+        plan = qe.explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        for tree in (qe.logical(), qe.executedPlan()):
+            _plan_elements(json.loads(tree.toJSON()), found)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return plan, frozenset(found)
+
+
+def _plan_elements(node, found: set[str]) -> None:
+    if isinstance(node, list):
+        for item in node:
+            _plan_elements(item, found)
+    elif isinstance(node, dict):
+        for key, value in node.items():
+            if key in ("class", "object"):
+                found.add(f"{key}:{value}")
+            elif key == "dataType":
+                _type_kinds(value, found)
+            else:
+                _plan_elements(value, found)
+        if node.get("class", "").endswith(".PythonUDF"):
+            found.add(f"udf:{node['name']}")
+
+
+def _type_kinds(dtype, found: set[str]) -> None:
+    if isinstance(dtype, str):
+        found.add("type:" + dtype.split("(", 1)[0])
+        return
+    found.add("type:" + dtype["type"])
+    for key in ("elementType", "keyType", "valueType"):
+        if key in dtype:
+            _type_kinds(dtype[key], found)
+    for field in dtype.get("fields", ()):
+        _type_kinds(field["type"], found)
+
+
 def _plan(spark, name):
-    df = _ALL[name].spark(spark, SF_DIR)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return _build(spark, name)[0]
 
 
 @pytest.mark.parametrize("name", sorted(_ALL))
@@ -147,43 +229,29 @@ def test_allowlists_name_registered_queries():
     assert EAGER_QUERIES <= set(_REGISTRY), EAGER_QUERIES - set(_REGISTRY)
 
 
-# Codegen and reuse wrappers: they say how a plan runs, not which operator
-# code it exercises.
-_PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused")
+# Modules whose entries exist only to exercise an engine feature. The
+# benchmark suites (tpch, tpcds_real*, h2o) mirror published query texts,
+# and each algorithm module's entry ships a capability: they stay whatever
+# they overlap, though any planned entry can subsume a feature probe.
+_FEATURE_PROBE_MODULES = {
+    "relational",
+    "windows",
+    "sql_surface",
+    "functions_cov",
+    "udf_surface",
+    "tpcds",
+}
 
 
-def _operator_kinds(spark, name) -> set[str]:
-    """Operator names in the static physical plan (AQE off, so the plan is
-    not deferred to runtime), subquery plans included, wrappers dropped."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = _REGISTRY[name].spark(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    kinds, stack = set(), [plan]
-    while stack:
-        node = stack.pop()
-        kind = node.nodeName().strip()
-        if not kind.startswith(_PLAN_WRAPPERS):
-            kinds.add(kind)
-        for seq in (node.children(), node.subqueries()):
-            stack.extend(seq.apply(i) for i in range(seq.size()))
-    return kinds
-
-
-_TPCDS_SHAPES = sorted(
-    n for n in _REGISTRY if n.startswith("tpcds_q") and n.endswith("_shape")
-)
-
-
-@pytest.mark.parametrize("name", _TPCDS_SHAPES)
-def test_tpcds_shape_adds_an_operator(name, spark):
-    """A DataFrame analogue stays only while it exercises an operator kind
-    its verbatim twin does not; the rest were retired as subsumed. Red
-    here means a Spark upgrade or an edit to either side made this shape
-    redundant: retire it, or give it back something the twin lacks."""
-    twin = name.replace("tpcds_q", "tpcds_real_q").removesuffix("_shape")
-    added = _operator_kinds(spark, name) - _operator_kinds(spark, twin)
-    assert added, f"[{name}] every operator kind also appears in {twin}"
+def test_feature_probes_are_not_subsumed(spark):
+    """A feature-probe entry stays only while, against every other planned
+    entry, its fingerprint holds an element the other's lacks. Red here names each subsumed entry and what subsumes it: retire the
+    entry, or give it back something of its own."""
+    prints = {name: _build(spark, name)[1] for name in sorted(_ALL)}
+    subsumed = {
+        name: sorted(o for o in prints if o != name and fp <= prints[o])
+        for name, fp in prints.items()
+        if _module(name) in _FEATURE_PROBE_MODULES
+    }
+    subsumed = {name: by for name, by in subsumed.items() if by}
+    assert not subsumed, subsumed
