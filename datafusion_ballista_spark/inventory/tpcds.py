@@ -13,9 +13,7 @@ PythonUDF names in the toJSON() of its parsed logical and static physical
 plans (AQE off), plus the package functions outside inventory/ that its
 build enters. An analogue stays only while no other single planned entry's
 fingerprint holds all of its own; a Spark upgrade or an edit that makes
-one redundant turns the test red. 77 analogues went first, as subsets of
-their verbatim twin's operator kinds; q62 and q91 went next, subsumed by
-q50/q99 and q71.
+one redundant turns the test red.
 
 What each of the 20 analogues adds to its verbatim twin's plan:
 
