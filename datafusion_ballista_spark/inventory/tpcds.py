@@ -15,7 +15,8 @@ build enters. An analogue stays only while no other single planned entry's
 fingerprint holds all of its own; a Spark upgrade or an edit that makes
 one redundant turns the test red.
 
-What each of the 20 analogues adds to its verbatim twin's plan:
+tests/test_plans.py::test_tpcds_shape_adds_an_operator pins, besides,
+what each of the 20 analogues adds to its verbatim twin's plan:
 
 - Sort — q5, q15, q45, q50, q66, q76, q80, q85, q90, q99: a global
   ORDER BY with no LIMIT, where the published text ends in

@@ -7,6 +7,8 @@ sweep builds every lazily-planned inventory query and asserts:
 - no CartesianProduct / BroadcastNestedLoopJoin outside the whitelist of
   known scalar (1-row) cross joins and the deliberate theta join;
 - parquet scans in filtered TPC-H queries carry PushedFilters;
+- every TPC-DS shape analogue still adds an operator kind to its
+  verbatim twin's plan;
 - no entry of a feature-probe module is subsumed by another entry.
 
 Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
@@ -103,14 +105,20 @@ _ALL = {
 }
 
 
+# Codegen and reuse wrappers: they say how a plan runs, not which operator
+# code it exercises.
+_PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused")
+
+
 @functools.cache
-def _build(spark, name: str) -> tuple[str, frozenset[str]]:
+def _build(spark, name: str) -> tuple[str, frozenset[str], frozenset[str]]:
     """Build an entry once per session, warm and with AQE off (so the plan
     is static, not deferred to runtime). Returns its formatted physical
-    plan and its fingerprint: the plan classes, Scala objects, data-type
+    plan; its fingerprint: the plan classes, Scala objects, data-type
     kinds and PythonUDF names in the toJSON() of its parsed logical and
     physical plans, plus the package functions outside inventory/ that
-    the build enters."""
+    the build enters; and the operator names of its physical plan,
+    subquery plans included, wrappers dropped."""
     # load the fixture tables first: a table's first load would otherwise
     # add the loader to whichever entry happens to build first
     tables(spark, SF_DIR)
@@ -140,9 +148,17 @@ def _build(spark, name: str) -> tuple[str, frozenset[str]]:
         )
         for tree in (qe.logical(), qe.executedPlan()):
             _plan_elements(json.loads(tree.toJSON()), found)
+        kinds, stack = set(), [qe.executedPlan()]
+        while stack:
+            node = stack.pop()
+            kind = node.nodeName().strip()
+            if not kind.startswith(_PLAN_WRAPPERS):
+                kinds.add(kind)
+            for seq in (node.children(), node.subqueries()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return plan, frozenset(found)
+    return plan, frozenset(found), frozenset(kinds)
 
 
 def _plan_elements(node, found: set[str]) -> None:
@@ -227,6 +243,22 @@ def test_allowlists_name_registered_queries():
     silently exempt whatever later reuses it."""
     assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
     assert EAGER_QUERIES <= set(_REGISTRY), EAGER_QUERIES - set(_REGISTRY)
+
+
+_TPCDS_SHAPES = sorted(
+    n for n in _ALL if n.startswith("tpcds_q") and n.endswith("_shape")
+)
+
+
+@pytest.mark.parametrize("name", _TPCDS_SHAPES)
+def test_tpcds_shape_adds_an_operator(name, spark):
+    """A DataFrame analogue stays only while it exercises an operator kind
+    its verbatim twin does not; the rest were retired as subsumed. Red
+    here means a Spark upgrade or an edit to either side made this shape
+    redundant: retire it, or give it back something the twin lacks."""
+    twin = name.replace("tpcds_q", "tpcds_real_q").removesuffix("_shape")
+    added = _build(spark, name)[2] - _build(spark, twin)[2]
+    assert added, f"[{name}] every operator kind also appears in {twin}"
 
 
 # Modules whose entries exist only to exercise an engine feature. The
