@@ -7,7 +7,9 @@ Reference parity: Ballista implements a KLL sketch
 statistics (``ballista/core/src/execution_plans/runtime_stats.rs``)
 whose one consumer is the scheduler's choice of global range-partition
 boundaries. This module re-expresses that capability Spark-first as
-three operators over ``lineitem.l_extendedprice``:
+three operators over ``lineitem.l_extendedprice``. Each is one lazy
+``spark.sql`` text over the lineitem DataFrame: building one runs no
+Spark job, and no value travels through the driver.
 
 * ``sketch_quantile_bottomk`` — deterministic bottom-k (md5-hash-order)
   uniform sample quantiles, ORACLE-PAIRED: the per-partition top-k by
@@ -19,22 +21,19 @@ three operators over ``lineitem.l_extendedprice``:
   the value domain into P buckets at the sketch's i/P quantiles and
   report each bucket's EXACT population and skew, all from one
   conditional-aggregation corpus pass. Oracle-paired.
-* ``sketch_kll_quantiles`` — a true compactor-stack KLL
-  (operators/kll.py, deterministic coins) run executor-side over Arrow
-  batches and merged in one bounded task — the exact
-  executor-sketch -> scheduler-merge topology of the reference. The
-  compaction cascade consumes items in physical partition/batch order,
-  so the ESTIMATE is a function of the execution layout — no
-  cross-engine replay of the estimate can exist even in principle.
-  Round 13 made the entry hash-provable anyway by restructuring the
-  OUTPUT (the verdict-blessed alternative to a recursive replay):
-  every returned column is a deterministic function of the DATA — the
-  md5-bottom-k sample quantiles with their exact corpus ranks, raw
-  data values and exact integers only — and the sketch estimate is
-  pinned INSIDE the plan by an assert_true that fails the whole query
-  if any estimate's exact rank drifts outside the 33000-ppm envelope.
-  DuckDB replays the identical sample and ranks; the sketch's
-  correctness is enforced (a broken sketch errors, never returns).
+* ``sketch_kll_quantiles`` — Spark's built-in DataSketches KLL
+  (``kll_sketch_agg_double``): a partial sketch per partition, merged in
+  one task — the executor-sketch -> scheduler-merge topology of the
+  reference, run inside the JVM. DataSketches compacts with random
+  coins, so the ESTIMATE varies between runs and no engine can replay
+  it. The OUTPUT does not vary: every returned column is a
+  deterministic function of the data — the md5-bottom-k sample
+  quantiles with their exact corpus ranks, raw data values and exact
+  integers only — and the sketch is pinned INSIDE the plan by a
+  filter on ``assert_true`` that fails the whole query if any
+  estimate's exact rank drifts outside the 33000-ppm envelope or the
+  sketch's count differs from the corpus. DuckDB replays the identical
+  sample and ranks; a broken sketch errors, never returns.
 
 Determinism contract: md5-hash sample membership and every ppm division
 are exact integers in both engines; quantile estimates are exact data
@@ -57,10 +56,9 @@ _CUT_P = 16  # range-partition fan-out for the cuts operator
 _KLL_K = 200  # KLL top-level capacity (the DataSketches default)
 # Asserted normalized-rank-error envelope for the KLL entry, in ppm.
 # Apache DataSketches quotes ~1.65% (99% conf) single-sketch rank error
-# at k=200; the deterministic-coin variant plus a cross-partition merge
-# measured <= 0.9% worst-case on the adversarial-stream property suite
-# (tests/test_sketch_quantiles.py), so 2x the published figure is a
-# conservative in-plan bound that still fails loudly on real breakage.
+# at k=200; 2x the published figure is a conservative in-plan bound that
+# still fails loudly on real breakage (the adversarial-stream suite in
+# tests/test_sketch_quantiles.py measures the built-in sketch against it).
 _KLL_BOUND_PPM = 33000
 
 
@@ -77,33 +75,47 @@ _HASH48_SQL_DUCK = (
 )
 
 
-def _bottomk_sample(spark: SparkSession, sf: str) -> list[float]:
-    """The sketch itself: values of the _QK rows with the smallest
-    md5-fold of the primary key, returned sorted by (value, hash).
+def _rank(num: int, den: int) -> int:
+    """1-indexed sample rank of quantile num/den: ceil(num/den * k)."""
+    return -(-num * _QK // den)
 
-    Per-partition state is O(k) (Spark plans the orderBy+limit as
+
+def _spark_sample_sql(name: str, ranks: dict[str, int]) -> str:
+    """The sketch itself, as CTEs over the ``{li}`` DataFrame argument
+    (Spark twin of _duck_sample_cte): the _QK rows with the smallest
+    md5-fold of the primary key, ranked by (value, hash), and a one-row
+    CTE ``name`` holding the sample value at each requested rank.
+
+    Per-partition state is O(k) (Spark plans the ORDER BY+LIMIT as
     TakeOrderedAndProject: partial top-k per partition, one bounded
-    merge — the sketch merge IS the partial agg). The collect is
-    bounded driver metadata (_QK rows at ANY corpus size) — the
-    kmeans-centroid precedent. md5 order is independent of the value,
-    so the sample is uniform and the classical sample-quantile bound
-    stderr = sqrt(phi*(1-phi)/k) applies (witnessed per row)."""
-    li = tables(spark, sf, "lineitem").lineitem
-    rows = (
-        li.select(
-            F.col("l_extendedprice").alias("v"),
-            F.expr(_hash48_sql_spark()).alias("h"),
-        )
-        .orderBy("h", "v")
-        .limit(_QK)
-        .collect()
+    merge — the sketch merge IS the partial agg). md5 order is
+    independent of the value, so the sample is uniform and the classical
+    sample-quantile bound stderr = sqrt(phi*(1-phi)/k) applies."""
+    picks = ",\n    ".join(
+        f"max(CASE WHEN rk = {rk} THEN v END) AS {col}"
+        for col, rk in ranks.items()
     )
-    return [r.v for r in sorted(rows, key=lambda r: (r.v, r.h))]
+    return f"""
+s AS (
+  SELECT l_extendedprice AS v, {_hash48_sql_spark()} AS h
+  FROM {{li}} ORDER BY h, v LIMIT {_QK}),
+r AS (SELECT v, row_number() OVER (ORDER BY v, h) AS rk FROM s),
+{name} AS (
+  SELECT {picks}
+  FROM r)"""
 
 
-def _sample_quantile(vals: list[float], num: int, den: int) -> float:
-    """Sample value at rank ceil(num/den * k) (1-indexed)."""
-    return vals[math.ceil(num * len(vals) / den) - 1]
+def _rank_sums(cols: list[str]) -> str:
+    """Exact corpus rank r<c> (count of values <= c) of each broadcast
+    column c, as conditional sums of one aggregation pass."""
+    return ",\n    ".join(
+        f"sum(CASE WHEN l_extendedprice <= {c} THEN 1 ELSE 0 END) AS r{c}"
+        for c in cols
+    )
+
+
+def _lineitem_sql(spark: SparkSession, sf: str, text: str) -> DataFrame:
+    return spark.sql(text, li=tables(spark, sf, "lineitem").lineitem)
 
 
 def sketch_quantile_bottomk(spark: SparkSession, sf: str) -> DataFrame:
@@ -116,52 +128,31 @@ def sketch_quantile_bottomk(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale (100 TB): the sample is one TakeOrderedAndProject (O(k) per
     partition, merge independent of N); the witness is ONE map-side-
-    combining pass producing a 1-row aggregate; output is 9 rows of
-    driver-scale metadata. true_rank*1e6 stays in int64 up to 9.2e12
-    corpus rows (~2 PB of lineitem) — past that, lift to DECIMAL(38,0)
-    like the Kneser-Ney counters. Reference: kll.rs's consumer computes
-    exactly these boundary quantiles for the scheduler."""
-    vals = _bottomk_sample(spark, sf)
-    ests = {p: _sample_quantile(vals, p, 100) for p in _PHIS}
-    li = tables(spark, sf, "lineitem").lineitem
-    agg = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.when(F.col("l_extendedprice") <= F.lit(q), 1).otherwise(0)
-            ).alias(f"r{p}")
-            for p, q in ests.items()
-        ],
+    combining pass over lineitem x the broadcast 1-row quantile CTE,
+    producing a 1-row aggregate; output is 9 rows of driver-scale
+    metadata. true_rank*1e6 stays in int64 up to 9.2e12 corpus rows
+    (~2 PB of lineitem) — past that, lift to DECIMAL(38,0) like the
+    Kneser-Ney counters. Reference: kll.rs's consumer computes exactly
+    these boundary quantiles for the scheduler."""
+    qs = [f"q{p}" for p in _PHIS]
+    rows = ", ".join(
+        f"{p}, {q}, r{q}, CAST({_bottomk_bound_ppm(p)} AS BIGINT)"
+        for p, q in zip(_PHIS, qs)
     )
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(p).cast("int").alias("phi_pct"),
-                F.lit(ests[p]).cast("double").alias("est_q"),
-                F.col(f"r{p}").cast("bigint").alias("true_rank"),
-                F.lit(
-                    int(3 * math.sqrt(p / 100 * (1 - p / 100) / _QK) * 1e6)
-                    + 1_000_000 // _QK
-                ).cast("bigint").alias("bound_ppm"),
-            )
-            for p in _PHIS
-        ]
-    )
-    return (
-        agg.select(F.col("n"), F.explode(entries).alias("e"))
-        .select(
-            F.col("e.phi_pct").alias("phi_pct"),
-            F.col("e.est_q").alias("est_q"),
-            F.lit(_QK).cast("int").alias("k"),
-            F.col("n"),
-            F.col("e.true_rank").alias("true_rank"),
-            F.expr("e.true_rank * 1000000 div n - e.phi_pct * 10000")
-            .cast("bigint")
-            .alias("err_ppm"),
-            F.col("e.bound_ppm").alias("bound_ppm"),
-        )
-        .orderBy("phi_pct")
-    )
+    return _lineitem_sql(spark, sf, f"""
+WITH {_spark_sample_sql("sq", {q: _rank(p, 100) for p, q in zip(_PHIS, qs)})},
+a AS (
+  SELECT /*+ BROADCAST(sq) */ count(1) AS n,
+    {", ".join(f"max({q}) AS {q}" for q in qs)},
+    {_rank_sums(qs)}
+  FROM {{li}} CROSS JOIN sq)
+SELECT phi_pct, est_q, CAST({_QK} AS INT) AS k, n, true_rank,
+  CAST(true_rank * 1000000 div n - phi_pct * 10000 AS BIGINT) AS err_ppm,
+  bound_ppm
+FROM a LATERAL VIEW stack({len(_PHIS)}, {rows}) t
+  AS phi_pct, est_q, true_rank, bound_ppm
+ORDER BY phi_pct
+""")
 
 
 def _duck_sample_cte() -> str:
@@ -212,66 +203,32 @@ def sketch_range_partition_cuts(spark: SparkSession, sf: str) -> DataFrame:
     1/P (ppm) — the balance evidence a scheduler would act on.
 
     Scale (100 TB): sample = one TakeOrderedAndProject; bucket counts
-    come from rank differences inside a single 1-row aggregate (NO
-    per-row bucket assignment, no join, no second shuffle); output is
-    P rows of metadata. A skewed domain shows up as dev_ppm, not as a
-    straggler task."""
-    vals = _bottomk_sample(spark, sf)
-    cuts = [_sample_quantile(vals, i, _CUT_P) for i in range(1, _CUT_P)]
-    li = tables(spark, sf, "lineitem").lineitem
-    agg = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.when(
-                    F.col("l_extendedprice") <= F.lit(cuts[i - 1]), 1
-                ).otherwise(0)
-            ).alias(f"r{i}")
-            for i in range(1, _CUT_P)
-        ],
+    come from rank differences inside a single 1-row aggregate over
+    lineitem x the broadcast 1-row cut CTE (NO per-row bucket
+    assignment, no second shuffle); output is P rows of metadata. A
+    skewed domain shows up as dev_ppm, not as a straggler task."""
+    cs = [f"c{i}" for i in range(1, _CUT_P)]
+    # bucket i spans (cut i-1, cut i]; the open ends hold ranks 0 and n
+    bounds = ["CAST(NULL AS DOUBLE)", *cs, "CAST(NULL AS DOUBLE)"]
+    ranks = ["0", *(f"r{c}" for c in cs), "n"]
+    buckets = ", ".join(
+        f"{i}, {bounds[i - 1]}, {bounds[i]}, {ranks[i]} - {ranks[i - 1]}"
+        for i in range(1, _CUT_P + 1)
     )
 
-    def _entry(i: int):
-        lo = (
-            F.lit(None).cast("double")
-            if i == 1
-            else F.lit(cuts[i - 2]).cast("double")
-        )
-        hi = (
-            F.lit(None).cast("double")
-            if i == _CUT_P
-            else F.lit(cuts[i - 1]).cast("double")
-        )
-        if i == 1:
-            n_rows = F.col("r1")
-        elif i == _CUT_P:
-            n_rows = F.col("n") - F.col(f"r{_CUT_P - 1}")
-        else:
-            n_rows = F.col(f"r{i}") - F.col(f"r{i - 1}")
-        return F.struct(
-            F.lit(i).cast("int").alias("bucket"),
-            lo.alias("lo"),
-            hi.alias("hi"),
-            n_rows.cast("bigint").alias("n_rows"),
-        )
-
-    entries = F.array(*[_entry(i) for i in range(1, _CUT_P + 1)])
-    return (
-        agg.select(F.col("n"), F.explode(entries).alias("e"))
-        .select(
-            F.col("e.bucket").alias("bucket"),
-            F.col("e.lo").alias("lo"),
-            F.col("e.hi").alias("hi"),
-            F.col("e.n_rows").alias("n_rows"),
-            F.expr("e.n_rows * 1000000 div n").cast("bigint").alias(
-                "share_ppm"
-            ),
-            F.expr(
-                f"e.n_rows * 1000000 div n - {1_000_000 // _CUT_P}"
-            ).cast("bigint").alias("dev_ppm"),
-        )
-        .orderBy("bucket")
-    )
+    return _lineitem_sql(spark, sf, f"""
+WITH {_spark_sample_sql("cq", {c: _rank(i, _CUT_P) for i, c in enumerate(cs, 1)})},
+a AS (
+  SELECT /*+ BROADCAST(cq) */ count(1) AS n,
+    {", ".join(f"max({c}) AS {c}" for c in cs)},
+    {_rank_sums(cs)}
+  FROM {{li}} CROSS JOIN cq)
+SELECT bucket, lo, hi, n_rows,
+  CAST(n_rows * 1000000 div n AS BIGINT) AS share_ppm,
+  CAST(n_rows * 1000000 div n - {1_000_000 // _CUT_P} AS BIGINT) AS dev_ppm
+FROM a LATERAL VIEW stack({_CUT_P}, {buckets}) t AS bucket, lo, hi, n_rows
+ORDER BY bucket
+""")
 
 
 SKETCH_CUTS_SQL = f"""
@@ -303,197 +260,67 @@ ORDER BY bucket
 
 
 def sketch_kll_quantiles(spark: SparkSession, sf: str) -> DataFrame:
-    """True compactor-stack KLL (operators/kll.py; reference parity
-    kll.rs:17-122) over l_extendedprice, run as the reference runs it:
-    every partition streams its Arrow batches into a local k=200 sketch
-    (bounded ~3k retained items regardless of stream length), partial
-    sketches serialize to (level, item) rows, and ONE bounded merge
-    task unions them (concatenate same-height compactors + re-compress
-    — kll.rs's own merge) and reads off the 9 quantile estimates.
+    """KLL quantile sketch (reference parity kll.rs:17-122) over
+    l_extendedprice on Spark's built-in DataSketches aggregate: every
+    partition folds its rows into a partial k=200 sketch (bounded state
+    regardless of stream length), ONE merge task unions them, and
+    kll_sketch_get_quantile_double reads off the 9 estimates.
 
-    The compaction cascade consumes items in physical partition/batch
-    order, so the ESTIMATE is a function of the execution layout, not
-    of the data alone — no cross-engine replay of the estimate can
-    exist even in principle (unlike train_pack_bestfit's deterministic
-    fold, which got a WITH RECURSIVE oracle in round 12). The entry is
-    hash-provable regardless (round 13, closing the last rows-only row
-    of the registry): the RETURNED columns are all deterministic
+    DataSketches compacts with random coins, so the ESTIMATE varies
+    between runs — no cross-engine replay of it can exist. The entry is
+    hash-provable regardless: the RETURNED columns are all deterministic
     functions of the data — for each phi, the md5-bottom-k sample
-    quantile (the module's deterministic, oracle-replayable sample:
-    hash-order top-k IS a mergeable sketch, TakeOrderedAndProject)
-    and its EXACT corpus rank from one conditional-aggregation pass —
-    while the KLL sketch is pinned IN-PLAN: the same single aggregate
-    also reads each KLL estimate's exact rank, and an assert_true
-    fails the whole query if any estimate's rank error exceeds the
-    33000-ppm envelope (sketch_ok can never reach the output as
-    false). Every hashed value is either a raw data value or an exact
-    integer, so the oracle replays bit-identically with no float
-    arithmetic at all. (A first r13 cut computed exact quantiles via a
-    distinct-value global cumsum instead — correct, but the extra
-    groupBy + range shuffle + checkpoint cost ~4 s at sf1 on a 1.7 s
-    query; the sample witness pins the sketch equally hard for ~0.5 s.)
+    quantile (the module's oracle-replayable sample) and its EXACT
+    corpus rank — while the KLL sketch is pinned IN-PLAN: the same
+    single aggregate also reads each KLL estimate's exact rank, and a
+    filter on assert_true fails the whole query if any estimate's rank
+    error exceeds the 33000-ppm envelope, if the sketch's n differs from
+    the corpus count, or if the corpus is empty (sketch_ok can never
+    reach the output as false). Every hashed value is either a raw data
+    value or an exact integer, so the oracle replays bit-identically
+    with no float arithmetic at all.
 
     Scale (100 TB): sketching is one corpus pass with O(k) state per
-    partition and NO shuffle of raw rows; the merge stage moves ~3k
-    rows per partition (metadata at any N — with 10^5 partitions,
-    tree-merge in two hops before the final task). The witness is one
-    bounded top-k (O(k)=1024 state per partition, merge independent
-    of N) + ONE map-side-combining corpus pass producing a 1-row
-    aggregate. The absorb loop is Python over Arrow batches —
-    per-executor, off the shuffle path, bounded by scan bandwidth at
-    cluster scale. rank*1e6 stays in int64 up to 9.2e12 corpus rows
-    (~2 PB of lineitem) — past that, lift to DECIMAL(38,0) like the
-    Kneser-Ney counters."""
-    from datafusion_ballista_spark.operators.kll import (
-        MIN_LEVEL_WIDTH,
-        KllSketch,
+    partition and NO shuffle of raw rows; the merge moves one sketch per
+    partition. The witness is one bounded top-k (O(k)=1024 state per
+    partition, merge independent of N) + ONE map-side-combining corpus
+    pass over lineitem x the two broadcast 1-row CTEs, producing a 1-row
+    aggregate. rank*1e6 stays in int64 up to 9.2e12 corpus rows (~2 PB
+    of lineitem) — past that, lift to DECIMAL(38,0) like the Kneser-Ney
+    counters."""
+    qs = [f"q{p}" for p in _PHIS]
+    ks = [f"k{p}" for p in _PHIS]
+    rows = ", ".join(
+        f"{p}, {q}, r{q}, r{k}" for p, q, k in zip(_PHIS, qs, ks)
     )
-
-    li = tables(spark, sf, "lineitem").lineitem
-
-    def _sketch_parts(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        s = KllSketch(_KLL_K)
-        for pdf in batches:
-            s.absorb(pdf.v.to_numpy())
-        if s.n == 0:
-            return
-        pid = TaskContext.get().partitionId()
-        rows = s.to_rows()
-        yield pd.DataFrame(
-            {
-                "pid": [pid] * len(rows),
-                "lvl": [h for h, _ in rows],
-                "item": [x for _, x in rows],
-                "pn": [s.n] * len(rows),
-                "mn": [s.min] * len(rows),
-                "mx": [s.max] * len(rows),
-            }
-        )
-
-    partials = li.select(F.col("l_extendedprice").alias("v")).mapInPandas(
-        _sketch_parts,
-        "pid int, lvl int, item double, pn bigint, mn double, mx double",
-    )
-
-    def _merge(key, pdf):
-        import pandas as pd
-
-        n = int(pdf.groupby("pid").pn.first().sum())
-        s = KllSketch.from_rows(
-            _KLL_K,
-            list(zip(pdf.lvl.tolist(), pdf.item.tolist())),
-            n,
-            float(pdf.mn.min()),
-            float(pdf.mx.max()),
-        )
-        return pd.DataFrame(
-            {
-                "phi_pct": _PHIS,
-                "est_q": [s.quantile(p / 100) for p in _PHIS],
-                "n": [s.n] * len(_PHIS),
-                "retained": [s.retained()] * len(_PHIS),
-            }
-        )
-
-    # The KLL sketch+merge job and the bottom-k sample job are
-    # independent single-pass scans of lineitem — run them as
-    # concurrent Spark jobs (round 13, the ivfpq thread-pool
-    # precedent): the shorter job's wall time disappears entirely.
-    # Caveat (r13 ADVICE): thread-submitted jobs don't inherit the
-    # caller's job group/description, so UI attribution and group
-    # cancellation differ from the serial form, and a failure in one
-    # job surfaces only after the other also runs to completion —
-    # acceptable for two bounded single-pass scans.
-    from concurrent.futures import ThreadPoolExecutor
-
-    merged = partials.groupBy(F.lit(1).alias("g")).applyInPandas(
-        _merge, "phi_pct int, est_q double, n bigint, retained int"
-    )
-    with ThreadPoolExecutor(2) as _ex:
-        _f_est = _ex.submit(merged.collect)
-        _f_vals = _ex.submit(_bottomk_sample, spark, sf)
-        est_rows, vals = _f_est.result(), _f_vals.result()
-    ests = {r.phi_pct: r.est_q for r in est_rows}
-    n = int(est_rows[0].n) if est_rows else 0
-    retained = int(est_rows[0].retained) if est_rows else 0
-    # driver-side integrity on the bounded merge result (9 rows):
-    # compactor-capacity bound and a non-degenerate corpus
-    if n <= 0:
-        raise RuntimeError("KLL over an empty corpus")
-    if retained > 3 * _KLL_K + 10 * MIN_LEVEL_WIDTH:
-        raise RuntimeError(f"KLL retained {retained} items past capacity")
-
-    # deterministic witness values: the module's md5-bottom-k sample
-    # quantiles (replayed bit-identically by the oracle's ORDER BY
-    # hash LIMIT k)
-    sample_qs = {p: _sample_quantile(vals, p, 100) for p in _PHIS}
-
-    # ONE conditional-aggregation corpus pass: exact ranks of the
-    # deterministic sample quantiles (hashed) AND of this run's KLL
-    # estimates (feeds only the asserted sketch_ok flag)
-    agg = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.when(
-                    F.col("l_extendedprice") <= F.lit(sample_qs[p]), 1
-                ).otherwise(0)
-            ).alias(f"sr{p}")
-            for p in _PHIS
-        ],
-        *[
-            F.sum(
-                F.when(F.col("l_extendedprice") <= F.lit(ests[p]), 1)
-                .otherwise(0)
-            ).alias(f"tr{p}")
-            for p in _PHIS
-        ],
-    )
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(p).cast("int").alias("phi_pct"),
-                F.lit(sample_qs[p]).cast("double").alias("sample_q"),
-                F.col(f"sr{p}").cast("bigint").alias("sample_rank"),
-                F.expr(f"abs(tr{p} * 1000000 div n - {p * 10000})")
-                .cast("bigint")
-                .alias("kll_err"),
-            )
-            for p in _PHIS
-        ]
-    )
-    out = (
-        agg.select(F.col("n"), F.explode(entries).alias("e"))
-        .select(
-            F.col("e.phi_pct").alias("phi_pct"),
-            F.col("e.sample_q").alias("sample_q"),
-            F.lit(_QK).cast("int").alias("sample_k"),
-            F.col("e.sample_rank").alias("sample_rank"),
-            F.col("n"),
-            F.lit(_KLL_K).cast("int").alias("kll_k"),
-            F.lit(_KLL_BOUND_PPM).cast("bigint").alias("bound_ppm"),
-            (F.col("e.kll_err") <= F.lit(_KLL_BOUND_PPM)).alias(
-                "sketch_ok"
-            ),
-        )
-        .orderBy("phi_pct")
-    )
-    # self-validation: the sketch estimate's exact rank must sit inside
-    # the documented envelope, or the query FAILS loudly — sketch_ok
-    # can therefore never reach the output as false, which is what
-    # makes the column deterministic and hashable
-    guard = F.assert_true(
-        F.col("sketch_ok"),
-        F.concat_ws(
-            " ",
-            F.lit("KLL rank error outside envelope at phi_pct"),
-            F.col("phi_pct").cast("string"),
-        ),
-    )
-    return out.withColumn("__g", guard).drop("__g")
+    return _lineitem_sql(spark, sf, f"""
+WITH {_spark_sample_sql("sq", {q: _rank(p, 100) for p, q in zip(_PHIS, qs)})},
+kq AS (
+  SELECT kll_sketch_get_n_double(sk) AS kn,
+    {", ".join(f"kll_sketch_get_quantile_double(sk, {p / 100}) AS {k}"
+               for p, k in zip(_PHIS, ks))}
+  FROM (SELECT kll_sketch_agg_double(l_extendedprice, {_KLL_K}) AS sk
+        FROM {{li}})),
+a AS (
+  SELECT /*+ BROADCAST(sq, kq) */ count(1) AS n, max(kn) AS kn,
+    {", ".join(f"max({q}) AS {q}" for q in qs)},
+    {_rank_sums(qs + ks)}
+  FROM {{li}} CROSS JOIN sq CROSS JOIN kq),
+e AS (
+  SELECT phi_pct, sample_q, sample_rank, n, kn,
+    abs(kll_rank * 1000000 div n - phi_pct * 10000) <= {_KLL_BOUND_PPM}
+      AS sketch_ok
+  FROM a LATERAL VIEW stack({len(_PHIS)}, {rows}) t
+    AS phi_pct, sample_q, sample_rank, kll_rank)
+SELECT phi_pct, sample_q, CAST({_QK} AS INT) AS sample_k, sample_rank, n,
+  CAST({_KLL_K} AS INT) AS kll_k,
+  CAST({_KLL_BOUND_PPM} AS BIGINT) AS bound_ppm, sketch_ok
+FROM e
+WHERE assert_true(sketch_ok AND kn = n AND n > 0, concat(
+  'KLL estimate outside the rank-error envelope, or its n off the corpus ',
+  'count, at phi_pct ', phi_pct)) IS NULL
+ORDER BY phi_pct
+""")
 
 
 SKETCH_KLL_SQL = f"""
@@ -545,8 +372,9 @@ def sketch_theta_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     combine collapses repeats) + TakeOrderedAndProject (O(k) state,
     merge independent of N); exact side is one countDistinct shuffle.
     A production theta sketch replaces the dedup shuffle with bounded
-    per-partition KMV state — the mapInPandas shape sketch_kll_quantiles
-    demonstrates; this entry trades that for full oracle replay."""
+    per-partition KMV state — a partial aggregate, as the built-in KLL
+    in sketch_kll_quantiles keeps its state; this entry trades that for
+    full oracle replay."""
     from datafusion_ballista_spark.inventory.pipeline_text import (
         _h48,
         _shingles,

@@ -7,7 +7,12 @@ import pytest
 
 from datafusion_ballista_spark.inventory import WINDOW, all_queries
 from datafusion_ballista_spark.sources.registry import tables
-from tests.conftest import EAGER_QUERIES, SF_DIR, assert_query_matches
+from tests.conftest import (
+    EAGER_QUERIES,
+    LAZY_QUERIES,
+    SF_DIR,
+    assert_query_matches,
+)
 
 _ALL = all_queries()
 
@@ -16,9 +21,13 @@ _ALL = all_queries()
 def test_inventory_query(name, spark, oracle):
     spec = _ALL[name]
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     # load the fixture tables first: a table's first load fires a job of
     # its own, which would count for whichever builder loads it first
     tables(spark, SF_DIR)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # jobs a builder submits from another thread carry no job group
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     group = f"build-{name}"
     sc.setJobGroup(group, group)
     try:
@@ -26,11 +35,15 @@ def test_inventory_query(name, spark, oracle):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    if name in EAGER_QUERIES:
+    if name in EAGER_QUERIES or name in LAZY_QUERIES:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert sc.statusTracker().getJobIdsForGroup(group), (
-            f"[{name}] listed as eager but fired no job while building"
+        jobs = set(tracker.getJobIdsForGroup(group)) | (
+            set(tracker.getJobIdsForGroup(None)) - ungrouped
         )
+        if name in EAGER_QUERIES:
+            assert jobs, f"[{name}] listed as eager but fired no job while building"
+        else:
+            assert not jobs, f"[{name}] fired jobs {sorted(jobs)} while building"
     assert_query_matches(df, oracle, spec.oracle, name)
 
 

@@ -85,6 +85,9 @@ _NESTED_LOOP_OK = {
     "text_vocab_coverage",  # 1-row corpus-totals scalar crossJoin
     "emb_matryoshka_trunc",  # broadcast of the bounded (5-row) query set
     "ann_recall_eval",  # exact arm broadcasts the bounded (20-row) query set
+    "sketch_quantile_bottomk",  # 1-row sample-quantile scalar crossJoin
+    "sketch_range_partition_cuts",  # 1-row sample-cut scalar crossJoin
+    "sketch_kll_quantiles",  # 1-row sample + 1-row KLL quantile crossJoins
 }
 
 _REGISTRY = all_queries()
@@ -111,14 +114,17 @@ _PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused"
 
 
 @functools.cache
-def _build(spark, name: str) -> tuple[str, frozenset[str], frozenset[str]]:
+def _build(
+    spark, name: str
+) -> tuple[str, frozenset[str], frozenset[str], tuple[bool, bool]]:
     """Build an entry once per session, warm and with AQE off (so the plan
     is static, not deferred to runtime). Returns its formatted physical
     plan; its fingerprint: the plan classes, Scala objects, data-type
     kinds and PythonUDF names in the toJSON() of its parsed logical and
     physical plans, plus the package functions outside inventory/ that
-    the build enters; and the operator names of its physical plan,
-    subquery plans included, wrappers dropped."""
+    the build enters; the operator names of its physical plan, subquery
+    plans included, wrappers dropped; and whether its analyzed plan
+    calls assert_true and its optimized plan still holds raise_error."""
     # load the fixture tables first: a table's first load would otherwise
     # add the loader to whichever entry happens to build first
     tables(spark, SF_DIR)
@@ -156,9 +162,13 @@ def _build(spark, name: str) -> tuple[str, frozenset[str], frozenset[str]]:
                 kinds.add(kind)
             for seq in (node.children(), node.subqueries()):
                 stack.extend(seq.apply(i) for i in range(seq.size()))
+        guard = (
+            "assert_true(" in qe.analyzed().toString(),
+            "raise_error(" in qe.optimizedPlan().toString(),
+        )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return plan, frozenset(found), frozenset(kinds)
+    return plan, frozenset(found), frozenset(kinds), guard
 
 
 def _plan_elements(node, found: set[str]) -> None:
@@ -210,6 +220,17 @@ def test_no_unbounded_cartesian(name, spark):
     assert "BroadcastNestedLoopJoin" not in plan, (
         f"[{name}] nested-loop join in plan"
     )
+
+
+def test_in_plan_guards_survive_the_optimizer(spark):
+    """An assert_true guard holds only while Catalyst keeps it. One whose
+    value lands in a column that is later dropped is pruned, and the
+    query returns what the guard was written to refuse: fold the guard
+    into an output column or a filter instead."""
+    guards = {name: _build(spark, name)[3] for name in sorted(_ALL)}
+    assert any(called for called, _ in guards.values()), "no in-plan guard"
+    pruned = [n for n, (called, kept) in guards.items() if called and not kept]
+    assert not pruned, pruned
 
 
 def test_global_topk_is_take_ordered(spark):

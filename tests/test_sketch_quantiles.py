@@ -1,9 +1,9 @@
-"""Quantile-sketch family invariants (inventory/sketches.py +
-operators/kll.py): the hash-match gate proves engine agreement for the
-oracle-paired entries; these prove the SKETCH guarantees — bounded
-state, exact weight conservation, rank-error envelopes on adversarial
-streams, merge correctness — the properties the reference's kll.rs unit
-tests pin (``/root/reference/ballista/core/src/kll.rs``).
+"""Quantile-sketch family invariants (inventory/sketches.py): the
+hash-match gate proves engine agreement for the oracle-paired entries;
+these prove the SKETCH guarantees — rank-error envelopes on adversarial
+streams, merge correctness, exact counts, a guard that really fires —
+the properties the reference's kll.rs unit tests pin
+(``ballista/core/src/kll.rs``).
 """
 
 from __future__ import annotations
@@ -11,8 +11,12 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pandas as pd
+import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
+from datafusion_ballista_spark.inventory import sketches
 from datafusion_ballista_spark.inventory.sketches import (
     _KLL_BOUND_PPM,
     _KLL_K,
@@ -23,7 +27,6 @@ from datafusion_ballista_spark.inventory.sketches import (
     sketch_range_partition_cuts,
 )
 from datafusion_ballista_spark.inventory.util import tables
-from datafusion_ballista_spark.operators.kll import MIN_LEVEL_WIDTH, KllSketch
 from tests.conftest import SF_DIR
 
 # Deterministic adversarial streams (the KLL paper's hard cases: order
@@ -59,70 +62,75 @@ def _rank_err(sorted_vals: list[float], q: float, phi: float) -> float:
     return max(0.0, lo - phi, phi - hi)
 
 
-def test_kll_weight_conservation_and_bounded_state():
-    """Every compaction converts 2m items of weight w into m of weight
-    2w, so the summed level weights must equal n EXACTLY at all times;
-    retained items must stay bounded by the geometric-capacity sum
-    (~3k + per-level floor slop) regardless of stream length; min/max
-    are tracked outside the stack and must be exact."""
-    s = KllSketch(_KLL_K)
-    vals = _streams()["sawtooth"]
-    for i, x in enumerate(vals, 1):
-        s.insert(x)
-        if i % 5000 == 0:
-            assert (
-                sum(len(b) << h for h, b in enumerate(s.levels)) == i
-            ), f"weight leak at n={i}"
-    assert s.n == _N and s.min == 0.0 and s.max == 96.0
-    cap_bound = 3 * _KLL_K + len(s.levels) * MIN_LEVEL_WIDTH
-    assert s.retained() <= cap_bound, (s.retained(), cap_bound)
-
-
-def test_kll_rank_error_on_adversarial_streams():
-    """The operator's asserted envelope (_KLL_BOUND_PPM) must hold on
-    every adversarial arrival order, at every reported phi — the
-    deterministic-coin variant's substitute for the paper's
-    probabilistic guarantee. Streams are deterministic, so this is a
-    regression pin, not a flaky sample."""
-    for name, vals in _streams().items():
-        s = KllSketch(_KLL_K)
-        s.absorb(vals)
-        ref = sorted(vals)
-        for p in _PHIS:
-            q = s.quantile(p / 100)
-            err = _rank_err(ref, q, p / 100)
-            assert err * 1e6 <= _KLL_BOUND_PPM, (
-                f"{name} phi={p}: err {err:.4f} outside envelope"
-            )
-
-
-def test_kll_merge_matches_envelope_and_counts():
-    """Executor-topology replay: 8 partial sketches over disjoint
-    chunks, serialized to rows and merged (the op's exact code path via
-    from_rows) — n must add up exactly, min/max must survive, and the
-    merged sketch must still sit inside the rank-error envelope."""
-    vals = _streams()["hash_shuffled"]
-    chunks = [vals[i::8] for i in range(8)]
-    partials = []
-    for c in chunks:
-        s = KllSketch(_KLL_K)
-        s.absorb(c)
-        partials.append(s)
-    rows = [r for s in partials for r in s.to_rows()]
-    merged = KllSketch.from_rows(
-        _KLL_K,
-        rows,
-        sum(s.n for s in partials),
-        min(s.min for s in partials),
-        max(s.max for s in partials),
+def test_kll_rank_error_on_adversarial_streams(spark):
+    """Spark's built-in KLL (kll_sketch_agg_double, the sketch that
+    sketch_kll_quantiles guards) must hold the entry's asserted envelope
+    (_KLL_BOUND_PPM) on every adversarial arrival order, at every
+    reported phi — sketched by one partition, and merged from eight
+    partial sketches over contiguous chunks of the stream — and its n
+    must equal the stream length. DataSketches compacts with random
+    coins, so this samples the guarantee; ten draws per stream and
+    partitioning peaked at 7,400 ppm, under a quarter of the bound."""
+    streams = _streams()
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "stream": [name for name, vs in streams.items() for _ in vs],
+                "i": [i for vs in streams.values() for i in range(len(vs))],
+                "v": [x for vs in streams.values() for x in vs],
+            }
+        )
     )
-    assert merged.n == _N
-    assert merged.min == 0.0 and merged.max == float(_N - 1)
-    ref = sorted(vals)
-    for p in _PHIS:
-        q = merged.quantile(p / 100)
-        err = _rank_err(ref, q, p / 100)
-        assert err * 1e6 <= _KLL_BOUND_PPM, f"merged phi={p}: {err:.4f}"
+    phis = ", ".join(str(p / 100) for p in _PHIS)
+    for parts in (1, 8):
+        rows = (
+            df.repartitionByRange(parts, "i")
+            .sortWithinPartitions("i")
+            .groupBy("stream")
+            .agg(
+                F.expr(f"kll_sketch_agg_double(v, {_KLL_K})").alias("sk"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .select(
+                "stream",
+                "n",
+                F.expr("kll_sketch_get_n_double(sk)").alias("kn"),
+                F.expr(f"kll_sketch_get_quantile_double(sk, array({phis}))")
+                .alias("qs"),
+            )
+            .collect()
+        )
+        assert sorted(r.stream for r in rows) == sorted(streams)
+        for r in rows:
+            assert r.kn == r.n == _N, (parts, r.stream, r.kn, r.n)
+            ref = sorted(streams[r.stream])
+            for p, q in zip(_PHIS, r.qs):
+                err = _rank_err(ref, q, p / 100)
+                assert err * 1e6 <= _KLL_BOUND_PPM, (
+                    f"{r.stream} x{parts} phi={p}: err {err:.4f} outside envelope"
+                )
+
+
+def test_kll_guard_fires_outside_the_envelope(spark, monkeypatch):
+    """Hazard test for the in-plan guard: at an envelope of -1 ppm no
+    estimate can pass, so the query must fail. A guard the optimizer
+    prunes returns nine sketch_ok = false rows instead."""
+    monkeypatch.setattr(sketches, "_KLL_BOUND_PPM", -1)
+    with pytest.raises(SparkRuntimeException, match="rank-error envelope"):
+        sketch_kll_quantiles(spark, SF_DIR).collect()
+
+
+def test_kll_runs_in_the_jvm(spark):
+    """The sketch is Spark's own aggregate and the guard stays in the
+    plan: no Python evaluation node, so no Python worker starts."""
+    plan = (
+        sketch_kll_quantiles(spark, SF_DIR)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "kll_sketch_agg_double" in plan and "raise_error" in plan, plan
+    assert "Python" not in plan and "InPandas" not in plan, plan
 
 
 def test_bottomk_witness_inside_bound(spark):
@@ -267,26 +275,3 @@ def test_hll_hourly_merge_is_exactly_associative(spark):
         assert row.est == round(est, 4), (row.day, row.est, est)
         assert row.exact == len(users[row.day])
         assert abs(row.est - row.exact) / row.exact < 3 * 1.04 / math.sqrt(m)
-
-
-def test_absorb_equals_insert_loop():
-    """The chunked absorb() must replay the EXACT compaction history of
-    a per-item insert() loop — identical levels, counters, n, min/max —
-    on every adversarial stream (absorbed whole and in ragged batch
-    sizes that straddle compaction boundaries)."""
-    for name, stream in _streams().items():
-        ref = KllSketch(_KLL_K)
-        for x in stream:
-            ref.insert(x)
-        whole = KllSketch(_KLL_K)
-        whole.absorb(stream)
-        ragged = KllSketch(_KLL_K)
-        i, step = 0, 1
-        while i < len(stream):  # 1,2,3,... ragged batch sizes
-            ragged.absorb(stream[i : i + step])
-            i += step
-            step = step % 997 + 1
-        for s in (whole, ragged):
-            assert s.levels == ref.levels, name
-            assert s._compactions == ref._compactions, name
-            assert (s.n, s.min, s.max) == (ref.n, ref.min, ref.max), name

@@ -1,13 +1,10 @@
 #!/usr/bin/env python
-"""Micro-benchmarks for the two pure-Python hot loops — the analogue of
-the reference's criterion benches (benchmarks/benches/sort_shuffle.rs
+"""Micro-benchmark for the pure-Python Avro codec — the analogue of the
+reference's criterion benches (benchmarks/benches/sort_shuffle.rs
 posture: component-level timing beside the query-level bench).
 
-Targets:
-- KllSketch absorb (streaming batch insert) and merge — operators/kll.py,
-  the per-partition loop of sketch_kll_quantiles;
-- Avro OCF encode/decode — sources/avro_ocf.py, the per-partition codec
-  of scan_avro / write_avro_ocf_dist (both codecs).
+Target: Avro OCF encode/decode — sources/avro_ocf.py, the per-partition
+codec of scan_avro / write_avro_ocf_dist (both codecs).
 
 Prints ONE JSON line: {"metric": "microbench", "unit": "mb_per_sec",
 "cases": {...}} — throughput, so bigger is better; deterministic inputs
@@ -28,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 
 DRAWS = int(os.environ.get("SPARK_GRAFT_MICRO_DRAWS", "3"))
-N_ITEMS = int(os.environ.get("SPARK_GRAFT_MICRO_ITEMS", "2000000"))
 N_ROWS = int(os.environ.get("SPARK_GRAFT_MICRO_ROWS", "200000"))
 
 
@@ -40,54 +36,6 @@ def _best(fn, *args) -> float:
         fn(*args)
         best = min(best, time.perf_counter() - t0)
     return best
-
-
-def bench_kll() -> dict[str, float]:
-    from datafusion_ballista_spark.operators.kll import KllSketch
-
-    rng = np.random.default_rng(20260816)
-    data = rng.normal(1000.0, 250.0, N_ITEMS)
-    mb = data.nbytes / 1e6
-
-    def absorb():
-        s = KllSketch(200)
-        # 10k-item batches: the Arrow-batch shape mapInPandas feeds it
-        for i in range(0, N_ITEMS, 10_000):
-            s.absorb(data[i : i + 10_000])
-        return s
-
-    t_absorb = _best(absorb)
-
-    # merge: 32 partial sketches (the local[32] partition count) pairwise.
-    # KllSketch.merge folds into the accumulator IN PLACE, so each draw
-    # must start from fresh copies or draws 2..N would re-merge an
-    # already-compressed accumulator (a cheaper workload) and bias the
-    # min-of-draws upward.
-    import copy
-
-    parts = []
-    for pid in range(32):
-        s = KllSketch(200)
-        s.absorb(data[pid::32])
-        parts.append(s)
-
-    def copy_only():
-        return [copy.deepcopy(p) for p in parts]
-
-    def copy_and_merge():
-        fresh = copy_only()
-        acc = fresh[0]
-        for p in fresh[1:]:
-            acc = acc.merge(p)
-        return acc
-
-    # subtract the copy baseline so the reported figure times the same
-    # fresh 31-way merge every draw, not the deepcopy overhead
-    t_merge = max(1e-9, _best(copy_and_merge) - _best(copy_only))
-    return {
-        "kll_absorb_mb_per_sec": round(mb / t_absorb, 2),
-        "kll_merge32_sketches_per_sec": round(31 / t_merge, 2),
-    }
 
 
 def bench_avro(tmp_dir: str) -> dict[str, float]:
@@ -139,7 +87,6 @@ def main() -> None:
     import tempfile
 
     cases: dict[str, float] = {}
-    cases.update(bench_kll())
     with tempfile.TemporaryDirectory() as d:
         cases.update(bench_avro(d))
     payload = {
