@@ -28,7 +28,7 @@ import datafusion_ballista_spark
 from datafusion_ballista_spark.inventory import all_queries
 from datafusion_ballista_spark.inventory.tpcds_real import FIXTURE_TABLES, fixture_dir
 from datafusion_ballista_spark.sources.registry import tables
-from tests.conftest import EAGER_QUERIES, SF_DIR
+from tests.conftest import EAGER_QUERIES, LAZY_QUERIES, SF_DIR
 
 # Queries whose *construction* executes work (writes, streams, collects):
 # planning them here would re-run side effects, not just build a plan.
@@ -264,6 +264,7 @@ def test_allowlists_name_registered_queries():
     silently exempt whatever later reuses it."""
     assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
     assert EAGER_QUERIES <= set(_REGISTRY), EAGER_QUERIES - set(_REGISTRY)
+    assert LAZY_QUERIES <= set(_REGISTRY), LAZY_QUERIES - set(_REGISTRY)
 
 
 _TPCDS_SHAPES = sorted(
