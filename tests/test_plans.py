@@ -9,7 +9,8 @@ sweep builds every lazily-planned inventory query and asserts:
 - parquet scans in filtered TPC-H queries carry PushedFilters;
 - every TPC-DS shape analogue still adds an operator kind to its
   verbatim twin's plan;
-- no entry of a feature-probe module is subsumed by another entry.
+- no entry of a feature-probe module is subsumed by another entry;
+- every assert_true guard an entry calls survives into its optimized plan.
 
 Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
 execution) are excluded — their plans are audited by their own runs.
