@@ -62,6 +62,97 @@ def _rank_err(sorted_vals: list[float], q: float, phi: float) -> float:
     return max(0.0, lo - phi, phi - hi)
 
 
+def _summary(text: str) -> dict[str, str]:
+    """The ``key : value`` lines of kll_sketch_to_string_double."""
+    out = {}
+    for line in text.splitlines():
+        key, sep, val = line.partition(":")
+        if sep:
+            out[key.strip()] = val.strip()
+    return out
+
+
+def test_kll_weight_conservation_and_bounded_state(spark):
+    """Every compaction converts 2m items of weight w into m of weight
+    2w, so the sketch's n must equal the items absorbed EXACTLY at every
+    prefix of the stream, and the whole weight must sit at or below the
+    max (rank(max) == 1); retained items must stay bounded by the
+    geometric-capacity sum (~3k + per-level floor M) regardless of
+    stream length; min/max are tracked outside the levels and must be
+    exact."""
+    vals = _streams()["sawtooth"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(vals)), "v": vals})
+    ).repartitionByRange(1, "i").sortWithinPartitions("i").cache()
+    try:
+        for upto in range(5000, _N + 1, 5000):
+            r = (
+                df.where(F.col("i") < upto)
+                .agg(F.expr(f"kll_sketch_agg_double(v, {_KLL_K})").alias("sk"))
+                .select(
+                    F.expr("kll_sketch_get_n_double(sk)").alias("n"),
+                    F.expr("kll_sketch_get_rank_double(sk, 96.0)").alias("rmax"),
+                    F.expr("kll_sketch_get_quantile_double(sk, array(0.0, 1.0))")
+                    .alias("ends"),
+                    F.expr("kll_sketch_to_string_double(sk)").alias("s"),
+                )
+                .collect()[0]
+            )
+            info = _summary(r.s)
+            assert r.n == int(info["N"]) == upto, f"weight leak at n={upto}"
+            assert r.rmax == 1.0, (upto, r.rmax)
+            assert r.ends == [0.0, 96.0]
+            assert float(info["Min Item"]) == 0.0
+            assert float(info["Max Item"]) == 96.0
+            assert int(info["K"]) == _KLL_K
+            cap_bound = 3 * _KLL_K + int(info["Levels"]) * int(info["M"])
+            retained = int(info["Retained Items"])
+            assert retained <= int(info["Capacity Items"]) <= cap_bound, (
+                upto, retained, info["Capacity Items"], cap_bound
+            )
+    finally:
+        df.unpersist()
+
+
+def test_kll_merge_matches_envelope_and_counts(spark):
+    """Executor-topology replay: 8 partial sketches over disjoint
+    strided chunks, merged by kll_merge_agg_double — the partial n must
+    add up exactly to the stream length, min/max must survive, and the
+    merged sketch must still sit inside the rank-error envelope."""
+    vals = _streams()["hash_shuffled"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(vals)), "v": vals})
+    )
+    phis = ", ".join(str(p / 100) for p in _PHIS)
+    partials = df.groupBy((F.col("i") % 8).alias("chunk")).agg(
+        F.expr(f"kll_sketch_agg_double(v, {_KLL_K})").alias("sk")
+    )
+    r = (
+        partials.agg(
+            F.count(F.lit(1)).alias("parts"),
+            F.sum(F.expr("kll_sketch_get_n_double(sk)")).alias("sum_n"),
+            F.expr("kll_merge_agg_double(sk)").alias("m"),
+        )
+        .select(
+            "parts",
+            "sum_n",
+            F.expr("kll_sketch_get_n_double(m)").alias("n"),
+            F.expr("kll_sketch_get_quantile_double(m, array(0.0, 1.0))")
+            .alias("ends"),
+            F.expr(f"kll_sketch_get_quantile_double(m, array({phis}))")
+            .alias("qs"),
+        )
+        .collect()[0]
+    )
+    assert r.parts == 8
+    assert r.sum_n == r.n == _N
+    assert r.ends == [0.0, float(_N - 1)]
+    ref = sorted(vals)
+    for p, q in zip(_PHIS, r.qs):
+        err = _rank_err(ref, q, p / 100)
+        assert err * 1e6 <= _KLL_BOUND_PPM, f"merged phi={p}: {err:.4f}"
+
+
 def test_kll_rank_error_on_adversarial_streams(spark):
     """Spark's built-in KLL (kll_sketch_agg_double, the sketch that
     sketch_kll_quantiles guards) must hold the entry's asserted envelope
