@@ -368,13 +368,24 @@ def sketch_theta_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     integer inputs (h_k thresholds, intersection tally), so the oracle
     replays the identical IEEE division + ROUND — the HLL discipline.
 
-    Scale (100 TB): each bottom-k is a partial-agg dedup (map-side
-    combine collapses repeats) + TakeOrderedAndProject (O(k) state,
-    merge independent of N); exact side is one countDistinct shuffle.
-    A production theta sketch replaces the dedup shuffle with bounded
-    per-partition KMV state — a partial aggregate, as the built-in KLL
-    in sketch_kll_quantiles keeps its state; this entry trades that for
-    full oracle replay."""
+    Scale (100 TB): the shingle hashes are deduplicated once, by one
+    partial-agg shuffle on the hash that also records the slices each
+    hash occurs in; each slice's bottom-k is a row_number() <= k, which
+    Spark runs as a partial WindowGroupLimit before its shuffle (O(k)
+    rows per partition, merge independent of N); the exact counts and
+    the intersection tally are one more aggregate over the deduplicated
+    hashes. A production theta sketch replaces the dedup shuffle with
+    bounded per-partition KMV state — a partial aggregate, as the
+    built-in KLL in sketch_kll_quantiles keeps its state; this entry
+    trades that for full oracle replay.
+
+    One lazy ``spark.sql`` text over the deduplicated hashes, so
+    building runs no Spark job and no sample travels through the
+    driver. Its CTEs follow SKETCH_THETA_SQL: ``samp`` holds both
+    per-slice samples, ``st`` each sample's size and k-th value and
+    their union bottom-k, ``th`` theta (the lesser k-th value), and the
+    exact pass ``ex`` tallies the hashes of both slices below theta: each of them is
+    in both samples, since it lies below both k-th values."""
     from datafusion_ballista_spark.inventory.pipeline_text import (
         _h48,
         _shingles,
@@ -390,87 +401,63 @@ def sketch_theta_set_ops(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("doc_id") % 2).alias("sl"),
             F.explode(_shingles(arr)).alias("s"),
         )
-        .select("sl", _h48(F.col("s")).alias("h"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .groupBy(_h48(F.col("s")).alias("h"))
+        # bit 1: the hash occurs in slice A, bit 2: in slice B
+        .agg(F.bit_or(F.when(F.col("sl") == 0, 1).otherwise(2)).alias("slices"))
     )
-    # Two sequential per-slice bottom-k collects, kept deliberately
-    # (round-13 A/B): a single unionAll action was tried to merge the
-    # two driver round-trips, but it ran BOTH TakeOrdered branches over
-    # the not-yet-materialized lazy checkpoint inside one job —
-    # duplicating the post-shuffle dedup work that the sequential form
-    # amortizes (job 1 materializes base, job 2 reads it back) — and
-    # measured +17% on the 4-draw min (1.25 -> 1.46 s); reverted.
-    samples = {}
-    for sl in (0, 1):
-        samples[sl] = [
-            r.h
-            for r in base.where(F.col("sl") == sl)
-            .select("h")
-            .orderBy("h")
-            .limit(_THETA_K)
-            .collect()
-        ]
-    sa, sb = set(samples[0]), set(samples[1])
-    union_k = sorted(sa | sb)[:_THETA_K]
-    theta_hk = min(max(samples[0]), max(samples[1]))
-    inter_cnt = sum(1 for h in sa & sb if h < theta_hk)
 
-    def _est(sample: list[int], exact_col: str):
+    def est(part: str, n: str, hk: str) -> str:
         # fewer than k distinct values -> the sketch IS the exact set
-        if len(sample) < _THETA_K:
-            return F.col(exact_col).cast("double")
-        return F.round(
-            F.lit(float(_THETA_K - 1)) * _H48_SPAN / F.lit(max(sample)), 4
+        return f"""CASE WHEN (SELECT {n} FROM st) < {_THETA_K}
+         THEN CAST(exact_{part} AS DOUBLE)
+         ELSE ROUND({float(_THETA_K - 1)}D * {_H48_SPAN}
+                    / (SELECT {hk} FROM st), 4) END AS est_{part}"""
+
+    def err(part: str) -> str:
+        return (
+            f"est_{part}, exact_{part},\n  CAST(ROUND((est_{part} - exact_{part})"
+            f" / exact_{part} * 1000000) AS BIGINT) AS err_{part}_ppm"
         )
 
-    exact = base.agg(
-        F.count_distinct(F.when(F.col("sl") == 0, F.col("h"))).alias(
-            "exact_a"
-        ),
-        F.count_distinct(F.when(F.col("sl") == 1, F.col("h"))).alias(
-            "exact_b"
-        ),
-        F.count_distinct(F.col("h")).alias("exact_union"),
-    ).withColumn(
-        "exact_inter",
-        F.col("exact_a") + F.col("exact_b") - F.col("exact_union"),
-    )
-
-    def _err(est: str, exact: str):
-        return F.expr(
-            f"CAST(ROUND(({est} - {exact}) / {exact} * 1000000) AS BIGINT)"
-        )
-
-    return (
-        exact.select(
-            F.lit(_THETA_K).cast("int").alias("k"),
-            _est(samples[0], "exact_a").alias("est_a"),
-            F.col("exact_a"),
-            _est(samples[1], "exact_b").alias("est_b"),
-            F.col("exact_b"),
-            _est(union_k, "exact_union").alias("est_union"),
-            F.col("exact_union"),
-            F.round(
-                F.lit(float(inter_cnt)) * _H48_SPAN / F.lit(theta_hk), 4
-            ).alias("est_inter"),
-            F.col("exact_inter"),
-        )
-        .select(
-            "k",
-            "est_a",
-            "exact_a",
-            _err("est_a", "exact_a").alias("err_a_ppm"),
-            "est_b",
-            "exact_b",
-            _err("est_b", "exact_b").alias("err_b_ppm"),
-            "est_union",
-            "exact_union",
-            _err("est_union", "exact_union").alias("err_union_ppm"),
-            "est_inter",
-            "exact_inter",
-            _err("est_inter", "exact_inter").alias("err_inter_ppm"),
-        )
+    return spark.sql(
+        f"""
+WITH samp AS (
+  SELECT sl, h FROM (
+    SELECT sl, h, row_number() OVER (PARTITION BY sl ORDER BY h) AS rn
+    FROM {{base}}
+    LATERAL VIEW explode(IF(slices = 3, array(0, 1), array(slices - 1))) t AS sl)
+  WHERE rn <= {_THETA_K}),
+st AS (
+  SELECT count_if(sl = 0) AS na, max(IF(sl = 0, h, NULL)) AS ha,
+    count_if(sl = 1) AS nb, max(IF(sl = 1, h, NULL)) AS hb,
+    slice(array_sort(collect_set(h)), 1, {_THETA_K}) AS su
+  FROM samp),
+th AS (SELECT least(ha, hb) AS theta_hk FROM st),
+ex AS (
+  SELECT count_if(slices & 1 = 1) AS exact_a,
+    count_if(slices & 2 = 2) AS exact_b, count(h) AS exact_union,
+    count_if(slices = 3 AND h < (SELECT theta_hk FROM th)) AS icnt
+  FROM {{base}}),
+est AS (
+  SELECT CAST({_THETA_K} AS INT) AS k,
+    {est("a", "na", "ha")},
+    exact_a,
+    {est("b", "nb", "hb")},
+    exact_b,
+    {est("union", "size(su)", "array_max(su)")},
+    exact_union,
+    ROUND(CAST(icnt AS DOUBLE) * {_H48_SPAN}
+          / (SELECT theta_hk FROM th), 4) AS est_inter,
+    exact_a + exact_b - exact_union AS exact_inter
+  FROM ex)
+SELECT k,
+  {err("a")},
+  {err("b")},
+  {err("union")},
+  {err("inter")}
+FROM est
+""",
+        base=base,
     )
 
 

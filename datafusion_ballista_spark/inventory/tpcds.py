@@ -9,9 +9,9 @@ are the ones that still exercise something no other entry does.
 The rule (tests/test_plans.py::test_feature_probes_are_not_subsumed)
 covers every feature-probe module, this one included. An entry's
 fingerprint is the set of plan classes, Scala objects, data-type kinds and
-PythonUDF names in the toJSON() of its parsed logical and static physical
-plans (AQE off), plus the package functions outside inventory/ that its
-build enters. An analogue stays only while no other single planned entry's
+PythonUDF names in the toJSON() of its analyzed logical and static
+physical plans (AQE off), plus the package functions outside inventory/
+that its build enters. An analogue stays only while no other single entry's
 fingerprint holds all of its own; a Spark upgrade or an edit that makes
 one redundant turns the test red.
 

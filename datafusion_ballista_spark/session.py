@@ -412,8 +412,8 @@ class BallistaSession:
 
     def read_avro(self, path: str, **options) -> DataFrame:
         # Prefer the native spark-avro module when its jar is on the
-        # classpath; otherwise fall back to the pure-Python distributed OCF
-        # reader (sources/avro_ocf.py). Reference Avro scan:
+        # classpath; otherwise fall back to the pure-Python OCF data source
+        # (sources/avro_datasource.py, one task per file). Reference Avro scan:
         # datafusion.proto:1155-1158 (AvroScanExecNode).
         #
         # CI note: this sandbox has no spark-avro jar, so only the OCF
@@ -436,11 +436,12 @@ class BallistaSession:
             if klass == "DATA_SOURCE_NOT_FOUND" or re.search(
                 r"Failed to find (?:the )?data source: avro", str(ex)
             ):
-                from datafusion_ballista_spark.sources.avro_ocf import (
-                    read_avro_ocf,
+                from datafusion_ballista_spark.sources.avro_datasource import (
+                    register,
                 )
 
-                return read_avro_ocf(self.spark, path)
+                register(self.spark)
+                return self.spark.read.format("avro_ocf").load(path)
             raise
 
     def read_arrow(self, path: str) -> DataFrame:

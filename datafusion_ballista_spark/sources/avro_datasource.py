@@ -6,12 +6,14 @@ datafusion.proto:1140-1162). Spark 4's Python DataSource API is the
 idiomatic equivalent: after ``spark.dataSource.register(AvroOcfDataSource)``
 the pure-Python OCF decoder (sources/avro_ocf.py) becomes a first-class
 ``spark.read.format("avro_ocf").load(path)`` source — usable from SQL via
-CREATE TABLE ... USING avro_ocf too.
+CREATE TABLE ... USING avro_ocf too. It is the one distributed Avro read:
+``BallistaSession.read_avro`` registers it and loads through it when the
+spark-avro jar is absent.
 
 Scale shape: ``partitions()`` returns one InputPartition per .avro file, so
-Spark schedules one task per file exactly like the mapInPandas reader, but
-with the source participating in the normal DataSource lifecycle (schema
-discovery, options, future filter pushdown via pushFilters).
+Spark schedules one task per file, with the source participating in the
+normal DataSource lifecycle (schema discovery, options, future filter
+pushdown via pushFilters).
 """
 
 from __future__ import annotations

@@ -18,10 +18,10 @@ the public specification (https://avro.apache.org/docs/current/spec.html):
 
 Scale shape: like sources/arrow_ipc.py, the DISTRIBUTED read parallelizes
 over files — the natural Avro unit, since OCF blocks are delimited by a
-sync marker that requires a scan from the header anyway. Each task decodes
-its file streaming block-by-block into Arrow-sized batches via
-``mapInPandas`` (one Python pass per file, vectorized hand-off). The
-driver touches only the first file's header (schema discovery).
+sync marker that requires a scan from the header anyway. The read runs
+through the ``avro_ocf`` data source (sources/avro_datasource.py): one
+task per file decodes it block by block with ``_iter_file_records``, and
+the driver touches only the first file's header (schema discovery).
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ import struct
 import zlib
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 _MAGIC = b"Obj\x01"
@@ -206,39 +206,6 @@ def _iter_file_records(path: str):
                 else:
                     row[name] = _read_value(pb, prim)
             yield row
-
-
-def read_avro_ocf(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed Avro OCF read: one task per file via mapInPandas."""
-    import pandas as pd
-
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".avro")
-        )
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no .avro files at {path}")
-    # driver reads ONLY the first header for schema discovery
-    with open(files[0], "rb") as f:
-        head = io.BytesIO(f.read(1 << 20))
-    avro_schema, _, _ = _read_header(head)
-    schema = _spark_schema(avro_schema)
-    cols = [f.name for f in schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                rows = list(_iter_file_records(p))
-                yield pd.DataFrame(rows, columns=cols)
-
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string")
-    return paths_df.repartition(len(files), "path").mapInPandas(
-        decode, schema=schema
-    )
 
 
 # -- container file writer (fixture/sink support) ---------------------------

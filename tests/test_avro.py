@@ -1,4 +1,5 @@
-"""Pure-Python Avro OCF reader/writer (sources/avro_ocf.py).
+"""Pure-Python Avro OCF reader/writer (sources/avro_ocf.py), read through
+the ``avro_ocf`` data source that ``BallistaSession.read_avro`` falls back to.
 
 Behavior spec: the Avro 1.x specification (container format + binary
 encoding); reference scan surface datafusion.proto:1155-1158.
@@ -6,12 +7,12 @@ encoding); reference scan surface datafusion.proto:1155-1158.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from datafusion_ballista_spark.sources.avro_ocf import (
-    read_avro_ocf,
-    write_avro_ocf,
-)
+from datafusion_ballista_spark.session import BallistaSession
+from datafusion_ballista_spark.sources.avro_ocf import write_avro_ocf
 
 _SCHEMA = {
     "type": "record",
@@ -31,11 +32,15 @@ _ROWS = [
 ]
 
 
+def read_avro(spark, path):
+    return BallistaSession(spark).read_avro(path)
+
+
 @pytest.mark.parametrize("codec", ["null", "deflate"])
 def test_roundtrip(spark, tmp_path, codec):
     p = str(tmp_path / "t.avro")
     write_avro_ocf(_ROWS, _SCHEMA, p, codec=codec)
-    df = read_avro_ocf(spark, p)
+    df = read_avro(spark, p)
     got = sorted((r.id, r.name, r.score, r.ok) for r in df.collect())
     want = sorted((r["id"], r["name"], r["score"], r["ok"]) for r in _ROWS)
     assert got == want
@@ -47,7 +52,7 @@ def test_roundtrip(spark, tmp_path, codec):
 def test_multi_file_directory(spark, tmp_path):
     write_avro_ocf(_ROWS[:2], _SCHEMA, str(tmp_path / "a.avro"))
     write_avro_ocf(_ROWS[2:], _SCHEMA, str(tmp_path / "b.avro"), codec="deflate")
-    df = read_avro_ocf(spark, str(tmp_path))
+    df = read_avro(spark, str(tmp_path))
     assert df.count() == 3
     assert df.rdd.getNumPartitions() == 2  # one task per file
 
@@ -56,7 +61,12 @@ def test_bad_magic_rejected(spark, tmp_path):
     p = tmp_path / "junk.avro"
     p.write_bytes(b"PAR1not-avro")
     with pytest.raises(Exception, match="bad magic"):
-        read_avro_ocf(spark, str(p))
+        read_avro(spark, str(p))
+
+
+def test_empty_directory_names_the_path(spark, tmp_path):
+    with pytest.raises(Exception, match=re.escape(f"no .avro files at '{tmp_path}'")):
+        read_avro(spark, str(tmp_path))
 
 
 def test_unsupported_schema_rejected(spark, tmp_path):
@@ -70,8 +80,6 @@ def test_unsupported_schema_rejected(spark, tmp_path):
 
 
 def test_session_read_avro_fallback(spark, tmp_path):
-    from datafusion_ballista_spark.session import BallistaSession
-
     p = str(tmp_path / "s.avro")
     write_avro_ocf(_ROWS, _SCHEMA, p, codec="deflate")
     df = BallistaSession(spark).read_avro(p)
@@ -125,7 +133,7 @@ def test_distributed_sink_one_file_per_partition(spark, tmp_path):
             _, codec, _ = _read_header(_io.BytesIO(f.read()))
             codecs.append(codec)
     assert set(codecs) == {"deflate", "null"}
-    back = read_avro_ocf(spark, out)
+    back = read_avro(spark, out)
     got = sorted((r.id, r.name, r.score, r.ok) for r in back.collect())
     want = sorted((i, f"n{i}", float(i) / 2, i % 2 == 0) for i in range(30))
     assert got == want
@@ -160,6 +168,6 @@ def test_distributed_sink_nullable_numeric_nulls(spark, tmp_path):
 
     paths = write_avro_ocf_dist(df, schema, out, codec="deflate")
     assert paths
-    back = read_avro_ocf(spark, out)
+    back = read_avro(spark, out)
     got = sorted((r.id, r.n, r.x, r.s) for r in back.collect())
     assert got == [(1, 10, 1.5, "a"), (2, None, None, None), (3, 30, None, "c")]

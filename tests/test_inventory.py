@@ -5,46 +5,27 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_ballista_spark.inventory import WINDOW, all_queries
-from datafusion_ballista_spark.sources.registry import tables
+from datafusion_ballista_spark.inventory import WINDOW
 from tests.conftest import (
+    EAGER_MODULES,
     EAGER_QUERIES,
-    LAZY_QUERIES,
-    SF_DIR,
+    REGISTRY,
     assert_query_matches,
+    module,
 )
 
-_ALL = all_queries()
 
-
-@pytest.mark.parametrize("name", sorted(_ALL))
-def test_inventory_query(name, spark, oracle):
-    spec = _ALL[name]
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    # load the fixture tables first: a table's first load fires a job of
-    # its own, which would count for whichever builder loads it first
-    tables(spark, SF_DIR)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    # jobs a builder submits from another thread carry no job group
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    group = f"build-{name}"
-    sc.setJobGroup(group, group)
-    try:
-        df = spec.spark(spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    if name in EAGER_QUERIES or name in LAZY_QUERIES:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = set(tracker.getJobIdsForGroup(group)) | (
-            set(tracker.getJobIdsForGroup(None)) - ungrouped
-        )
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_inventory_query(name, builds, oracle):
+    df, build = builds.take(name)
+    if module(name) not in EAGER_MODULES:
         if name in EAGER_QUERIES:
-            assert jobs, f"[{name}] listed as eager but fired no job while building"
+            assert build.jobs, f"[{name}] listed as eager but fired no job while building"
         else:
-            assert not jobs, f"[{name}] fired jobs {sorted(jobs)} while building"
-    assert_query_matches(df, oracle, spec.oracle, name)
+            assert not build.jobs, (
+                f"[{name}] fired jobs {sorted(build.jobs)} while building"
+            )
+    assert_query_matches(df, oracle, REGISTRY[name].oracle, name)
 
 
 def test_rows_only_set_is_exactly_the_documented_exception():
@@ -57,7 +38,7 @@ def test_rows_only_set_is_exactly_the_documented_exception():
     statistics with the sketch pinned by an in-plan assert_true —
     every registry entry now has a DuckDB oracle. A new rows-only
     entry must be argued here, not slipped in."""
-    rows_only = {n for n, s in _ALL.items() if s.oracle is None}
+    rows_only = {n for n, s in REGISTRY.items() if s.oracle is None}
     assert rows_only == set()
 
 
@@ -66,7 +47,7 @@ def test_driver_window_rotation():
     they are exactly WINDOW, in order, and the pool order continues
     where the r15 queue starts (the r12/r13-checked text greens)."""
     assert len(WINDOW) == 50 == len(set(WINDOW))
-    assert set(WINDOW) <= set(_ALL)
-    names = list(_ALL)
+    assert set(WINDOW) <= set(REGISTRY)
+    names = list(REGISTRY)
     assert names[:50] == WINDOW
     assert names[50] == "quality_token_entropy"

@@ -2,7 +2,7 @@
 
 Round-1 verdict: broadcast hints on unbounded sides are scale-killers, and
 cartesian products must only appear for genuine 1-row scalar sides. This
-sweep builds every lazily-planned inventory query and asserts:
+sweep plans every inventory query statically (AQE off) and asserts:
 
 - no CartesianProduct / BroadcastNestedLoopJoin outside the whitelist of
   known scalar (1-row) cross joins and the deliberate theta join;
@@ -12,28 +12,20 @@ sweep builds every lazily-planned inventory query and asserts:
 - no entry of a feature-probe module is subsumed by another entry;
 - every assert_true guard an entry calls survives into its optimized plan.
 
-Eager-side-effect modules (io_ops writes, streaming runs, h2o_g9's scoped
-execution) are excluded — their plans are audited by their own runs.
+Every registry entry is audited, from the one build per entry that
+tests/conftest.py keeps for the session (the oracle check in
+tests/test_inventory.py takes the same build's DataFrame).
 """
 
 from __future__ import annotations
 
-import functools
-import json
 import os
-import sys
 
 import pytest
 
-import datafusion_ballista_spark
-from datafusion_ballista_spark.inventory import all_queries
-from datafusion_ballista_spark.inventory.tpcds_real import FIXTURE_TABLES, fixture_dir
-from datafusion_ballista_spark.sources.registry import tables
-from tests.conftest import EAGER_QUERIES, LAZY_QUERIES, SF_DIR
-
-# Queries whose *construction* executes work (writes, streams, collects):
-# planning them here would re-run side effects, not just build a plan.
-_EAGER_MODULES = {"io_ops", "streaming_cov"}
+from datafusion_ballista_spark.inventory.tpcds_real import fixture_dir
+from datafusion_ballista_spark.sources.registry import load_table
+from tests.conftest import EAGER_QUERIES, REGISTRY, SF_DIR, module, static_plan
 
 # Nested-loop / cartesian is legitimate only for genuinely-bounded sides:
 # 1-row scalar aggregates (tpch q11/q14/q17/q22, NOT IN stats row, global
@@ -89,124 +81,13 @@ _NESTED_LOOP_OK = {
     "sketch_quantile_bottomk",  # 1-row sample-quantile scalar crossJoin
     "sketch_range_partition_cuts",  # 1-row sample-cut scalar crossJoin
     "sketch_kll_quantiles",  # 1-row sample + 1-row KLL quantile crossJoins
+    "ann_pq_adc",  # broadcast of the bounded (5-row) query set
+    "h2o_w_sorted_rownum",  # 1-row FIRST_VALUE (min_by) scalar crossJoin
 }
 
-_REGISTRY = all_queries()
-
-
-_PACKAGE = os.path.dirname(datafusion_ballista_spark.__file__) + os.sep
-_INVENTORY = os.path.join(_PACKAGE, "inventory") + os.sep
-
-
-def _module(name: str) -> str:
-    return _REGISTRY[name].spark.__module__.rsplit(".", 1)[-1]
-
-
-_ALL = {
-    name: spec
-    for name, spec in _REGISTRY.items()
-    if _module(name) not in _EAGER_MODULES and name not in EAGER_QUERIES
-}
-
-
-# Codegen and reuse wrappers: they say how a plan runs, not which operator
-# code it exercises.
-_PLAN_WRAPPERS = ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Reused")
-
-
-@functools.cache
-def _build(
-    spark, name: str
-) -> tuple[str, frozenset[str], frozenset[str], tuple[bool, bool]]:
-    """Build an entry once per session, warm and with AQE off (so the plan
-    is static, not deferred to runtime). Returns its formatted physical
-    plan; its fingerprint: the plan classes, Scala objects, data-type
-    kinds and PythonUDF names in the toJSON() of its parsed logical and
-    physical plans, plus the package functions outside inventory/ that
-    the build enters; the operator names of its physical plan, subquery
-    plans included, wrappers dropped; and whether its analyzed plan
-    calls assert_true and its optimized plan still holds raise_error."""
-    # load the fixture tables first: a table's first load would otherwise
-    # add the loader to whichever entry happens to build first
-    tables(spark, SF_DIR)
-    tables(spark, fixture_dir(), *FIXTURE_TABLES)
-    found = set()
-
-    def profile(frame, event, arg):
-        path = frame.f_code.co_filename
-        if event == "call" and path.startswith(_PACKAGE) and not path.startswith(
-            _INVENTORY
-        ):
-            found.add(f"fn:{path[len(_PACKAGE):]}:{frame.f_code.co_qualname}")
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sys.setprofile(profile)
-        try:
-            df = _ALL[name].spark(spark, SF_DIR)
-        finally:
-            sys.setprofile(None)
-        qe = df._jdf.queryExecution()
-        plan = qe.explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        for tree in (qe.logical(), qe.executedPlan()):
-            _plan_elements(json.loads(tree.toJSON()), found)
-        kinds, stack = set(), [qe.executedPlan()]
-        while stack:
-            node = stack.pop()
-            kind = node.nodeName().strip()
-            if not kind.startswith(_PLAN_WRAPPERS):
-                kinds.add(kind)
-            for seq in (node.children(), node.subqueries()):
-                stack.extend(seq.apply(i) for i in range(seq.size()))
-        guard = (
-            "assert_true(" in qe.analyzed().toString(),
-            "raise_error(" in qe.optimizedPlan().toString(),
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return plan, frozenset(found), frozenset(kinds), guard
-
-
-def _plan_elements(node, found: set[str]) -> None:
-    if isinstance(node, list):
-        for item in node:
-            _plan_elements(item, found)
-    elif isinstance(node, dict):
-        for key, value in node.items():
-            if key in ("class", "object"):
-                found.add(f"{key}:{value}")
-            elif key == "dataType":
-                _type_kinds(value, found)
-            else:
-                _plan_elements(value, found)
-        if node.get("class", "").endswith(".PythonUDF"):
-            found.add(f"udf:{node['name']}")
-
-
-def _type_kinds(dtype, found: set[str]) -> None:
-    if isinstance(dtype, str):
-        found.add("type:" + dtype.split("(", 1)[0])
-        return
-    found.add("type:" + dtype["type"])
-    for key in ("elementType", "keyType", "valueType"):
-        if key in dtype:
-            _type_kinds(dtype[key], found)
-    for field in dtype.get("fields", ()):
-        _type_kinds(field["type"], found)
-
-
-def _plan(spark, name):
-    return _build(spark, name)[0]
-
-
-@pytest.mark.parametrize("name", sorted(_ALL))
-def test_no_unbounded_cartesian(name, spark):
-    plan = _plan(spark, name)
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_no_unbounded_cartesian(name, builds):
+    plan = builds[name].plan
     # Python may enter a plan only through Arrow-vectorized evaluation
     # (ArrowEvalPython / mapInPandas / mapInArrow). BatchEvalPython is the
     # row-at-a-time pickle path — 10-100x slower — and must never appear.
@@ -223,22 +104,33 @@ def test_no_unbounded_cartesian(name, spark):
     )
 
 
-def test_in_plan_guards_survive_the_optimizer(spark):
+def test_static_plan_keeps_the_relations_the_build_bound(spark):
+    """The star fixture and TPC-H both name a table ``customer``, and each
+    builder (re)binds its own temp view. The audit plans the analyzed plan
+    a build left, so a view rebound after the build does not change which
+    file the audited plan scans."""
+    df = REGISTRY["tpcds_real_q19"].spark(spark, SF_DIR)
+    load_table(spark, SF_DIR, "customer").createOrReplaceTempView("customer")
+    plan = static_plan(spark, df)[0]
+    assert os.path.join(fixture_dir(), "customer.parquet") in plan, plan
+
+
+def test_in_plan_guards_survive_the_optimizer(builds):
     """An assert_true guard holds only while Catalyst keeps it. One whose
     value lands in a column that is later dropped is pruned, and the
     query returns what the guard was written to refuse: fold the guard
     into an output column or a filter instead."""
-    guards = {name: _build(spark, name)[3] for name in sorted(_ALL)}
+    guards = {name: builds[name].guard for name in sorted(REGISTRY)}
     assert any(called for called, _ in guards.values()), "no in-plan guard"
     pruned = [n for n, (called, kept) in guards.items() if called and not kept]
     assert not pruned, pruned
 
 
-def test_global_topk_is_take_ordered(spark):
+def test_global_topk_is_take_ordered(builds):
     """win_global_topk must reduce to a k-row TakeOrderedAndProject before
     its no-PARTITION-BY window — never a full-table single-partition sort
     (the reference's PartitionedBoundedWindowAggExec rationale)."""
-    plan = _plan(spark, "win_global_topk")
+    plan = builds["win_global_topk"].plan
     assert "TakeOrderedAndProject" in plan, plan
     # the window's sort must sit ABOVE the take-ordered k-row reduction,
     # i.e. the full-table scan feeds TakeOrderedAndProject, not a Sort
@@ -249,8 +141,8 @@ def test_global_topk_is_take_ordered(spark):
     "name",
     ["tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q12_priority_shipping"],
 )
-def test_filters_reach_scan(name, spark):
-    plan = _plan(spark, name)
+def test_filters_reach_scan(name, builds):
+    plan = builds[name].plan
     assert "PushedFilters: [" in plan
     # at least one scan actually pushes a predicate (not the empty list)
     pushed = [
@@ -263,24 +155,23 @@ def test_filters_reach_scan(name, spark):
 def test_allowlists_name_registered_queries():
     """An allowlist entry must not outlive its query: a stale name would
     silently exempt whatever later reuses it."""
-    assert _NESTED_LOOP_OK <= set(_REGISTRY), _NESTED_LOOP_OK - set(_REGISTRY)
-    assert EAGER_QUERIES <= set(_REGISTRY), EAGER_QUERIES - set(_REGISTRY)
-    assert LAZY_QUERIES <= set(_REGISTRY), LAZY_QUERIES - set(_REGISTRY)
+    assert _NESTED_LOOP_OK <= set(REGISTRY), _NESTED_LOOP_OK - set(REGISTRY)
+    assert EAGER_QUERIES <= set(REGISTRY), EAGER_QUERIES - set(REGISTRY)
 
 
 _TPCDS_SHAPES = sorted(
-    n for n in _ALL if n.startswith("tpcds_q") and n.endswith("_shape")
+    n for n in REGISTRY if n.startswith("tpcds_q") and n.endswith("_shape")
 )
 
 
 @pytest.mark.parametrize("name", _TPCDS_SHAPES)
-def test_tpcds_shape_adds_an_operator(name, spark):
+def test_tpcds_shape_adds_an_operator(name, builds):
     """A DataFrame analogue stays only while it exercises an operator kind
     its verbatim twin does not; the rest were retired as subsumed. Red
     here means a Spark upgrade or an edit to either side made this shape
     redundant: retire it, or give it back something the twin lacks."""
     twin = name.replace("tpcds_q", "tpcds_real_q").removesuffix("_shape")
-    added = _build(spark, name)[2] - _build(spark, twin)[2]
+    added = builds[name].kinds - builds[twin].kinds
     assert added, f"[{name}] every operator kind also appears in {twin}"
 
 
@@ -298,15 +189,15 @@ _FEATURE_PROBE_MODULES = {
 }
 
 
-def test_feature_probes_are_not_subsumed(spark):
+def test_feature_probes_are_not_subsumed(builds):
     """A feature-probe entry stays only while, against every other planned
     entry, its fingerprint holds an element the other's lacks. Red here names each subsumed entry and what subsumes it: retire the
     entry, or give it back something of its own."""
-    prints = {name: _build(spark, name)[1] for name in sorted(_ALL)}
+    prints = {name: builds[name].fingerprint for name in sorted(REGISTRY)}
     subsumed = {
         name: sorted(o for o in prints if o != name and fp <= prints[o])
         for name, fp in prints.items()
-        if _module(name) in _FEATURE_PROBE_MODULES
+        if module(name) in _FEATURE_PROBE_MODULES
     }
     subsumed = {name: by for name, by in subsumed.items() if by}
     assert not subsumed, subsumed
