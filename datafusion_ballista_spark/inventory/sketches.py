@@ -384,8 +384,9 @@ def sketch_theta_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     driver. Its CTEs follow SKETCH_THETA_SQL: ``samp`` holds both
     per-slice samples, ``st`` each sample's size and k-th value and
     their union bottom-k, ``th`` theta (the lesser k-th value), and the
-    exact pass ``ex`` tallies the hashes of both slices below theta: each of them is
-    in both samples, since it lies below both k-th values."""
+    exact pass ``ex`` tallies the hashes of both slices below theta:
+    each of them is in both samples, since it lies below both k-th
+    values."""
     from datafusion_ballista_spark.inventory.pipeline_text import (
         _h48,
         _shingles,

@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from collections.abc import Iterable
 from typing import NamedTuple
 
 import pytest
@@ -202,7 +203,7 @@ def builds(spark):
 
 
 def static_plan(
-    spark: SparkSession, df: DataFrame, found: set[str] = frozenset()
+    spark: SparkSession, df: DataFrame, found: Iterable[str] = ()
 ) -> tuple[str, frozenset[str], frozenset[str], tuple[bool, bool]]:
     """Plan a built DataFrame's analyzed plan afresh with AQE off, so the
     physical plan is static rather than deferred to runtime, and leave the
