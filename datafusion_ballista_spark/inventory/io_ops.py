@@ -17,7 +17,6 @@ idempotently.
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 
@@ -194,52 +193,22 @@ ORDER BY s_nationkey
 
 def scan_avro(spark: SparkSession, sf: str) -> DataFrame:
     """Avro OCF scan (datafusion.proto:1155-1158) through the pure-Python
-    distributed reader — no spark-avro jar in this container. The fixture
-    is produced by the DISTRIBUTED per-partition OCF sink (round-11: the
-    previous whole-table collect feeding a driver-side writer was the
-    VERDICT-flagged 100x bottleneck); partitions alternate deflate/null
-    codecs so the multi-file path and both standard codecs are exercised;
-    the aggregate hash-matches the original parquet."""
+    ``avro_ocf`` data source — no spark-avro jar in this container. The
+    fixture is two writes to one directory, the even suppliers with the
+    deflate codec (replacing the previous run's files) and the odd ones
+    appended with null, so the multi-file path and both standard codecs
+    are exercised; the aggregate hash-matches the original parquet."""
     from datafusion_ballista_spark.session import BallistaSession
-    from datafusion_ballista_spark.sources.avro_ocf import write_avro_ocf_dist
+    from datafusion_ballista_spark.sources.datasource import register
 
+    register(spark)
     out_dir = _out(sf, "supplier_avro")
-    # the sink appends part files by partition id; clear any prior run's
-    # layout (file names changed when the write went distributed) so the
-    # globbing reader only ever sees this run's manifest
-    shutil.rmtree(out_dir, ignore_errors=True)
     s = tables(spark, sf, "supplier").supplier
-    schema = {
-        "type": "record",
-        "name": "supplier",
-        "fields": [
-            {"name": "s_suppkey", "type": "long"},
-            {"name": "s_name", "type": ["null", "string"]},
-            {"name": "s_nationkey", "type": "int"},
-            {"name": "s_acctbal", "type": "double"},
-        ],
-    }
     cols = s.select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    paths = write_avro_ocf_dist(
-        cols.repartition(2, "s_suppkey"),
-        schema,
-        out_dir,
-        codec_by_pid=lambda pid: "deflate" if pid % 2 == 0 else "null",
-    )
-    if len(paths) != 2:
-        # hash partitioning gives no non-empty guarantee at tiny SFs; a
-        # one-file fixture would silently drop the multi-file/multi-codec
-        # coverage this entry exists for — fall back to round-robin, which
-        # does guarantee two non-empty partitions for >=2 rows
-        shutil.rmtree(out_dir, ignore_errors=True)
-        paths = write_avro_ocf_dist(
-            cols.repartition(2),
-            schema,
-            out_dir,
-            codec_by_pid=lambda pid: "deflate" if pid % 2 == 0 else "null",
-        )
-    if len(paths) != 2:
-        raise RuntimeError(f"avro fixture degenerated to {paths}")
+    for mode, parity, codec in (("overwrite", 0, "deflate"), ("append", 1, "null")):
+        cols.where(F.col("s_suppkey") % 2 == parity).coalesce(1).write.format(
+            "avro_ocf"
+        ).mode(mode).option("codec", codec).save(out_dir)
     back = BallistaSession(spark).read_avro(out_dir)
     return (
         back.groupBy("s_nationkey")
@@ -249,22 +218,19 @@ def scan_avro(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def scan_arrow_ipc(spark: SparkSession, sf: str) -> DataFrame:
-    """Arrow IPC scan through the distributed mapInPandas reader
-    (context_checks.rs:1319; sources/arrow_ipc.py)."""
-    import pyarrow.ipc as ipc
-    import pyarrow.parquet as pq
+    """Arrow IPC scan through the ``arrow_ipc`` data source
+    (context_checks.rs:1319; sources/arrow_ipc.py): two files, one task
+    each."""
+    from datafusion_ballista_spark.sources.datasource import register
 
-    from datafusion_ballista_spark.sources.arrow_ipc import read_arrow_ipc_dist
-
+    register(spark)
     out_dir = _out(sf, "nation_arrow")
-    os.makedirs(out_dir, exist_ok=True)
-    tbl = pq.read_table(os.path.join(sf, "nation.parquet"))
-    # two files to exercise the multi-file distributed path
-    mid = tbl.num_rows // 2
-    for i, piece in enumerate((tbl.slice(0, mid), tbl.slice(mid))):
-        with ipc.new_file(os.path.join(out_dir, f"part{i}.arrow"), tbl.schema) as w:
-            w.write_table(piece)
-    back = read_arrow_ipc_dist(spark, sorted(glob.glob(f"{out_dir}/*.arrow")))
+    nation = tables(spark, sf, "nation").nation
+    for mode, parity in (("overwrite", 0), ("append", 1)):
+        nation.where(F.col("n_nationkey") % 2 == parity).coalesce(1).write.format(
+            "arrow_ipc"
+        ).mode(mode).save(out_dir)
+    back = spark.read.format("arrow_ipc").load(out_dir)
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"))
@@ -282,21 +248,18 @@ ORDER BY n_regionkey
 
 def write_arrow_ipc_dist_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed Arrow IPC sink roundtrip: every partition streams its
-    own IPC file via mapInArrow (sources/arrow_ipc.py:write_arrow_ipc_dist
-    — no driver materialization), then the distributed reader aggregates
-    them back. Proves the bulk write path, not just the small-result
-    sink."""
-    from datafusion_ballista_spark.sources.arrow_ipc import (
-        read_arrow_ipc_dist,
-        write_arrow_ipc_dist,
-    )
+    own IPC file through the ``arrow_ipc`` data source's writer (no driver
+    materialization), overwriting the previous run's files, then the same
+    source reads them back for the aggregate."""
+    from datafusion_ballista_spark.sources.datasource import register
 
+    register(spark)
     out_dir = _out(sf, "supplier_arrow_dist")
     src = tables(spark, sf, "supplier").supplier.select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     ).repartition(4, "s_suppkey")
-    paths = write_arrow_ipc_dist(src, out_dir)
-    back = read_arrow_ipc_dist(spark, paths)
+    src.write.format("arrow_ipc").mode("overwrite").save(out_dir)
+    back = spark.read.format("arrow_ipc").load(out_dir)
     return (
         back.groupBy("s_nationkey")
         .agg(

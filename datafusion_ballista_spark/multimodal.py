@@ -207,13 +207,6 @@ def decode_avi(data: bytes) -> tuple[int, int, int, list[bytes]]:
     return width, height, fps or 0, out
 
 
-def decode_video(data: bytes) -> tuple[int, int, int, list[bytes]]:
-    """Real video decode (no longer a stub): parses uncompressed-DIB AVI
-    containers via ``decode_avi``. Swap in ffmpeg/torchvision bindings in
-    production for compressed codecs; the operator plumbing is unchanged."""
-    return decode_avi(data)
-
-
 # ---------------------------------------------------------------------------
 # REAL image codec: 24-bpp BMP via stdlib struct (mirrors the WAV pattern)
 

@@ -436,18 +436,19 @@ class BallistaSession:
             if klass == "DATA_SOURCE_NOT_FOUND" or re.search(
                 r"Failed to find (?:the )?data source: avro", str(ex)
             ):
-                from datafusion_ballista_spark.sources.avro_datasource import (
-                    register,
-                )
+                from datafusion_ballista_spark.sources.datasource import register
 
                 register(self.spark)
                 return self.spark.read.format("avro_ocf").load(path)
             raise
 
     def read_arrow(self, path: str) -> DataFrame:
-        from datafusion_ballista_spark.sources.arrow_ipc import read_arrow_ipc
+        """Arrow IPC file(s), file or stream format: a file, a directory of
+        ``.arrow`` files or a glob, one task per file."""
+        from datafusion_ballista_spark.sources.datasource import register
 
-        return read_arrow_ipc(self.spark, path)
+        register(self.spark)
+        return self.spark.read.format("arrow_ipc").load(path)
 
     # -- register as table (extension.py register_* methods) -----------------
     def register_parquet(self, name: str, path: str) -> None:

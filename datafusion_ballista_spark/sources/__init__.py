@@ -1,6 +1,7 @@
-"""Sources/sinks layer (SURVEY.md §2.2): parquet/csv/json/avro are native
-Spark readers; Arrow IPC gets a small pyarrow shim; the testdata registry
-loads the driver's fixture tables with scale-aware defaults."""
+"""Sources/sinks layer (SURVEY.md §2.2): parquet/csv/json are native Spark
+readers; Arrow IPC and Avro are Spark Python DataSources on one shared
+file-source mechanism (sources/datasource.py); the testdata registry loads
+the driver's fixture tables with scale-aware defaults."""
 
 from datafusion_ballista_spark.sources.registry import TABLES, load_table, tables
 

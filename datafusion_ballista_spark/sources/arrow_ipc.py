@@ -1,137 +1,62 @@
-"""Arrow IPC file reader shim.
+"""Arrow IPC files as the ``arrow_ipc`` data source.
 
 The reference scans Arrow IPC files as tables (datafusion.proto:1159-1162;
 client test should_execute_sql_collect_from_arrow_file,
 ballista/client/tests/context_checks.rs:1319). Spark has no native IPC
-reader, so we bridge through pyarrow -> createDataFrame (Arrow-accelerated).
-
-Scale note: this is a compat path for small sideload files (the reference's
-own use is test fixtures). For bulk data the answer is "convert to parquet";
-for medium files we read per-file on the driver but keep the resulting
-DataFrame distributed. A truly huge IPC dataset would get a mapInPandas
-reader over a file-list DataFrame — implemented in ``read_arrow_ipc_dist``.
+reader, so this format plugs into the shared file-source mechanism
+(sources/datasource.py): one read task per file streams the file's record
+batches, and each write task streams its partition's batches into one IPC
+file. Reads accept the IPC file format and fall back to the stream format.
 """
 
 from __future__ import annotations
 
-import glob
-import os
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.ipc as ipc
+from pyspark.sql.types import StructType
 
-from pyspark.sql import DataFrame, SparkSession
+from datafusion_ballista_spark.sources.datasource import FileDataSource
 
 
-def _read_one(path: str) -> pa.Table:
+def _open(path: str):
     try:
-        with ipc.open_file(path) as r:
-            return r.read_all()
+        return ipc.open_file(path)
     except pa.ArrowInvalid:
-        with ipc.open_stream(path) as r:
-            return r.read_all()
+        return ipc.open_stream(path)
 
 
-def _spark_schema(arrow_schema: pa.Schema):
-    """Spark StructType straight from the Arrow schema — no pandas round
-    trip, so nullable ints stay ints and empty files still carry types."""
-    from pyspark.sql.pandas.types import from_arrow_schema
+class ArrowIpcDataSource(FileDataSource):
+    """``spark.read.format("arrow_ipc")`` / ``df.write.format("arrow_ipc")``."""
 
-    return from_arrow_schema(arrow_schema)
+    ext = ".arrow"
 
+    @classmethod
+    def name(cls) -> str:
+        return "arrow_ipc"
 
-def read_arrow_ipc(
-    spark: SparkSession, path: str, dist_threshold_bytes: int = 128 << 20
-) -> DataFrame:
-    """Read IPC file(s) (file or stream format) into a DataFrame.
+    def file_schema(self, path: str) -> StructType:
+        # Straight from the Arrow schema, so nullable ints stay ints and
+        # empty files still carry types.
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-    Small inputs go through a single driver-side Arrow table (cheap, exact);
-    anything above ``dist_threshold_bytes`` total routes through the
-    distributed ``mapInPandas`` reader so the driver never materializes it.
-    """
-    paths = sorted(glob.glob(path)) if any(c in path for c in "*?[") else [path]
-    total = sum(os.path.getsize(p) for p in paths if os.path.exists(p))
-    if len(paths) > 1 and total > dist_threshold_bytes:
-        return read_arrow_ipc_dist(spark, paths)
-    tbl = pa.concat_tables([_read_one(p) for p in paths])
-    return spark.createDataFrame(tbl.to_pandas(), schema=_spark_schema(tbl.schema))
+        with _open(path) as r:
+            return from_arrow_schema(r.schema)
 
+    def read_file(self, path: str, schema: StructType) -> Iterator[pa.RecordBatch]:
+        with _open(path) as r:
+            if isinstance(r, ipc.RecordBatchStreamReader):
+                yield from r
+            else:
+                for i in range(r.num_record_batches):
+                    yield r.get_batch(i)
 
-def read_arrow_ipc_dist(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Distributed IPC read: executors open their own file subsets."""
-    if not paths:
-        raise ValueError("no paths given")
-    schema = _spark_schema(_read_one(paths[0]).schema)
-    files_df = spark.createDataFrame([(p,) for p in paths], ["path"]).repartition(
-        min(len(paths), 64)
-    )
-
-    def _load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                yield _read_one(p).to_pandas()
-
-    return files_df.mapInPandas(_load, schema=schema)
-
-
-def write_arrow_ipc(df: DataFrame, path: str) -> None:
-    """Write a DataFrame to a single Arrow IPC file (small-result sink).
-
-    For bulk output use ``write_arrow_ipc_dist`` — this single-file form
-    exists for the reference's sideload-fixture use case only."""
-    tbl = pa.Table.from_pandas(df.toPandas(), preserve_index=False)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with ipc.new_file(path, tbl.schema) as w:
-        w.write_table(tbl)
-
-
-def write_arrow_ipc_dist(df: DataFrame, out_dir: str) -> list[str]:
-    """Distributed Arrow IPC sink: every partition streams its own
-    ``part-{pid:05d}.arrow`` file straight from Arrow batches — no
-    driver-side materialization, no shuffle, parallelism = input
-    partitions (the parquet-writer layout, IPC format). Returns the
-    written file paths (one manifest row per non-empty partition came
-    back through a collect of file names only — metadata-sized).
-
-    Empty partitions write nothing; readers glob the directory. Files
-    are written to a temp name and renamed so a concurrent reader never
-    sees a torn file (single-filesystem rename atomicity, the same
-    discipline Spark's own committers use)."""
-    from pyspark import TaskContext
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = TaskContext.get().partitionId()
-        final = os.path.join(out_dir, f"part-{pid:05d}.arrow")
-        tmp = final + ".tmp"
-        writer = None
-        n = 0
-        try:
+    def write_file(
+        self, path: str, schema: StructType, batches: Iterator[pa.RecordBatch]
+    ) -> None:
+        first = next(batches)
+        with ipc.new_file(path, first.schema) as w:
+            w.write_batch(first)
             for batch in batches:
-                if batch.num_rows == 0:
-                    # A partition whose batches are all empty must leave no
-                    # file behind — the manifest omits it, and the docstring
-                    # promises globbing readers see only listed files.
-                    continue
-                if writer is None:
-                    writer = ipc.new_file(tmp, batch.schema)
-                writer.write_batch(batch)
-                n += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is not None:
-            os.replace(tmp, final)
-        out = pa.RecordBatch.from_pylist(
-            [{"path": final, "rows": n}] if n else [],
-            schema=pa.schema(
-                [pa.field("path", pa.string()), pa.field("rows", pa.int64())]
-            ),
-        )
-        yield out
-
-    manifest = df.mapInArrow(_write, schema="path string, rows bigint")
-    return sorted(r["path"] for r in manifest.collect())
+                w.write_batch(batch)

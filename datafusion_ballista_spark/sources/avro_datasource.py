@@ -1,84 +1,64 @@
-"""Avro as a registered Spark DataSource — the custom-TableProvider surface.
+"""Avro Object Container Files as the ``avro_ocf`` data source.
 
-The reference lets users plug custom table providers into the session
-(DataFusion ``TableProvider``; Ballista serializes their scans,
-datafusion.proto:1140-1162). Spark 4's Python DataSource API is the
-idiomatic equivalent: after ``spark.dataSource.register(AvroOcfDataSource)``
-the pure-Python OCF decoder (sources/avro_ocf.py) becomes a first-class
-``spark.read.format("avro_ocf").load(path)`` source — usable from SQL via
-CREATE TABLE ... USING avro_ocf too. It is the one distributed Avro read:
-``BallistaSession.read_avro`` registers it and loads through it when the
-spark-avro jar is absent.
+The pure-Python OCF codec (sources/avro_ocf.py) plugs into the shared
+file-source mechanism (sources/datasource.py), which makes it a
+first-class ``spark.read.format("avro_ocf")`` / ``df.write.format("avro_ocf")``
+source. It is the one distributed Avro path: ``BallistaSession.read_avro``
+loads through it when the spark-avro jar is absent.
 
-Scale shape: ``partitions()`` returns one InputPartition per .avro file, so
-Spark schedules one task per file, with the source participating in the
-normal DataSource lifecycle (schema discovery, options, future filter
-pushdown via pushFilters).
+- Read: one task per ``.avro`` file yields one Arrow record batch per OCF
+  block; the schema comes from the first file's header.
+- Write: one file per non-empty partition, one block per incoming batch.
+  The Avro schema is derived from the DataFrame's (a nullable field becomes
+  ``["null", T]``), and the ``codec`` write option picks ``null`` (the
+  default) or ``deflate``.
 """
 
 from __future__ import annotations
 
 import io
-import os
+from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from datafusion_ballista_spark.sources.avro_ocf import (
+    _avro_schema,
     _iter_file_records,
     _read_header,
     _spark_schema,
+    _write_blocks,
 )
+from datafusion_ballista_spark.sources.datasource import FileDataSource
 
 
-def _list_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".avro")
-        )
-    return [path]
+class AvroOcfDataSource(FileDataSource):
+    """``spark.read.format("avro_ocf")`` / ``df.write.format("avro_ocf")``."""
 
-
-class _AvroFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class AvroOcfReader(DataSourceReader):
-    def __init__(self, options, schema):
-        self._files = _list_files(options["path"])
-        self._fields = [f.name for f in schema.fields]
-
-    def partitions(self):
-        return [_AvroFilePartition(p) for p in self._files]
-
-    def read(self, partition: _AvroFilePartition):
-        for row in _iter_file_records(partition.path):
-            yield tuple(row[name] for name in self._fields)
-
-
-class AvroOcfDataSource(DataSource):
-    """``spark.read.format("avro_ocf")`` — pure-Python Avro container scan."""
+    ext = ".avro"
 
     @classmethod
     def name(cls) -> str:
         return "avro_ocf"
 
-    def schema(self):
-        files = _list_files(self.options["path"])
-        if not files:
-            raise FileNotFoundError(
-                f"no .avro files at {self.options.get('path')!r}"
-            )
-        with open(files[0], "rb") as f:
+    def file_schema(self, path: str) -> StructType:
+        with open(path, "rb") as f:
             head = io.BytesIO(f.read(1 << 20))
         avro_schema, _, _ = _read_header(head)
         return _spark_schema(avro_schema)
 
-    def reader(self, schema) -> AvroOcfReader:
-        return AvroOcfReader(self.options, schema)
+    def read_file(self, path: str, schema: StructType) -> Iterator[pa.RecordBatch]:
+        arrow_schema = to_arrow_schema(schema)
+        for rows in _iter_file_records(path):
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-
-def register(spark) -> None:
-    spark.dataSource.register(AvroOcfDataSource)
+    def write_file(
+        self, path: str, schema: StructType, batches: Iterator[pa.RecordBatch]
+    ) -> None:
+        _write_blocks(
+            (b.to_pylist() for b in batches),
+            _avro_schema(schema),
+            path,
+            self.options.get("codec", "null"),
+        )

@@ -16,24 +16,24 @@ the public specification (https://avro.apache.org/docs/current/spec.html):
 - Schemas: records of primitives and ``["null", T]`` unions — the shape
   every tabular Avro export uses. Nested/complex types raise.
 
-Scale shape: like sources/arrow_ipc.py, the DISTRIBUTED read parallelizes
-over files — the natural Avro unit, since OCF blocks are delimited by a
-sync marker that requires a scan from the header anyway. The read runs
-through the ``avro_ocf`` data source (sources/avro_datasource.py): one
-task per file decodes it block by block with ``_iter_file_records``, and
-the driver touches only the first file's header (schema discovery).
+Scale shape: reads and writes run through the ``avro_ocf`` data source
+(sources/avro_datasource.py) on the shared file-source mechanism
+(sources/datasource.py), which parallelizes over files, the natural Avro
+unit, since OCF blocks are delimited by a sync marker that requires a scan
+from the header anyway. One read task per file decodes it one block at a
+time with ``_iter_file_records``; one write task per partition encodes each
+incoming batch as one block. The driver touches only the first file's
+header (schema discovery).
 """
 
 from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 _MAGIC = b"Obj\x01"
@@ -110,6 +110,19 @@ def _spark_schema(avro_schema: dict) -> T.StructType:
     return T.StructType(fields)
 
 
+def _avro_schema(spark_schema: T.StructType) -> dict:
+    """The record schema a DataFrame writes as; nullable fields become
+    ``["null", T]`` unions."""
+    avro_types = {v: k for k, v in _SPARK_TYPES.items()}
+    fields = []
+    for f in spark_schema.fields:
+        prim = avro_types.get(f.dataType)
+        if prim is None:
+            raise ValueError(f"unsupported Spark type for Avro: {f.dataType}")
+        fields.append({"name": f.name, "type": ["null", prim] if f.nullable else prim})
+    return {"type": "record", "name": "topLevelRecord", "fields": fields}
+
+
 def _read_value(buf: io.BytesIO, prim: str):
     if prim == "null":
         return None
@@ -177,8 +190,8 @@ def _read_header(buf: io.BytesIO) -> tuple[dict, str, bytes]:
     return schema, codec, sync
 
 
-def _iter_file_records(path: str):
-    """Yield dict rows from one OCF file, streaming block by block."""
+def _iter_file_records(path: str) -> Iterator[list[dict]]:
+    """Yield the dict rows of one OCF file, one list per block."""
     with open(path, "rb") as f:
         buf = io.BytesIO(f.read())
     schema, codec, sync = _read_header(buf)
@@ -196,6 +209,7 @@ def _iter_file_records(path: str):
         if buf.read(16) != sync:
             raise ValueError("sync marker mismatch (corrupt Avro block)")
         pb = io.BytesIO(payload)
+        rows = []
         for _ in range(n_rec):
             row = {}
             for name, (prim, nullable) in fields:
@@ -205,65 +219,26 @@ def _iter_file_records(path: str):
                     row[name] = None if idx == 0 else _read_value(pb, prim)
                 else:
                     row[name] = _read_value(pb, prim)
-            yield row
+            rows.append(row)
+        yield rows
 
 
-# -- container file writer (fixture/sink support) ---------------------------
-
-
-def write_avro_ocf_dist(
-    df: DataFrame,
-    avro_schema: dict,
-    out_dir: str,
-    codec: str = "null",
-    codec_by_pid=None,
-) -> list[str]:
-    """Distributed Avro OCF sink: every partition writes its own
-    ``part-{pid:05d}.avro`` through the pure-Python writer — no
-    driver-side materialization, no shuffle, parallelism = input
-    partitions (the write_arrow_ipc_dist layout, OCF format; round-11
-    fix for the VERDICT-flagged whole-table collect in scan_avro's
-    fixture write). ``codec_by_pid`` lets a caller alternate codecs
-    across files (the multi-codec read-path exercise); files are
-    written to a temp name and renamed so a concurrent reader never
-    sees a torn file. Returns the written paths (a metadata-sized
-    collect of file names, never rows)."""
-    import pandas as pd
-    from pyspark import TaskContext
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            # pandas surfaces SQL NULLs as NaN/NaT, which the row writer's
-            # `v is None` union check would miss (int(nan) crash on long,
-            # silent NaN instead of the null branch on double) — normalize
-            # every missing value to None executor-side before encoding.
-            pdf = pdf.astype(object).where(pdf.notna(), None)
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            # empty partitions leave no file behind (globbing readers
-            # must only ever see manifest-listed files)
-            yield pd.DataFrame({"path": pd.Series(dtype=str),
-                                "rows": pd.Series(dtype="int64")})
-            return
-        c = codec_by_pid(pid) if codec_by_pid is not None else codec
-        final = os.path.join(out_dir, f"part-{pid:05d}.avro")
-        tmp = final + ".tmp"
-        write_avro_ocf(rows, avro_schema, tmp, codec=c)
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "rows": [len(rows)]})
-
-    manifest = df.mapInPandas(_write, schema="path string, rows bigint")
-    return sorted(r.path for r in manifest.collect())
+# -- container file writer ---------------------------------------------------
 
 
 def write_avro_ocf(
     rows: list[dict], avro_schema: dict, path: str, codec: str = "null"
 ) -> None:
-    """Single-file OCF writer (driver-side; used for sinks and fixtures)."""
+    """Single-file OCF writer, all rows in one block (fixtures and tests)."""
+    _write_blocks([rows], avro_schema, path, codec)
+
+
+def _write_blocks(
+    blocks: Iterable[list[dict]], avro_schema: dict, path: str, codec: str
+) -> None:
+    """Write one OCF file with one block per list of dict rows."""
+    if codec not in ("null", "deflate"):
+        raise ValueError(f"unsupported Avro codec {codec!r}; use null or deflate")
     fields = [(f["name"], _field_type(f["type"])) for f in avro_schema["fields"]]
     out = io.BytesIO()
     out.write(_MAGIC)
@@ -281,6 +256,13 @@ def write_avro_ocf(
     _write_long(out, 0)
     sync = b"\x00\x01\x02\x03\x04\x05\x06\x07\x08\x09\x0a\x0b\x0c\x0d\x0e\x0f"
     out.write(sync)
+    with open(path, "wb") as f:
+        f.write(out.getvalue())
+        for rows in blocks:
+            f.write(_encode_block(rows, fields, codec) + sync)
+
+
+def _encode_block(rows: list[dict], fields: list, codec: str) -> bytes:
     body = io.BytesIO()
     for row in rows:
         for name, (prim, nullable) in fields:
@@ -296,9 +278,8 @@ def write_avro_ocf(
     payload = body.getvalue()
     if codec == "deflate":
         payload = zlib.compress(payload)[2:-4]  # raw deflate per spec
+    out = io.BytesIO()
     _write_long(out, len(rows))
     _write_long(out, len(payload))
     out.write(payload)
-    out.write(sync)
-    with open(path, "wb") as f:
-        f.write(out.getvalue())
+    return out.getvalue()

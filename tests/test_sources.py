@@ -1,11 +1,18 @@
 """Source-layer specs: object-store config translation (offline — mirrors
-ballista/core/src/object_store.rs S3Options), and partition pruning proof
-for the listing-table scan (SURVEY §2.2 rows 7, 11)."""
+ballista/core/src/object_store.rs S3Options), partition pruning proof
+for the listing-table scan (SURVEY §2.2 rows 7, 11), and the file-source
+mechanism's reads and commit protocol (sources/datasource.py)."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import re
 
+import pytest
+from pyspark.sql import functions as F
+
+from datafusion_ballista_spark.session import BallistaSession
+from datafusion_ballista_spark.sources.datasource import register
 from datafusion_ballista_spark.sources.object_store import (
     http_conf,
     normalize_url,
@@ -118,25 +125,82 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_write_arrow_ipc_dist_roundtrip(spark, tmp_path):
     import pyarrow.ipc as ipc
 
-    from datafusion_ballista_spark.sources.arrow_ipc import (
-        read_arrow_ipc_dist,
-        write_arrow_ipc_dist,
-    )
-
+    register(spark)
     df = spark.range(1000).selectExpr("id", "id * 2 AS v").repartition(5, "id")
     out = str(tmp_path / "ipc_out")
-    paths = write_arrow_ipc_dist(df, out)
-    assert 1 <= len(paths) <= 5
+    df.write.format("arrow_ipc").mode("overwrite").save(out)
+    names = os.listdir(out)
+    assert 1 <= len(names) <= 5
     # every file is a valid IPC *file*-format stream, no torn temps left
-    import os
-
-    assert not [p for p in os.listdir(out) if p.endswith(".tmp")]
-    for p in paths:
-        with ipc.open_file(p) as r:
+    assert all(n.endswith(".arrow") for n in names), names
+    for n in names:
+        with ipc.open_file(os.path.join(out, n)) as r:
             assert r.num_record_batches >= 1
-    back = read_arrow_ipc_dist(spark, paths)
+    back = spark.read.format("arrow_ipc").load(out)
     assert back.count() == 1000
     assert back.agg({"v": "sum"}).collect()[0][0] == sum(2 * i for i in range(1000))
+
+
+@pytest.mark.parametrize("fmt", ["arrow_ipc", "avro_ocf"])
+def test_failed_overwrite_keeps_previous_files(spark, tmp_path, fmt):
+    """An overwrite whose task raises leaves the directory as it was: the
+    old files stay readable, and neither the finished task's file nor a
+    temporary file of the failed one is left behind."""
+    register(spark)
+    out = str(tmp_path / fmt)
+    spark.range(10).write.format(fmt).mode("overwrite").save(out)
+    before = sorted(os.listdir(out))
+    # two tasks of 15k rows: one finishes its file, the other raises on
+    # its last row, after its first Arrow batch reached the writer
+    bad = spark.range(30000).repartition(2).select(
+        F.when(F.col("id") == 29999, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        bad.write.format(fmt).mode("overwrite").save(out)
+    assert sorted(os.listdir(out)) == before
+    assert sorted(r.id for r in spark.read.format(fmt).load(out).collect()) == list(
+        range(10)
+    )
+
+
+@pytest.mark.parametrize("fmt", ["arrow_ipc", "avro_ocf"])
+def test_two_appends_both_survive(spark, tmp_path, fmt):
+    """Each write names its files with its own write id, so a second
+    append's part-00000 does not replace the first's."""
+    register(spark)
+    out = str(tmp_path / fmt)
+    spark.range(0, 6, numPartitions=2).write.format(fmt).mode("append").save(out)
+    spark.range(6, 12, numPartitions=2).write.format(fmt).mode("append").save(out)
+    assert len(os.listdir(out)) == 4
+    back = spark.read.format(fmt).load(out)
+    assert sorted(r.id for r in back.collect()) == list(range(12))
+
+
+def test_read_arrow_stream_file_directory_and_glob(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    tbl = pa.table({"id": [1, 2, 3], "s": ["a", None, "c"]})
+    with ipc.new_file(str(tmp_path / "a.arrow"), tbl.schema) as w:
+        w.write_table(tbl.slice(0, 2))
+    with ipc.new_stream(str(tmp_path / "b.arrow"), tbl.schema) as w:
+        w.write_table(tbl.slice(2))
+    bs = BallistaSession(spark)
+
+    def rows(path):
+        return sorted((r.id, r.s) for r in bs.read_arrow(path).collect())
+
+    assert rows(str(tmp_path / "b.arrow")) == [(3, "c")]
+    assert rows(str(tmp_path)) == [(1, "a"), (2, None), (3, "c")]
+    assert rows(str(tmp_path / "*.arrow")) == [(1, "a"), (2, None), (3, "c")]
+    assert bs.read_arrow(str(tmp_path)).rdd.getNumPartitions() == 2  # one task per file
+
+
+def test_read_arrow_empty_directory_names_the_path(spark, tmp_path):
+    with pytest.raises(Exception, match=re.escape(f"no .arrow files at '{tmp_path}'")):
+        BallistaSession(spark).read_arrow(str(tmp_path))
 
 
 class TestWavCodec:

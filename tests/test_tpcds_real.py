@@ -137,15 +137,13 @@ def test_star_join_plan_shape(spark, name):
         assert "PushedFilters: [" in explained
 
 
-def test_nonbroadcast_dim_join_still_correct(spark):
+def test_nonbroadcast_dim_join_still_correct(spark, oracle):
     """At a scale where dims outgrow the broadcast threshold (the round-5
     judge's x10+ stress concern: customer at 5k rows is broadcast-trivial
     today), the star plans must degrade to shuffle joins WITHOUT changing
     results. Pin it by disabling broadcast outright: q19 (6-table star
     through customer/address) must plan SortMergeJoins and still
     hash-match its DuckDB oracle."""
-    import duckdb
-
     from datafusion_ballista_spark.inventory.tpcds_real import QUERIES
     from tests.conftest import assert_query_matches
 
@@ -157,10 +155,6 @@ def test_nonbroadcast_dim_join_still_correct(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
         assert "CartesianProduct" not in plan, plan
-        con = duckdb.connect()
-        try:
-            assert_query_matches(df, con, spec.oracle, "q19-nonbroadcast")
-        finally:
-            con.close()
+        assert_query_matches(df, oracle, spec.oracle, "q19-nonbroadcast")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

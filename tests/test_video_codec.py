@@ -17,7 +17,6 @@ from datafusion_ballista_spark.multimodal import (
     VIDEO_FRAME_W,
     attach_avi,
     decode_avi,
-    decode_video,
     encode_avi_gray,
     video_keyframe_stats,
 )
@@ -62,9 +61,9 @@ def test_avi_zero_frames_and_empty_input():
 
 
 def test_decode_video_is_real():
-    """decode_video is the real AVI parser, not a stub."""
+    """Video decode is the real AVI parser, not a stub."""
     frames = _frames(2)
-    assert decode_video(encode_avi_gray(frames))[3] == frames
+    assert decode_avi(encode_avi_gray(frames))[3] == frames
 
 
 def test_encode_validation():

@@ -46,6 +46,7 @@ HEAVY = [
 
 
 def main() -> int:
+    from datafusion_ballista_spark.compare import oracle_connection
     from datafusion_ballista_spark.inventory import all_queries
     from datafusion_ballista_spark.session import get_session, tool_sizing_conf
 
@@ -84,10 +85,7 @@ def main() -> int:
         steady[name] = sorted(samples)[len(samples) // 2]
 
     duck: dict[str, float] = {}
-    try:
-        import duckdb
-
-        con = duckdb.connect()
+    with oracle_connection(star_dir) as con:
         con.execute(f"SET threads = {int(cpus)}")
         for name in names:
             sql = specs[name].oracle
@@ -97,9 +95,6 @@ def main() -> int:
             t0 = time.perf_counter()
             con.execute(sql).fetchall()
             duck[name] = round(time.perf_counter() - t0, 3)
-        con.close()
-    except Exception:
-        duck = {}
 
     total = round(sum(steady.values()), 3)
     duck_total = round(sum(duck.values()), 3) if duck else None

@@ -3,8 +3,9 @@
 reference's criterion benches (benchmarks/benches/sort_shuffle.rs
 posture: component-level timing beside the query-level bench).
 
-Target: Avro OCF encode/decode — sources/avro_ocf.py, the per-partition
-codec of scan_avro / write_avro_ocf_dist (both codecs).
+Target: Avro OCF encode/decode — sources/avro_ocf.py, the per-file codec
+of the ``avro_ocf`` data source that scan_avro reads and writes through
+(both codecs).
 
 Prints ONE JSON line: {"metric": "microbench", "unit": "mb_per_sec",
 "cases": {...}} — throughput, so bigger is better; deterministic inputs
@@ -71,10 +72,9 @@ def bench_avro(tmp_dir: str) -> dict[str, float]:
         mb = os.path.getsize(path) / 1e6
 
         def read(p=path):
-            n = 0
-            for _ in _iter_file_records(p):
-                n += 1
-            assert n == N_ROWS
+            n = sum(len(block) for block in _iter_file_records(p))
+            if n != N_ROWS:
+                raise RuntimeError(f"decoded {n} rows from {p}, wrote {N_ROWS}")
 
         t_r = _best(read)
         out[f"avro_{codec}_encode_mb_per_sec"] = round(mb / t_w, 2)
