@@ -2,7 +2,7 @@
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` exposes the
 full SURVEY.md §2 operator inventory; ``oracle_sql()`` pairs each query
-with DuckDB-runnable ANSI SQL (None entries are omitted -> rows-only check).
+with DuckDB-runnable ANSI SQL.
 Implementation lives in ``datafusion_ballista_spark/``.
 """
 
@@ -31,8 +31,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in all_queries().items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in all_queries().items()}

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
 from contextlib import contextmanager
 from decimal import Decimal
 from itertools import zip_longest
@@ -190,20 +191,24 @@ def oracle_connection(sf_dir: str):
     pre-fix ppjoin candidate explosion built a 93 GB single-thread hash
     table and left both engines 30-45% slow for hours) must fail fast or
     spill bounded instead of evicting the machine's page cache mid-gate.
-    ``SPARK_GRAFT_ORACLE_MEM`` sets the ceiling (default 16GB)."""
+    ``SPARK_GRAFT_ORACLE_MEM`` sets the ceiling (default 16GB). Spills go
+    to a temp dir of this connection's own, removed with it, so oracles
+    running side by side never share one."""
     import duckdb
 
-    con = duckdb.connect()
-    try:
-        mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM", "16GB")
-        con.execute(f"SET memory_limit = '{mem}'")
-        for t in TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(p):
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        yield con
-    finally:
-        con.close()
+    with tempfile.TemporaryDirectory(prefix="duckdb-") as spill:
+        con = duckdb.connect()
+        try:
+            mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM", "16GB")
+            con.execute(f"SET memory_limit = '{mem}'")
+            con.execute(f"SET temp_directory = '{spill}'")
+            for t in TABLES:
+                p = os.path.join(sf_dir, f"{t}.parquet")
+                if os.path.exists(p):
+                    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+            yield con
+        finally:
+            con.close()
 
 
 def fetch_oracle(rel):
@@ -226,7 +231,7 @@ def _first_mismatch(mode: str, sn: list, on: list) -> dict | None:
     return None
 
 
-def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
+def compare_query(spark_df, oracle_con, oracle_sql: str) -> dict:
     """Run both sides; return a CORRECTNESS record.
 
     Calls ``spark_df.collect()`` exactly once and triggers no other
@@ -255,10 +260,6 @@ def compare_query(spark_df, oracle_con, oracle_sql: str | None) -> dict:
         # driver-canon pre-flight: the driver's own sort_values must
         # succeed on these rows or this records the same error it would
         driver_canon_check(s_cols, s_rows)
-        if oracle_sql is None:
-            # rows-only check: executes and returns
-            rec["rows_match"] = True
-            return rec
         o_cols, o_rows, hugeints = fetch_oracle(oracle_con.sql(oracle_sql))
         if hugeints:
             rec["hugeint"] = hugeints
@@ -328,8 +329,8 @@ def failures(rec: dict, float_ulp_whitelisted: bool = False) -> list[str]:
             "CAST(... AS BIGINT)"
         )
     if rec.get("oracle_rows") is None:
-        # failed before the oracle ran, or a rows-only record
-        if not out and not rec.get("rows_match"):
+        # failed before the oracle ran
+        if not out:
             out.append("query did not run")
         return out
     if rec.get("columns"):

@@ -3,43 +3,32 @@
 Reference: ballista/core/src/config.rs:32-171 defines the SET-able session
 config surface; SURVEY.md §4.3 maps each key. Spark owns the runtime
 behavior behind every one of these (AQE, broadcast threshold, partition
-coalescing, shuffle codec), so translation is a pure rename + unit fixup.
+coalescing, shuffle codec), so translation is a pure key rename.
 """
 
 from __future__ import annotations
 
-# ballista key -> (spark key, value transform)
-_IDENT = lambda v: v  # noqa: E731
-
-CONFIG_MAP: dict[str, tuple[str, object]] = {
+# ballista key -> spark key
+CONFIG_MAP: dict[str, str] = {
     # reference: core/src/config.rs:103
     "ballista.optimizer.broadcast_join_threshold_bytes": (
-        "spark.sql.autoBroadcastJoinThreshold",
-        _IDENT,
+        "spark.sql.autoBroadcastJoinThreshold"
     ),
     # reference: core/src/config.rs:86
-    "ballista.planner.adaptive.enabled": ("spark.sql.adaptive.enabled", _IDENT),
+    "ballista.planner.adaptive.enabled": "spark.sql.adaptive.enabled",
     # reference: core/src/config.rs:134-148
     "ballista.planner.coalesce.enabled": (
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        _IDENT,
+        "spark.sql.adaptive.coalescePartitions.enabled"
     ),
     "ballista.planner.coalesce.target_partition_bytes": (
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        _IDENT,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     ),
     # reference: core/src/config.rs:168
-    "ballista.shuffle.compression.codec": ("spark.io.compression.codec", _IDENT),
+    "ballista.shuffle.compression.codec": "spark.io.compression.codec",
     # DataFusion passthrough key Ballista honors (SURVEY.md §4.3)
-    "datafusion.execution.target_partitions": (
-        "spark.sql.shuffle.partitions",
-        _IDENT,
-    ),
-    "datafusion.execution.batch_size": (
-        # closest Spark knob: columnar batch size for parquet/arrow readers
-        "spark.sql.parquet.columnarReaderBatchSize",
-        _IDENT,
-    ),
+    "datafusion.execution.target_partitions": "spark.sql.shuffle.partitions",
+    # closest Spark knob: columnar batch size for parquet/arrow readers
+    "datafusion.execution.batch_size": "spark.sql.parquet.columnarReaderBatchSize",
 }
 
 # Engine defaults: scale-oriented. These are what we would ship on a
@@ -80,6 +69,9 @@ SPARK_DEFAULTS: dict[str, str] = {
     # parity with reference defaults: sort-based shuffle + zstd IPC
     # compression (core/src/config.rs:168) — Spark's sort shuffle is native.
     "spark.io.compression.codec": "zstd",
+    # The console progress bar redraws with \r and garbles lines printed
+    # to stderr beside it (the gate tools' RUN and timing lines).
+    "spark.ui.showConsoleProgress": "false",
 }
 
 
@@ -89,7 +81,4 @@ def translate(key: str, value: object) -> tuple[str, object]:
     Unknown keys pass through unchanged (Spark ignores what it doesn't
     know; mirrors Ballista's extensible config, core/src/config.rs:860+).
     """
-    if key in CONFIG_MAP:
-        spark_key, fn = CONFIG_MAP[key]
-        return spark_key, fn(value)
-    return key, value
+    return CONFIG_MAP.get(key, key), value

@@ -2,8 +2,7 @@
 
 Each entry pairs a Spark DataFrame-API implementation with an equivalent
 ANSI-SQL oracle string DuckDB can run on the same parquet fixtures. The
-driver executes both at sf0.01 and hash-compares (CORRECTNESS_r{N}.json);
-``oracle=None`` marks genuinely non-SQL-expressible ops (rows-only check).
+driver executes both at sf0.01 and hash-compares (CORRECTNESS_r{N}.json).
 
 Determinism contract (so value hashes match across engines AND across Spark
 partition orderings):
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass(frozen=True)
 class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB-runnable ANSI SQL, or None for rows-only
+    oracle: str  # DuckDB-runnable ANSI SQL
 
 
 # The CORRECTNESS gate checks only the first 50 registry entries:

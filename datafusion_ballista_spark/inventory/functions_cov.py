@@ -8,8 +8,7 @@ breadth exercised by the h2o groupby suite
 registry.rs:57-61 (approx_*, array_agg, string_agg, bit_*/bool_*, regr_*).
 
 One query per category; every output column is aliased identically on both
-engines, and genuine-double outputs are rounded on both sides. Functions
-whose cross-engine results legitimately differ (HLL sketches) are rows-only.
+engines, and genuine-double outputs are rounded on both sides.
 
 Scale: everything here is a built-in expression inside whole-stage codegen —
 no Python in the data path. The small input subsets (doc_id/user_id filters)

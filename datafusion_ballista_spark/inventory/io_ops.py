@@ -11,8 +11,9 @@ Each round-trip writes with the DISTRIBUTED writer (df.write — one file per
 partition, exactly the 100 TB shape), reads the result back through the
 matching scan, and aggregates; the oracle runs the same aggregate on the
 ORIGINAL parquet, so a lossless round trip is exactly a hash match.
-Temp outputs live under /tmp/dbspark_io/<sf-tag>/ and are overwritten
-idempotently.
+Outputs live under the application's scratch directory
+(``sources.registry.scratch_dir``), one ``<sf-tag>/<leaf>`` each, are
+overwritten when a builder runs again and go when the session stops.
 """
 
 from __future__ import annotations
@@ -26,13 +27,12 @@ from pyspark.sql import types as T
 
 from datafusion_ballista_spark.inventory import QuerySpec
 from datafusion_ballista_spark.inventory.util import D, dsum, tables
+from datafusion_ballista_spark.sources.registry import scratch_dir
 
-_BASE = "/tmp/dbspark_io"
 
-
-def _out(sf: str, leaf: str) -> str:
+def _out(spark: SparkSession, sf: str, leaf: str) -> str:
     tag = os.path.basename(sf.rstrip("/")) or "sf"
-    return os.path.join(_BASE, tag, leaf)
+    return os.path.join(scratch_dir(spark), tag, leaf)
 
 
 def _orders_slice(spark: SparkSession, sf: str) -> DataFrame:
@@ -62,14 +62,14 @@ def _agg(df: DataFrame) -> DataFrame:
 
 def write_parquet_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """df.write.parquet → read-back (datafusion.proto:866-869 ParquetSink)."""
-    path = _out(sf, "orders_parquet")
+    path = _out(spark, sf, "orders_parquet")
     _orders_slice(spark, sf).write.mode("overwrite").parquet(path)
     return _agg(spark.read.parquet(path))
 
 
 def write_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """df.write.csv with header → schema-ful read-back (CsvSink :834-845)."""
-    path = _out(sf, "orders_csv")
+    path = _out(spark, sf, "orders_csv")
     _orders_slice(spark, sf).write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -84,7 +84,7 @@ def write_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
 def write_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """df.write.json → read-back (JsonSink :846-855)."""
-    path = _out(sf, "orders_json")
+    path = _out(spark, sf, "orders_json")
     _orders_slice(spark, sf).write.mode("overwrite").json(path)
     return _agg(spark.read.json(path).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
@@ -96,7 +96,7 @@ def ctas_insert_sql(spark: SparkSession, sf: str) -> DataFrame:
     rewrite) + INSERT INTO + read back (context_checks.rs:381,448,596)."""
     from datafusion_ballista_spark.sql import rewrite_sql
 
-    path = _out(sf, "orders_ctas")
+    path = _out(spark, sf, "orders_ctas")
     shutil.rmtree(path, ignore_errors=True)
     tables(spark, sf, "orders").orders.createOrReplaceTempView("io_orders_src")
     spark.sql("DROP TABLE IF EXISTS io_orders_tbl")
@@ -123,7 +123,7 @@ def copy_to_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     against the original table's aggregate."""
     from datafusion_ballista_spark.session import BallistaSession
 
-    path = _out(sf, "orders_copy")
+    path = _out(spark, sf, "orders_copy")
     tables(spark, sf, "orders").orders.createOrReplaceTempView("io_copy_src")
     n = BallistaSession(spark).sql(
         "COPY (SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus "
@@ -137,7 +137,7 @@ def copy_to_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
 def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
     """CSV scan of the full customer table (reference fixture customer.csv)."""
-    path = _out(sf, "customer_csv")
+    path = _out(spark, sf, "customer_csv")
     c = tables(spark, sf, "customer").customer
     c.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
@@ -171,7 +171,7 @@ ORDER BY c_mktsegment
 
 def scan_ndjson(spark: SparkSession, sf: str) -> DataFrame:
     """NDJSON scan (datafusion.proto:1151-1154)."""
-    path = _out(sf, "supplier_json")
+    path = _out(spark, sf, "supplier_json")
     s = tables(spark, sf, "supplier").supplier
     s.write.mode("overwrite").json(path)
     back = spark.read.json(path)
@@ -202,7 +202,7 @@ def scan_avro(spark: SparkSession, sf: str) -> DataFrame:
     from datafusion_ballista_spark.sources.datasource import register
 
     register(spark)
-    out_dir = _out(sf, "supplier_avro")
+    out_dir = _out(spark, sf, "supplier_avro")
     s = tables(spark, sf, "supplier").supplier
     cols = s.select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     for mode, parity, codec in (("overwrite", 0, "deflate"), ("append", 1, "null")):
@@ -224,7 +224,7 @@ def scan_arrow_ipc(spark: SparkSession, sf: str) -> DataFrame:
     from datafusion_ballista_spark.sources.datasource import register
 
     register(spark)
-    out_dir = _out(sf, "nation_arrow")
+    out_dir = _out(spark, sf, "nation_arrow")
     nation = tables(spark, sf, "nation").nation
     for mode, parity in (("overwrite", 0), ("append", 1)):
         nation.where(F.col("n_nationkey") % 2 == parity).coalesce(1).write.format(
@@ -254,7 +254,7 @@ def write_arrow_ipc_dist_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from datafusion_ballista_spark.sources.datasource import register
 
     register(spark)
-    out_dir = _out(sf, "supplier_arrow_dist")
+    out_dir = _out(spark, sf, "supplier_arrow_dist")
     src = tables(spark, sf, "supplier").supplier.select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     ).repartition(4, "s_suppkey")
@@ -302,7 +302,7 @@ def scan_partitioned_listing(spark: SparkSession, sf: str) -> DataFrame:
     column — the filter prunes whole directories at file-listing time, the
     exact mechanism that makes a 100 TB date-partitioned lake scannable.
     tests/test_sources.py asserts PartitionFilters appears in the plan."""
-    path = _out(sf, "lineitem_by_year")
+    path = _out(spark, sf, "lineitem_by_year")
     li = tables(spark, sf, "lineitem").lineitem
     (
         li.withColumn("l_year", F.year("l_shipdate"))
@@ -336,20 +336,14 @@ def bucketed_colocated_join(spark: SparkSession, sf: str) -> DataFrame:
     exchange. The merge hint pins SMJ so AQE's broadcast promotion (valid
     but shuffle-free anyway) doesn't mask the bucketing proof."""
     t = tables(spark, sf, "orders", "customer")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for name in ("b_orders", "b_customer"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # a stale location from a previous session's run survives DROP
-        # (this session's catalog never knew the table); clear it
-        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    (
-        t.orders.write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .mode("overwrite").saveAsTable("b_orders")
-    )
-    (
-        t.customer.write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .mode("overwrite").saveAsTable("b_customer")
-    )
+    for name, df, key in (
+        ("b_orders", t.orders, "o_custkey"),
+        ("b_customer", t.customer, "c_custkey"),
+    ):
+        # external: the files live in the scratch dir, not the warehouse
+        df.write.bucketBy(8, key).sortBy(key).mode("overwrite").option(
+            "path", _out(spark, sf, name)
+        ).saveAsTable(name)
     return (
         spark.table("b_orders")
         .hint("merge")

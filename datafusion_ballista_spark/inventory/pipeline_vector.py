@@ -579,38 +579,19 @@ def _km_sqdist(qcol: Column, cvals: list[int]) -> Column:
     )
 
 
-def _km_assign_expr(pts: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Expression-fold assignment: distances to all centroids as one
-    array expression; argmin = array_position of the min (first match =
-    lowest cluster id on exact-integer ties). Kept as the zero-Python
-    alternative; the default is the Arrow-vectorized kernel below —
-    the OPPOSITE call from the pair kernels (_cos, _bucket), because
-    assignment is per-ROW: ~512 B of operand transfer buys k x dim
-    distance ops, and a same-session sf1 A/B (min-of-2, two alternating
-    passes) measured emb_kmeans_lloyd 4.4-4.7 s (expr) vs 2.0-2.2 s
-    (vec) with bit-identical output. Spark's higher-order-function
-    folds run interpreted per element, so at 8x64 ops/row the fold
-    dominates; the numpy matmul amortizes it across an Arrow batch."""
-    dists = F.array(*[_km_sqdist(F.col("q"), c) for c in cents])
-    return pts.withColumn("dist_arr", dists).select(
-        "vec_id",
-        "q",
-        (F.array_position(F.col("dist_arr"), F.array_min("dist_arr")) - 1)
-        .cast("int")
-        .alias("cid"),
-        F.array_min("dist_arr").alias("dist"),
-    )
-
-
 def _km_assign(pts: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Arrow-vectorized map-side assignment (the default; see
-    _km_assign_expr for the measured rationale): one numpy broadcast
-    computes all k exact-int64 squared distances per batch. argmin takes
-    the first (lowest) cid on ties and dist stays int64 throughout —
-    bit-identical to the expression fold (cross-checked in the A/B and
-    by tests/test_curation_ops.py numpy replications). Micro-unit
-    magnitudes bound the math: |q|,|c| <= 1e6, so per-component squares
-    <= 4e12 and 64-dim sums <= 2.6e14 — far inside int64."""
+    """Arrow-vectorized map-side assignment, the one k-means kernel: one
+    numpy broadcast computes all k exact-int64 squared distances per
+    batch. argmin takes the first (lowest) cid on ties and dist stays
+    int64 throughout (cross-checked by tests/test_pipeline_vector.py and
+    the tests/test_curation_ops.py numpy replications). Assignment is
+    per ROW, so ~512 B of operand transfer buys k x dim distance ops: a
+    same-session sf1 A/B measured emb_kmeans_lloyd at 2.0-2.2 s with
+    this kernel against 4.4-4.7 s with a Spark higher-order-function
+    fold over the same distances, which runs interpreted per element.
+    Micro-unit magnitudes bound the math: |q|,|c| <= 1e6, so
+    per-component squares <= 4e12 and 64-dim sums <= 2.6e14 — far
+    inside int64."""
     import numpy as np
     import pandas as pd
 
@@ -2432,7 +2413,7 @@ def emb_kmeanspp_init(spark: SparkSession, sf: str) -> DataFrame:
         )
         chosen.append((int(nxt.vec_id), [int(x) for x in nxt.q]))
     cents = [c for _, c in chosen]
-    assigned = _km_assign_expr(pts, cents)
+    assigned = _km_assign(pts, cents)
     out = (
         assigned.groupBy("cid")
         .agg(

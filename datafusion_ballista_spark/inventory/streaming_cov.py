@@ -13,11 +13,15 @@ exactly the batch semantics on the same data.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_ballista_spark.inventory import QuerySpec
 from datafusion_ballista_spark.inventory.util import tables
+from datafusion_ballista_spark.sources.registry import scratch_dir
 from datafusion_ballista_spark.streaming import read_events_stream, run_available_now
 
 
@@ -237,16 +241,9 @@ def stream_foreach_batch_sink(spark: SparkSession, sf: str) -> DataFrame:
     fan-out). The availableNow run drains the source into the sink dir;
     reading it back and aggregating hash-matches the batch oracle, which
     proves exactly-once delivery of the bounded run."""
-    import os
-    import shutil
-    import uuid
-
-    from datafusion_ballista_spark.streaming import read_events_stream
-
-    tag = os.path.basename(sf.rstrip("/")) or "sf"
-    sink = os.path.join("/tmp/dbspark_stream", tag, "fb_sink")
-    ckpt = os.path.join("/tmp/dbspark_stream", tag, "fb_ckpt_" + uuid.uuid4().hex[:8])
-    shutil.rmtree(sink, ignore_errors=True)
+    base = tempfile.mkdtemp(prefix="foreach_batch-", dir=scratch_dir(spark))
+    sink = os.path.join(base, "sink")
+    ckpt = os.path.join(base, "ckpt")
     ev = read_events_stream(spark, sf).select("event_id", "event_type", "value")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -259,7 +256,6 @@ def stream_foreach_batch_sink(spark: SparkSession, sf: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.parquet(sink)
     return (
         back.groupBy("event_type")
@@ -328,60 +324,48 @@ def stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     a SECOND run with the SAME checkpoint resumes and must not reprocess
     drop 1 — if it did, the appended sink would double drop 1's rows and
     the hash against the plain batch oracle over the full table would
-    fail. Fresh uuid-tagged staging per call; state is the file-source
-    log only.
+    fail. Each call stages in a fresh scratch dir; state is the
+    file-source log only.
 
     EAGER by design: the two streaming drains + parquet writes execute at
     DataFrame-construction time (the resume semantic cannot be expressed
     lazily), so plan-audit/bench callers pay the full pipeline on build.
-    Staging teardown runs in a try/finally — an exception mid-run no
-    longer leaks /tmp/dbspark_stream/resume_* dirs (round-6 ADVICE)."""
-    import os
-    import shutil
-    import uuid
-
-    base = os.path.join(
-        "/tmp/dbspark_stream", "resume_" + uuid.uuid4().hex[:8]
-    )
+    The returned read-back of the sink stays lazy."""
+    base = tempfile.mkdtemp(prefix="resume-", dir=scratch_dir(spark))
     src = os.path.join(base, "in")
     sink = os.path.join(base, "out")
     ckpt = os.path.join(base, "ck")
-    try:
-        ev = tables(spark, sf, "events").events.select(
-            "event_id", "event_type", "value"
-        )
-        ev.where(F.col("event_id") % 2 == 0).write.parquet(src)
+    ev = tables(spark, sf, "events").events.select(
+        "event_id", "event_type", "value"
+    )
+    ev.where(F.col("event_id") % 2 == 0).write.parquet(src)
 
-        def drain() -> None:
-            q = (
-                spark.readStream.schema(ev.schema)
-                .parquet(src)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
-        ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-        drain()
-        back = spark.read.parquet(sink)
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(18,2)")).cast("double"),
-                    2,
-                ).alias("total"),
-            )
-            .orderBy("event_type")
+    def drain() -> None:
+        q = (
+            spark.readStream.schema(ev.schema)
+            .parquet(src)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        return out.localCheckpoint()  # materialize before staging teardown
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        q.awaitTermination()
+
+    drain()
+    ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
+    drain()
+    back = spark.read.parquet(sink)
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
+            ).alias("total"),
+        )
+        .orderBy("event_type")
+    )
 
 
 STREAM_RESUME_SQL = """

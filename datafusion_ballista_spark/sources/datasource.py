@@ -13,12 +13,14 @@ holds:
   extension) or a glob, and each file is one input partition, so Spark
   schedules one read task per file;
 - the reader, which yields each file's Arrow record batches;
-- the writer's commit protocol. Each task writes ``part-<pid>-<write id>``
-  under a temporary name and renames it; the write id is drawn once per
+- the writer's commit protocol. Each task writes its file under a hidden
+  temporary name, which readers skip, and reports that name; ``commit``
+  renames every reported file to ``part-<pid>-<write id>``, so no file is
+  readable before the whole write succeeds. The write id is drawn once per
   write on the driver, so two appends never collide and a retried task
-  replaces its own file. ``commit`` of an overwrite deletes only the files
-  this write did not produce, so a failed overwrite keeps the old data;
-  ``abort`` deletes the files this write produced.
+  replaces its own file. ``commit`` of an overwrite then deletes only the
+  files this write did not produce, so a failed overwrite keeps the old
+  data; ``abort`` deletes the files this write produced.
 """
 
 from __future__ import annotations
@@ -96,8 +98,9 @@ class _FileReader(DataSourceReader):
 
 
 class _Written(WriterCommitMessage):
-    def __init__(self, name: str | None):
-        self.name = name
+    def __init__(self, tmp: str | None = None, name: str | None = None):
+        self.tmp = tmp  # what the task wrote
+        self.name = name  # what commit renames it to
 
 
 class _FileWriter(DataSourceArrowWriter):
@@ -115,17 +118,25 @@ class _FileWriter(DataSourceArrowWriter):
         batches = (b for b in iterator if b.num_rows)
         first = next(batches, None)
         if first is None:
-            return _Written(None)  # empty partitions leave no file behind
+            return _Written()  # empty partitions leave no file behind
         ctx = TaskContext.get()
         name = f"part-{ctx.partitionId():05d}-{self.write_id}{self._source.ext}"
-        final = os.path.join(self.path, name)
-        tmp = f"{final}.{ctx.attemptNumber()}.tmp"
-        self._source.write_file(tmp, self._schema, itertools.chain([first], batches))
-        os.replace(tmp, final)
-        return _Written(name)
+        tmp = f".{name}.{ctx.attemptNumber()}.tmp"
+        self._source.write_file(
+            os.path.join(self.path, tmp),
+            self._schema,
+            itertools.chain([first], batches),
+        )
+        return _Written(tmp, name)
 
     def commit(self, messages: list[_Written | None]) -> None:
-        produced = {m.name for m in messages if m is not None}
+        produced = set()
+        for m in messages:
+            if m is not None and m.tmp:
+                os.replace(
+                    os.path.join(self.path, m.tmp), os.path.join(self.path, m.name)
+                )
+                produced.add(m.name)
         for entry in os.scandir(self.path):
             if entry.name in produced or not entry.is_file():
                 continue

@@ -61,6 +61,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def scratch_dir(spark: SparkSession) -> str:
+    """The application's own directory for the files builders write.
+
+    It is ``dbspark/`` inside the temp dir Spark makes for the running
+    context under ``SPARK_LOCAL_DIRS`` (``SparkFiles.getRootDirectory()``)
+    and deletes when the context stops, so no other application shares it
+    and nothing written there outlives the session."""
+    root = spark._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    path = os.path.join(root, "dbspark")
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Timestamp columns render in the SESSION timezone; the DuckDB oracle
     # reads the same parquet naively (UTC). Pin UTC here so results match

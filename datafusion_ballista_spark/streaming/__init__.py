@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datafusion_ballista_spark.sources.registry import scratch_dir
+
 # File streams need an explicit schema. The fixture's ts physical type has
 # shifted across driver generations — TIMESTAMP(NANOS) (readable only as
 # int64 under spark.sql.legacy.parquet.nanosAsLong) vs TIMESTAMP(µs,
@@ -80,26 +82,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for µs files (see sources/registry.py).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = os.path.join(sf_dir, "events.parquet")
-    # Tag carries a hash of the ABSOLUTE path: two fixture dirs sharing a
-    # basename (e.g. a regenerated sf0.01 elsewhere) must not reuse each
-    # other's staged symlink — a stale link would stream the wrong data.
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    digest = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:8]
-    ingest = os.path.join("/tmp/dbspark_stream", f"{base}-{digest}", "events")
-    os.makedirs(ingest, exist_ok=True)
-    link = os.path.join(ingest, "events.parquet")
     # Symlink the ABSOLUTE source path: a relative target resolves against
-    # the link's own directory, not the caller's cwd, leaving a broken
-    # link when sf_dir is relative (e.g. "fixtures/sf1"). And test with
-    # lexists/realpath, not exists: exists() is False for a broken link,
-    # so a stale one from an interrupted run would make symlink() raise
-    # FileExistsError forever. A link that resolves elsewhere (or nowhere)
-    # is removed and re-staged.
-    target = os.path.abspath(src)
-    if os.path.lexists(link) and os.path.realpath(link) != target:
-        os.remove(link)
+    # the link's own directory, not the caller's cwd. The staging dir is
+    # keyed by that path, so two fixture dirs sharing a basename never
+    # stream each other's data.
+    target = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    digest = hashlib.md5(target.encode()).hexdigest()[:8]
+    ingest = os.path.join(scratch_dir(spark), "stream", f"{base}-{digest}")
+    link = os.path.join(ingest, "events.parquet")
     if not os.path.lexists(link):
+        os.makedirs(ingest, exist_ok=True)
         os.symlink(target, link)
     nanos = _ts_is_nanos(link)
     raw = spark.readStream.schema(_events_schema(nanos)).parquet(ingest)

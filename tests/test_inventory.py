@@ -29,17 +29,15 @@ def test_inventory_query(name, builds, oracle):
 
 
 def test_rows_only_set_is_exactly_the_documented_exception():
-    """oracle=None is the weaker driver check, so it must stay a loud,
-    named exception (the decimal/float whitelist discipline). The set
-    is EMPTY as of round 13: the last holdout, the KLL compaction
-    cascade (whose ESTIMATE is a function of physical partition/batch
-    order and therefore can never be replayed cross-engine), was made
-    hash-provable by restructuring its output to deterministic order
-    statistics with the sketch pinned by an in-plan assert_true —
-    every registry entry now has a DuckDB oracle. A new rows-only
-    entry must be argued here, not slipped in."""
-    rows_only = {n for n, s in REGISTRY.items() if s.oracle is None}
-    assert rows_only == set()
+    """Every registry entry has a DuckDB oracle: a non-empty SQL string.
+    The last entry without one, the KLL compaction cascade, became
+    hash-provable in round 13; a check weaker than the hash has no place
+    in the registry."""
+    bad = {
+        n for n, s in REGISTRY.items()
+        if not isinstance(s.oracle, str) or not s.oracle.strip()
+    }
+    assert bad == set()
 
 
 def test_driver_window_rotation():

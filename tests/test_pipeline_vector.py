@@ -40,12 +40,13 @@ def test_lsh_bucket_sizes_bounded(spark):
 
 
 def test_km_assign_kernels_agree(spark):
-    """The Arrow-vectorized default assignment and the expression-fold
-    alternative must produce identical (cid, dist) for every vector
-    against the shared final centroids."""
+    """The Arrow assignment kernel agrees with a numpy assignment over
+    the same final centroids: exact int64 squared distances, the first
+    (lowest) cid on ties, for every vector."""
+    import numpy as np
+
     from datafusion_ballista_spark.inventory.pipeline_vector import (
         _km_assign,
-        _km_assign_expr,
         _km_final_cents,
         _km_quantized,
     )
@@ -53,15 +54,16 @@ def test_km_assign_kernels_agree(spark):
 
     pts = _km_quantized(spark, SF_DIR).localCheckpoint(eager=False)
     cents = _km_final_cents(pts)
-    a = {
+    c = np.array(cents, dtype=np.int64)
+    expect = {}
+    for r in pts.collect():
+        d = ((np.array(r.q, dtype=np.int64) - c) ** 2).sum(axis=1)
+        expect[r.vec_id] = (int(d.argmin()), int(d.min()))
+    got = {
         r.vec_id: (r.cid, r.dist)
         for r in _km_assign(pts, cents).collect()
     }
-    b = {
-        r.vec_id: (r.cid, r.dist)
-        for r in _km_assign_expr(pts, cents).collect()
-    }
-    assert a == b and len(a) > 0
+    assert got == expect and len(got) > 0
 
 
 def test_train_rounds_matches_numpy_lloyd(spark):

@@ -54,6 +54,84 @@ def test_python_udf_workers_import_package_from_any_cwd(tmp_path):
     assert "UDF_ROWS [2, 3]" in proc.stdout
 
 
+_SCRATCH_SCRIPT = r"""
+import os
+import sys
+
+sys.path.insert(0, sys.argv[1])
+
+from datafusion_ballista_spark.inventory import all_queries
+from datafusion_ballista_spark.session import get_session
+
+local_dir = os.environ["SPARK_LOCAL_DIRS"]
+specs = all_queries()
+spark = get_session(master="local[2]", shuffle_partitions=2)
+try:
+    for name in sys.argv[3:]:
+        print("ROWS", name, len(specs[name].spark(spark, sys.argv[2]).collect()))
+finally:
+    spark.stop()
+# what the application left on disk once its context is stopped
+for root in (os.getcwd(), local_dir):
+    for d, _, files in os.walk(root):
+        for f in files:
+            print("LEFT", os.path.join(d, f))
+"""
+
+# The file-writing builders: each io_ops and streaming_cov entry that
+# writes scratch files a different way.
+_WRITERS = (
+    "write_parquet_roundtrip",
+    "bucketed_colocated_join",
+    "stream_session_windows",
+    "stream_foreach_batch_sink",
+    "stream_checkpoint_resume",
+)
+# The machine-wide roots the builders once wrote to.
+_SHARED_ROOTS = ("/tmp/dbspark_io", "/tmp/dbspark_stream")
+
+
+def _tree(root: str) -> dict[str, int]:
+    """Every path under ``root`` with its modification time."""
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for n in dirs + files:
+            p = os.path.join(d, n)
+            out[p] = os.lstat(p).st_mtime_ns
+    return out
+
+
+def test_builders_write_only_to_the_application_scratch_dir(tmp_path):
+    """The file-writing builders keep their files in the application's
+    own scratch dir under SPARK_LOCAL_DIRS: they touch no shared root,
+    leave only Spark's empty ``spark-warehouse/`` in the working
+    directory, and nothing they wrote outlives ``spark.stop()``."""
+    from tests.conftest import SF_DIR
+
+    cwd, local = tmp_path / "cwd", tmp_path / "local"
+    cwd.mkdir()
+    local.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_LOCAL_DIRS"] = str(local)
+    before = {r: _tree(r) for r in _SHARED_ROOTS}
+    proc = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_SCRIPT, str(REPO), SF_DIR, *_WRITERS],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=cwd,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    ran = [ln.split()[1] for ln in proc.stdout.splitlines() if ln.startswith("ROWS")]
+    assert ran == list(_WRITERS)
+    assert {r: _tree(r) for r in _SHARED_ROOTS} == before
+    assert os.listdir(cwd) == ["spark-warehouse"]
+    assert os.listdir(cwd / "spark-warehouse") == []
+    left = [ln for ln in proc.stdout.splitlines() if ln.startswith("LEFT")]
+    assert left == []
+
+
 def test_package_has_no_assert_statements():
     """``python -O`` strips ``assert``; a guard in the package must raise
     a real exception so it holds under every interpreter flag."""

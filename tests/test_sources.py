@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_ballista_spark.session import BallistaSession
-from datafusion_ballista_spark.sources.datasource import register
+from datafusion_ballista_spark.sources.arrow_ipc import ArrowIpcDataSource
+from datafusion_ballista_spark.sources.avro_datasource import AvroOcfDataSource
+from datafusion_ballista_spark.sources.datasource import _FileWriter, register
 from datafusion_ballista_spark.sources.object_store import (
     http_conf,
     normalize_url,
@@ -141,6 +143,16 @@ def test_write_arrow_ipc_dist_roundtrip(spark, tmp_path):
     assert back.agg({"v": "sum"}).collect()[0][0] == sum(2 * i for i in range(1000))
 
 
+def _raises_on_last_row(spark):
+    """Two tasks of 15k rows: one finishes its file, the other raises on
+    its last row, after its first Arrow batch reached the writer."""
+    return spark.range(30000).repartition(2).select(
+        F.when(F.col("id") == 29999, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+
+
 @pytest.mark.parametrize("fmt", ["arrow_ipc", "avro_ocf"])
 def test_failed_overwrite_keeps_previous_files(spark, tmp_path, fmt):
     """An overwrite whose task raises leaves the directory as it was: the
@@ -150,19 +162,48 @@ def test_failed_overwrite_keeps_previous_files(spark, tmp_path, fmt):
     out = str(tmp_path / fmt)
     spark.range(10).write.format(fmt).mode("overwrite").save(out)
     before = sorted(os.listdir(out))
-    # two tasks of 15k rows: one finishes its file, the other raises on
-    # its last row, after its first Arrow batch reached the writer
-    bad = spark.range(30000).repartition(2).select(
-        F.when(F.col("id") == 29999, F.raise_error(F.lit("boom")))
-        .otherwise(F.col("id"))
-        .alias("id")
-    )
     with pytest.raises(Exception, match="boom"):
-        bad.write.format(fmt).mode("overwrite").save(out)
+        _raises_on_last_row(spark).write.format(fmt).mode("overwrite").save(out)
     assert sorted(os.listdir(out)) == before
     assert sorted(r.id for r in spark.read.format(fmt).load(out).collect()) == list(
         range(10)
     )
+
+
+def _no_abort(source):
+    """``source`` with a writer whose ``abort`` does nothing, registered
+    as ``<format>_no_abort``. The classes are made inside a function so
+    that the Python workers receive them by value: this test module is
+    not importable there."""
+
+    class Writer(_FileWriter):
+        def abort(self, messages):
+            pass  # leave the directory as the tasks left it
+
+    class NoAbort(source):
+        @classmethod
+        def name(cls) -> str:
+            return source.name() + "_no_abort"
+
+        def writer(self, schema, overwrite):
+            return Writer(self, schema, overwrite)
+
+    return NoAbort
+
+
+@pytest.mark.parametrize("fmt", ["arrow_ipc", "avro_ocf"])
+def test_failed_write_publishes_no_part_file(spark, tmp_path, fmt):
+    """A task's file takes its readable ``part-`` name only at commit: a
+    write that fails leaves none, neither the finished task's file nor
+    the failed task's partial one, even when ``abort`` never cleans up."""
+    for source in (ArrowIpcDataSource, AvroOcfDataSource):
+        spark.dataSource.register(_no_abort(source))
+    out = str(tmp_path / fmt)
+    with pytest.raises(Exception, match="boom"):
+        _raises_on_last_row(spark).write.format(f"{fmt}_no_abort").mode(
+            "overwrite"
+        ).save(out)
+    assert [n for n in os.listdir(out) if n.startswith("part-")] == []
 
 
 @pytest.mark.parametrize("fmt", ["arrow_ipc", "avro_ocf"])
