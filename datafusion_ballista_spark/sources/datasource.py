@@ -13,14 +13,17 @@ holds:
   extension) or a glob, and each file is one input partition, so Spark
   schedules one read task per file;
 - the reader, which yields each file's Arrow record batches;
-- the writer's commit protocol. Each task writes its file under a hidden
-  temporary name, which readers skip, and reports that name; ``commit``
-  renames every reported file to ``part-<pid>-<write id>``, so no file is
-  readable before the whole write succeeds. The write id is drawn once per
-  write on the driver, so two appends never collide and a retried task
-  replaces its own file. ``commit`` of an overwrite then deletes only the
-  files this write did not produce, so a failed overwrite keeps the old
-  data; ``abort`` deletes the files this write produced.
+- the writer's commit protocol. The driver draws a write id once per
+  write and makes a hidden ``.<write id>`` directory, which readers skip.
+  Each task writes its file there and reports its name; ``commit`` moves
+  every reported file out as ``part-<pid>-<write id>``, so no file is
+  readable before the whole write succeeds, two appends never collide and
+  a retried task replaces its own file. ``commit`` then removes the
+  hidden directory with any failed attempt's file, and an overwrite
+  deletes the files this write did not produce, so a failed overwrite
+  keeps the old data. ``abort`` removes the hidden directory. A task that
+  Spark has given up on can still be running then; with the directory
+  gone it cannot create its file.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from __future__ import annotations
 import glob
 import itertools
 import os
+import shutil
 import uuid
 from collections.abc import Iterator
 
@@ -110,7 +114,8 @@ class _FileWriter(DataSourceArrowWriter):
         self.path = source.options["path"]
         self.overwrite = overwrite
         self.write_id = uuid.uuid4().hex
-        os.makedirs(self.path, exist_ok=True)
+        self.staging = os.path.join(self.path, f".{self.write_id}")
+        os.makedirs(self.staging)
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _Written:
         from pyspark import TaskContext
@@ -121,9 +126,9 @@ class _FileWriter(DataSourceArrowWriter):
             return _Written()  # empty partitions leave no file behind
         ctx = TaskContext.get()
         name = f"part-{ctx.partitionId():05d}-{self.write_id}{self._source.ext}"
-        tmp = f".{name}.{ctx.attemptNumber()}.tmp"
+        tmp = f"{name}.{ctx.attemptNumber()}"
         self._source.write_file(
-            os.path.join(self.path, tmp),
+            os.path.join(self.staging, tmp),
             self._schema,
             itertools.chain([first], batches),
         )
@@ -134,22 +139,18 @@ class _FileWriter(DataSourceArrowWriter):
         for m in messages:
             if m is not None and m.tmp:
                 os.replace(
-                    os.path.join(self.path, m.tmp), os.path.join(self.path, m.name)
+                    os.path.join(self.staging, m.tmp), os.path.join(self.path, m.name)
                 )
                 produced.add(m.name)
-        for entry in os.scandir(self.path):
-            if entry.name in produced or not entry.is_file():
-                continue
-            # leftovers of this write's failed attempts go in either mode
-            if self.overwrite or self.write_id in entry.name:
-                os.remove(entry.path)
+        shutil.rmtree(self.staging, ignore_errors=True)
+        if self.overwrite:
+            for entry in os.scandir(self.path):
+                if entry.is_file() and entry.name not in produced:
+                    os.remove(entry.path)
 
     def abort(self, messages: list[_Written | None]) -> None:
-        # A failed task sends no message but may have left a file, so go
-        # by the write id rather than by the messages.
-        for entry in os.scandir(self.path):
-            if self.write_id in entry.name:
-                os.remove(entry.path)
+        # A failed task sends no message but may have left a file.
+        shutil.rmtree(self.staging, ignore_errors=True)
 
 
 def register(spark) -> None:
